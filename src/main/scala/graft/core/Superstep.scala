@@ -1,37 +1,168 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftshim.GraftShim
+import scala.collection.mutable
+import scala.util.DynamicVariable
 
-/** Loop-state checkpointing for iterative (Pregel-style) operators.
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.storage.StorageLevel
+
+/** The superstep driver: the one way an iterative (Pregel-style) operator
+  * runs its loop and holds its intermediates. An operator call opens a
+  * scope with [[Superstep.run]] and registers every table it materializes:
   *
-  * Every superstep loop in the engine (PageRank, CC, LPA, k-core, HITS,
-  * Louvain) carries its state through `localCheckpoint` so the logical plan
-  * stays O(1) per step. Plain `localCheckpoint` is NOT enough: it copies the
-  * pre-checkpoint plan's estimated statistics into the truncated plan, and
-  * since the state feeds k places in the next step's plan, the estimated
-  * `sizeInBytes` BigInt compounds to (2^63)^(k^step) — its digit count grows
-  * exponentially with the superstep count and stats estimation eventually
-  * pins the driver in million-digit BigInteger multiplication (observed as a
-  * multi-minute "hang" at ~10 supersteps for k=4). [[checkpoint]] truncates
-  * BOTH lineage and statistics; join strategy for the state side is then
-  * AQE's runtime decision, which is what a long-running job wants anyway.
+  *  - [[state]] — loop state, local-checkpointed with plan STATISTICS
+  *    reset. Plain `localCheckpoint` copies the pre-checkpoint plan's
+  *    estimated statistics into the truncated plan; state that feeds k
+  *    places in the next step compounds `sizeInBytes` to (2^63)^(k^step),
+  *    and stats estimation ends up pinning the driver in million-digit
+  *    BigInteger multiplication (a multi-minute "hang" at ~10 steps, k=4).
+  *    `eager = false` keeps one job per step: the step's own aggregate
+  *    materializes the checkpoint.
+  *  - [[pin]] — a static per-call input computed once (edge tables, vertex
+  *    sets). A plain eager `localCheckpoint`: it keeps the estimated
+  *    statistics (computed once, they cannot compound) and the output
+  *    partitioning, so per-step joins reuse it without an exchange.
+  *  - [[persist]] — a `MEMORY_AND_DISK` cached table.
+  *
+  * Loops run through [[loop]] (a cap that throws) or [[upTo]] (a budget
+  * that defines the answer). Per step k the driver:
+  *  - releases step k−1's state once step k has materialized: after the
+  *    step returns, every [[state]] checkpoint made before it that no
+  *    checkpoint made in it still reads (by RDD lineage) is unpersisted.
+  *    The step that ends the loop leaves this to the exit rule, since the
+  *    result may read the previous step's state. Left to the
+  *    ContextCleaner, dead steps pile up and slow late steps (observed
+  *    9 s → 21 s by step 9 on a 19 M-edge PageRank);
+  *  - records the step's wall seconds.
+  *
+  * On every exit of the scope, a throw included, it releases everything
+  * registered except the checkpoints that the frames in the returned value
+  * read; persisted tables are always released. Checkpoints that survive a
+  * scope nested in another (an operator calling an operator) pass to the
+  * enclosing scope as its state.
   */
+final class Superstep private (op: String) {
+  import Superstep.{checkpointed, Held}
+
+  private val held = mutable.ArrayBuffer.empty[Held]
+  private var seq = 0L
+
+  private def hold(h: Held): Unit = { seq += 1; h.seq = seq; held += h }
+
+  /** Loop state: a stats-resetting local checkpoint, released by the step
+    * rule (see the class doc). */
+  def state(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val (out, rdd) = GraftShim.checkpointWithoutStats(df, eager)
+    hold(checkpointed(rdd, stepScoped = true)); out
+  }
+
+  /** A static per-call input: an eager plain local checkpoint, released on
+    * exit unless the result reads it. */
+  def pin(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint(true)
+    hold(checkpointed(GraftShim.scannedRdds(out).head, stepScoped = false)); out
+  }
+
+  /** A cached table, released on every exit (the result must not need it). */
+  def persist(df: DataFrame): DataFrame = {
+    val out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    hold(new Held(null, stepScoped = false, () => out.unpersist(blocking = false))); out
+  }
+
+  /** Runs `step(k)` for k = 0, 1, … while it returns true; throws
+    * `IllegalStateException` naming the operator and the step if it still
+    * wants to continue after step `cap − 1`. Returns each step's seconds. */
+  def loop(cap: Int)(step: Int => Boolean): Vector[Double] =
+    iterate(cap, 0, throwOnCap = true)(step)
+
+  /** [[loop]] for a budget that defines the answer (a fixed schedule or an
+    * iteration count): stops quietly after step `budget − 1`. A resumed
+    * loop starts at step `from`. */
+  def upTo(budget: Int, from: Int = 0)(step: Int => Boolean): Vector[Double] =
+    iterate(budget, from, throwOnCap = false)(step)
+
+  private def iterate(cap: Int, from: Int, throwOnCap: Boolean)
+                     (step: Int => Boolean): Vector[Double] = {
+    val seconds = Vector.newBuilder[Double]
+    var k = from
+    var more = true
+    while (more && k < cap) {
+      val t0 = System.nanoTime()
+      val stepStart = seq
+      more = step(k)
+      if (more) {
+        val (fresh, old) = held.filter(_.stepScoped).partition(_.seq > stepStart)
+        val live = Superstep.lineage(fresh.map(_.rdd))
+        release(old.filterNot(h => live(h.rdd.id)))
+      }
+      seconds += (System.nanoTime() - t0) / 1e9
+      k += 1
+    }
+    if (more && throwOnCap)
+      throw new IllegalStateException(
+        s"$op did not settle in $cap steps (still changing at step $k) — raise its cap")
+    seconds.result()
+  }
+
+  private def release(hs: Iterable[Held]): Unit = {
+    hs.foreach(_.free())
+    held --= hs
+  }
+
+  /** Releases all but what `result`'s frames read; returns the survivors. */
+  private def close(result: Option[Any]): Seq[Held] = {
+    val read = Superstep.lineage(result.toSeq.flatMap(Superstep.frames)
+      .flatMap(GraftShim.scannedRdds))
+    val (keep, drop) = held.toSeq.partition(h => h.rdd != null && read(h.rdd.id))
+    release(drop)
+    keep
+  }
+}
+
 object Superstep {
 
-  /** Drop-in replacement for `df.localCheckpoint(eager)` on loop-carried
-    * state. `eager = false` keeps the one-job-per-superstep discipline (the
-    * caller's combined aggregate materializes the checkpoint). */
-  def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame =
-    GraftShim.localCheckpointResetStats(df, eager)
+  /** A registered table: its RDD (null for a persisted table), whether the
+    * step rule may release it, and how to release it. */
+  private final class Held(val rdd: RDD[_], val stepScoped: Boolean, val free: () => Unit) {
+    var seq = 0L
+  }
+  private def checkpointed(rdd: RDD[_], stepScoped: Boolean) =
+    new Held(rdd, stepScoped, () => rdd.unpersist(blocking = false))
 
-  /** [[checkpoint]] plus a thunk that unpersists the checkpointed blocks.
-    * Superstep loops should release step k−1 RIGHT AFTER step k's state has
-    * materialized (and never release the final state a caller will read):
-    * left to the ContextCleaner, dead superstep blocks pile up for the whole
-    * run — under a large heap the cleaner barely runs, and memory-store
-    * churn makes late supersteps measurably slower (observed 9 s → 21 s by
-    * superstep 9 on a 19 M-edge PageRank). */
-  def checkpointReleasable(df: DataFrame, eager: Boolean = false): (DataFrame, () => Unit) =
-    GraftShim.localCheckpointResetStatsReleasable(df, eager)
+  private val current = new DynamicVariable[Option[Superstep]](None)
+
+  /** Runs one operator call as a driver scope named `op` (see the class
+    * doc); `body` registers tables and runs loops on the scope it gets. */
+  def run[T](op: String)(body: Superstep => T): T = {
+    val s = new Superstep(op)
+    val parent = current.value
+    val result =
+      try current.withValue(Some(s))(body(s))
+      catch { case t: Throwable => s.close(None); throw t }
+    val survivors = s.close(Some(result))
+    parent.foreach(p => survivors.foreach(h => p.hold(new Held(h.rdd, stepScoped = true, h.free))))
+    result
+  }
+
+  /** The frames reachable in a returned value (a frame, or case classes and
+    * tuples holding frames). */
+  private def frames(x: Any): Iterator[DataFrame] = x match {
+    case d: Dataset[_] => Iterator(d.toDF())
+    case p: Product => p.productIterator.flatMap(frames)
+    case _ => Iterator.empty
+  }
+
+  /** Ids of `roots` and every RDD they depend on. */
+  private def lineage(roots: Iterable[RDD[_]]): Set[Int] = {
+    val seen = mutable.Set.empty[Int]
+    var todo = roots.toList
+    while (todo.nonEmpty) {
+      val r = todo.head
+      todo = todo.tail
+      if (seen.add(r.id)) todo = r.dependencies.map(_.rdd).toList ::: todo
+    }
+    seen.toSet
+  }
 }

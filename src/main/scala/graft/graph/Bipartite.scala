@@ -31,16 +31,16 @@ object Bipartite {
     *         (component, n_vertices, n_edges, n_conflict_edges,
     *          is_bipartite: 0/1) — conflict edges are distinct undirected
     *         edges whose endpoints share BFS parity. */
-  def check(spark: SparkSession, edges: DataFrame, maxIter: Int = 64): DataFrame = {
+  def check(spark: SparkSession, edges: DataFrame, maxIter: Int = 64): DataFrame =
+    graft.core.Superstep.run("Bipartite.check") { s =>
     val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val loops = e0.where(col("src") === col("dst"))
       .select(col("src").as("a"), col("dst").as("b")).distinct()
     val canon = e0.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    val bi = canon.select(col("a").as("src"), col("b").as("dst"))
-      .union(canon.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
+    val bi = s.pin(canon.select(col("a").as("src"), col("b").as("dst"))
+      .union(canon.select(col("b").as("src"), col("a").as("dst"))))
 
     // component = min vertex label (ConnectedComponents contract) = BFS
     // root; vertices incident ONLY to self-loops are invisible to CC (a
@@ -49,38 +49,28 @@ object Bipartite {
       .union(e0.select(col("dst").as("vertex"))).distinct()
     val cc0 = ConnectedComponents.run(spark,
       canon.select(col("a").as("src"), col("b").as("dst")))
-    val cc = verts.join(cc0, Seq("vertex"), "left")
-      .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
-      .localCheckpoint(true)
+    val cc = s.pin(verts.join(cc0, Seq("vertex"), "left")
+      .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component")))
 
-    var settled = cc.where(col("vertex") === col("component"))
-      .select(col("vertex"), lit(0L).as("dist"))
-      .transform(graft.core.Superstep.checkpoint(_, eager = true))
+    var settled = s.state(cc.where(col("vertex") === col("component"))
+      .select(col("vertex"), lit(0L).as("dist")), eager = true)
     var frontier = settled
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
+    // The round cap THROWS rather than silently dropping unreached vertices:
+    // an unsettled vertex would get no parity row, the conflict join below
+    // would drop its edges, and a non-bipartite component of radius >
+    // maxIter would read is_bipartite=1 (round-5 ADVICE).
+    s.loop(maxIter) { _ =>
       val cand = frontier.join(bi, frontier("vertex") === bi("src"))
         .select(bi("dst").as("vertex"), (frontier("dist") + lit(1L)).as("dist"))
         .groupBy("vertex").agg(min(col("dist")).as("dist"))
-      val next = graft.core.Superstep.checkpoint(
-        cand.join(settled.select("vertex"), Seq("vertex"), "left_anti"))
-      if (next.count() == 0L) done = true
-      else {
-        settled = graft.core.Superstep.checkpoint(settled.unionByName(next))
+      val next = s.state(cand.join(settled.select("vertex"), Seq("vertex"), "left_anti"))
+      val more = next.count() > 0L
+      if (more) {
+        settled = s.state(settled.unionByName(next))
         frontier = next
-        it += 1
       }
+      more
     }
-    // Round cap THROWS rather than silently dropping unreached vertices:
-    // an unsettled vertex would get no parity row, the conflict join below
-    // would drop its edges, and a non-bipartite component of radius >
-    // maxIter would read is_bipartite=1 (round-5 ADVICE; the Truss/SCC
-    // discipline).
-    if (!done)
-      throw new IllegalStateException(
-        s"bipartite BFS did not settle every vertex in $maxIter rounds — " +
-          "component radius exceeds the cap; raise maxIter")
 
     val parity = settled.select(col("vertex"), (col("dist") % 2).as("p"))
     val conflicts = canon

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * cannot.
   *
   * Each round is two shuffles (groupBy src for the per-vertex min, join back);
-  * `localCheckpoint` truncates lineage per round so Catalyst analysis stays
-  * O(1) across iterations. Convergence is detected with a content checksum
+  * the [[graft.core.Superstep]] driver truncates lineage per round so
+  * Catalyst analysis stays O(1) across iterations, and the round cap throws
+  * rather than returning a partial labelling. Convergence is detected with a content checksum
   * (count + xor of pair hashes) rather than a set-compare, one cheap
   * aggregate per round.
   *
@@ -34,48 +35,37 @@ object ConnectedComponents {
     * @return DataFrame (vertex: Long, component: Long), component = min id.
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 64,
-          inputCanonical: Boolean = false): DataFrame = {
-    val base = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    var e = (if (inputCanonical) base
-      else base
-        .where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
+          inputCanonical: Boolean = false): DataFrame =
+    graft.core.Superstep.run("ConnectedComponents.run") { s =>
+      val base = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      var e = s.pin(if (inputCanonical) base
+        else base
+          .where(col("src") =!= col("dst"))
+          .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
+          .distinct())
+
+      // All vertices present in the input (needed to emit singletons of the
+      // edge set, i.e. components that contract away entirely).
+      val vertices = s.pin(e.select(col("src").as("vertex"))
+        .union(e.select(col("dst").as("vertex")))
         .distinct())
-      .localCheckpoint(true)
 
-    // All vertices present in the input (needed to emit singletons of the
-    // edge set, i.e. components that contract away entirely).
-    val vertices = e.select(col("src").as("vertex"))
-      .union(e.select(col("dst").as("vertex")))
-      .distinct()
-      .localCheckpoint(true)
+      var prev = checksum(e)
+      s.loop(maxIter) { _ =>
+        // Lazy checkpoint: the checksum aggregate below is a full scan, so it
+        // materializes every partition — one Spark job per round, not two.
+        e = s.state(smallStar(largeStar(e)))
+        val cs = checksum(e)
+        val changed = cs != prev
+        prev = cs
+        changed
+      }
 
-    var prev = checksum(e)
-    var converged = false
-    var it = 0
-    // free round k-1's checkpoint blocks once round k is materialized
-    // (the final round's state survives for the assignment projection)
-    var releasePrev: () => Unit = () => ()
-    while (!converged && it < maxIter) {
-      val ls = largeStar(e)
-      val ss = smallStar(ls)
-      // Lazy checkpoint: the checksum aggregate below is a full scan, so it
-      // materializes every partition — one Spark job per round, not two.
-      val (next, release) = graft.core.Superstep.checkpointReleasable(ss)
-      val cs = checksum(next)
-      converged = cs == prev
-      prev = cs
-      releasePrev()
-      releasePrev = release
-      e = next
-      it += 1
+      // After convergence e is a forest of depth-1 stars (child > root).
+      val assign = e.select(col("dst").as("vertex"), col("src").as("component"))
+      vertices.join(assign, Seq("vertex"), "left")
+        .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
     }
-
-    // After convergence e is a forest of depth-1 stars (child > root).
-    val assign = e.select(col("dst").as("vertex"), col("src").as("component"))
-    vertices.join(assign, Seq("vertex"), "left")
-      .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
-  }
 
   /** large-star: for every vertex u, connect every strictly-larger neighbor
     * to m(u) = min(N(u) ∪ {u}). Keeps canonical (small, large) orientation.

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS (Kleinberg hubs & authorities) — the other canonical link-analysis
   * operator, on the same superstep discipline as PageRank: the edge table is
@@ -27,76 +26,67 @@ object Hits {
   /** @param edges (src, dst) directed.
     * @return (vertex, hub, authority), both L2-normalized; all-zero scores
     *         for degenerate inputs (empty edge set) rather than NaN. */
-  def run(spark: SparkSession, edges: DataFrame, iterations: Int = 20): Result = {
-    // Dual-partitioned edge storage (the SALSA discipline, round-5 VERDICT
-    // #3): eSrc feeds the authority half-step (joins on src), eDst the hub
-    // half-step (joins on dst) — neither half-step re-exchanges the Θ(E)
-    // edge table, only the Θ(V) score tables move per iteration.
-    val eSrc = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eDst = eSrc.repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = eDst.count() // materializes eSrc too (eDst reads through it)
+  def run(spark: SparkSession, edges: DataFrame, iterations: Int = 20): Result =
+    graft.core.Superstep.run("Hits.run") { s =>
+      // Dual-partitioned edge storage (the SALSA discipline, round-5 VERDICT
+      // #3): eSrc feeds the authority half-step (joins on src), eDst the hub
+      // half-step (joins on dst) — neither half-step re-exchanges the Θ(E)
+      // edge table, only the Θ(V) score tables move per iteration.
+      val eSrc = s.persist(edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .repartition(col("src")))
+      val eDst = s.persist(eSrc.repartition(col("dst")))
+      val nEdges = eDst.count() // materializes eSrc too (eDst reads through it)
 
-    val vertices = eSrc.select(col("src").as("vertex"))
-      .union(eSrc.select(col("dst").as("vertex"))).distinct()
-      .localCheckpoint(true)
+      val vertices = s.pin(eSrc.select(col("src").as("vertex"))
+        .union(eSrc.select(col("dst").as("vertex"))).distinct())
 
-    var hubs = vertices.select(col("vertex"), lit(1.0).as("hub"))
-      .localCheckpoint(true)
-    var auths: DataFrame = vertices.select(col("vertex"), lit(1.0).as("authority"))
+      var hubs = s.pin(vertices.select(col("vertex"), lit(1.0).as("hub")))
+      var auths: DataFrame = vertices.select(col("vertex"), lit(1.0).as("authority"))
 
-    var it = 0
-    var degenerate = nEdges == 0L
-    // frees iteration k-1's (aRaw, hRaw) blocks once k is materialized; the
-    // last iteration's stay live behind the returned auths/hubs projections
-    var releasePrev: () => Unit = () => ()
-    while (!degenerate && it < iterations) {
-      val (aRaw, relA) = graft.core.Superstep.checkpointReleasable(
-        eSrc.join(hubs, eSrc("src") === hubs("vertex"))
-          .groupBy(col("dst")).agg(sum(col("hub")).as("a"))
-          .select(col("dst").as("vertex"), col("a")))
-      // hub sums from the unnormalized authority sums (scale cancels)
-      val (hRaw, relH) = graft.core.Superstep.checkpointReleasable(
-        eDst.join(aRaw, eDst("dst") === aRaw("vertex"))
-          .groupBy(col("src")).agg(sum(col("a")).as("h"))
-          .select(col("src").as("vertex"), col("h")))
+      var it = 0
+      var degenerate = nEdges == 0L
+      if (!degenerate) s.upTo(iterations) { _ =>
+        val aRaw = s.state(
+          eSrc.join(hubs, eSrc("src") === hubs("vertex"))
+            .groupBy(col("dst")).agg(sum(col("hub")).as("a"))
+            .select(col("dst").as("vertex"), col("a")))
+        // hub sums from the unnormalized authority sums (scale cancels)
+        val hRaw = s.state(
+          eDst.join(aRaw, eDst("dst") === aRaw("vertex"))
+            .groupBy(col("src")).agg(sum(col("a")).as("h"))
+            .select(col("src").as("vertex"), col("h")))
 
-      // one job: materializes both checkpointed states, returns both norms
-      val row = aRaw.select(col("a").as("x"), lit(true).as("isA"))
-        .unionByName(hRaw.select(col("h").as("x"), lit(false).as("isA")))
-        .agg(
-          coalesce(sum(when(col("isA"), col("x") * col("x"))), lit(0.0)).as("a2"),
-          coalesce(sum(when(!col("isA"), col("x") * col("x"))), lit(0.0)).as("h2"))
-        .head()
-      val aNorm = math.sqrt(row.getDouble(0))
-      val hNorm = math.sqrt(row.getDouble(1))
-      if (aNorm == 0.0 || hNorm == 0.0) degenerate = true
-      else {
-        releasePrev()
-        releasePrev = () => { relA(); relH() }
-        auths = aRaw.select(col("vertex"), (col("a") / lit(aNorm)).as("authority"))
-        hubs = hRaw.select(col("vertex"), (col("h") / lit(hNorm)).as("hub"))
-        it += 1
+        // one job: materializes both checkpointed states, returns both norms
+        val row = aRaw.select(col("a").as("x"), lit(true).as("isA"))
+          .unionByName(hRaw.select(col("h").as("x"), lit(false).as("isA")))
+          .agg(
+            coalesce(sum(when(col("isA"), col("x") * col("x"))), lit(0.0)).as("a2"),
+            coalesce(sum(when(!col("isA"), col("x") * col("x"))), lit(0.0)).as("h2"))
+          .head()
+        val aNorm = math.sqrt(row.getDouble(0))
+        val hNorm = math.sqrt(row.getDouble(1))
+        degenerate = aNorm == 0.0 || hNorm == 0.0
+        if (!degenerate) {
+          auths = aRaw.select(col("vertex"), (col("a") / lit(aNorm)).as("authority"))
+          hubs = hRaw.select(col("vertex"), (col("h") / lit(hNorm)).as("hub"))
+          it += 1
+        }
+        !degenerate
       }
-    }
 
-    // vertices with no out-edges have hub 0 (and dually for authority);
-    // degenerate inputs yield all-zero scores instead of NaN
-    val (hFinal, aFinal) =
-      if (degenerate && it == 0)
-        (vertices.select(col("vertex"), lit(0.0).as("hub")),
-          vertices.select(col("vertex"), lit(0.0).as("authority")))
-      else (hubs, auths)
-    val scores = vertices
-      .join(hFinal, Seq("vertex"), "left")
-      .join(aFinal, Seq("vertex"), "left")
-      .select(col("vertex"),
-        coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("authority"), lit(0.0)).as("authority"))
-    eSrc.unpersist(blocking = false)
-    eDst.unpersist(blocking = false)
-    Result(scores, it)
-  }
+      // vertices with no out-edges have hub 0 (and dually for authority);
+      // degenerate inputs yield all-zero scores instead of NaN
+      val (hFinal, aFinal) =
+        if (degenerate && it == 0)
+          (vertices.select(col("vertex"), lit(0.0).as("hub")),
+            vertices.select(col("vertex"), lit(0.0).as("authority")))
+        else (hubs, auths)
+      val scores = vertices
+        .join(hFinal, Seq("vertex"), "left")
+        .join(aFinal, Seq("vertex"), "left")
+        .select(col("vertex"),
+          coalesce(col("hub"), lit(0.0)).as("hub"),
+          coalesce(col("authority"), lit(0.0)).as("authority"))
+      Result(scores, it)
+    }
 }

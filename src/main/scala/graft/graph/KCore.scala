@@ -31,14 +31,16 @@ import org.apache.spark.sql.functions._
   *    concerns in the cross-engine oracle), and the update is
   *    order-independent, so the fixpoint is deterministic under any
   *    parallelism;
-  *  - lineage truncated per superstep via the stats-resetting checkpoint,
-  *    dead superstep state released eagerly.
+  *  - the [[graft.core.Superstep]] driver truncates lineage per superstep,
+  *    releases dead superstep state eagerly, and throws at the step cap
+  *    instead of returning unconverged estimates (a path of n vertices
+  *    needs about n/2 supersteps).
   */
 object KCore {
 
   /** Vertices of the single k-core, by iterative degree peeling. Each
     * round: one partial-aggregated degree count + two semi-joins that drop
-    * edges touching sub-k vertices; lazy localCheckpoint per round keeps
+    * edges touching sub-k vertices; a lazy driver checkpoint per round keeps
     * the plan O(1) and the convergence count materializes it (one job per
     * round, same discipline as CC/PageRank). Rounds are O(peeling depth),
     * which is small on power-law graphs. For the whole decomposition in one
@@ -47,37 +49,30 @@ object KCore {
     * @param edges (src, dst) any orientation; self-loops ignored.
     * @return (vertex: Long) — the vertices of the k-core (may be empty). */
   def coreVertices(spark: SparkSession, edges: DataFrame, k: Int,
-                   maxIter: Int = 100): DataFrame = {
-    require(k >= 1)
-    var bi = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .flatMap2Bi()
-      .localCheckpoint(true)
+                   maxIter: Int = 100): DataFrame =
+    graft.core.Superstep.run("KCore.coreVertices") { s =>
+      require(k >= 1)
+      var bi = s.pin(edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .where(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
+        .distinct()
+        .flatMap2Bi())
 
-    var nEdges = bi.count()
-    var it = 0
-    var stable = false
-    // free peel k-1's checkpoint blocks once peel k is materialized
-    var releasePrev: () => Unit = () => ()
-    while (!stable && it < maxIter && nEdges > 0) {
-      val deg = bi.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      val keep = deg.where(col("d") >= k).select(col("src").as("v"))
-      val (next, release) = graft.core.Superstep.checkpointReleasable(bi
-        .join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))) // materialized by the count below
-      val n2 = next.count()
-      stable = n2 == nEdges
-      nEdges = n2
-      releasePrev()
-      releasePrev = release
-      bi = next
-      it += 1
+      var nEdges = bi.count()
+      if (nEdges > 0) s.loop(maxIter) { _ =>
+        val deg = bi.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        val keep = deg.where(col("d") >= k).select(col("src").as("v"))
+        bi = s.state(bi
+          .join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"))) // materialized by the count below
+        val n2 = bi.count()
+        val peeled = n2 != nEdges
+        nEdges = n2
+        peeled && n2 > 0
+      }
+      bi.select(col("src").as("vertex")).distinct()
     }
-    bi.select(col("src").as("vertex")).distinct()
-  }
 
   private implicit class BiOps(df: DataFrame) {
     /** Symmetrize a canonical (src<dst) edge list. */
@@ -91,57 +86,49 @@ object KCore {
     *              self-loops ignored).
     * @return (vertex: Long, core: Long) — core = core number.
     */
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 64): DataFrame = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-    // Symmetrized neighbor list, partitioned ONCE on dst — the key of the
-    // per-superstep estimates join — so the big table never re-exchanges;
-    // each superstep moves the (vertex, core) table plus one ranked-message
-    // exchange for the h-index window (the unavoidable message delivery).
-    val nbrs = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 64): DataFrame =
+    graft.core.Superstep.run("KCore.run") { s =>
+      val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .where(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("src"),
+          greatest(col("src"), col("dst")).as("dst"))
+        .distinct()
+      // Symmetrized neighbor list, partitioned ONCE on dst — the key of the
+      // per-superstep estimates join — so the big table never re-exchanges;
+      // each superstep moves the (vertex, core) table plus one ranked-message
+      // exchange for the h-index window (the unavoidable message delivery).
+      val nbrs = s.pin(e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(col("dst")))
 
-    // init: estimate = degree
-    var cores = nbrs.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("core"))
-      .localCheckpoint(true)
+      // init: estimate = degree
+      var cores = s.pin(nbrs.groupBy(col("src").as("vertex"))
+        .agg(count(lit(1)).as("core")))
 
-    var it = 0
-    var converged = false
-    var releasePrev: () => Unit = () => ()
-    while (!converged && it < maxIter) {
-      // neighbor estimates, grouped per vertex: rank neighbors by estimate
-      // descending (neighbor id as deterministic tiebreak — the h-index is
-      // tie-insensitive, the ordering just fixes the physical sort), then
-      // h = max over ranked neighbors of min(rank, estimate).
-      val w = Window.partitionBy("v").orderBy(col("c").desc, col("nbr").asc)
-      val msgs = nbrs
-        .join(cores, nbrs("dst") === cores("vertex"))
-        .select(nbrs("src").as("v"), col("dst").as("nbr"), col("core").as("c"))
-      val h = msgs
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .groupBy(col("v"))
-        .agg(max(least(col("rn"), col("c"))).as("h"))
-      // new estimate; join back to detect the fixpoint in the same pass.
-      // h <= old estimate always (estimates start at degree and neighbors
-      // only fall), so no explicit least(old, h) is needed — but keeping
-      // old_core lets one aggregate compute the convergence count.
-      val next0 = h.join(cores, h("v") === cores("vertex"))
-        .select(col("vertex"), col("h").as("core"), col("core").as("old_core"))
-      val (next, release) = graft.core.Superstep.checkpointReleasable(next0)
-      val changed = next
-        .agg(count(when(col("core") =!= col("old_core"), lit(1))).as("n"))
-        .head().getLong(0)
-      converged = changed == 0L
-      releasePrev()
-      releasePrev = release
-      cores = next.select(col("vertex"), col("core"))
-      it += 1
+      s.loop(maxIter) { _ =>
+        // neighbor estimates, grouped per vertex: rank neighbors by estimate
+        // descending (neighbor id as deterministic tiebreak — the h-index is
+        // tie-insensitive, the ordering just fixes the physical sort), then
+        // h = max over ranked neighbors of min(rank, estimate).
+        val w = Window.partitionBy("v").orderBy(col("c").desc, col("nbr").asc)
+        val msgs = nbrs
+          .join(cores, nbrs("dst") === cores("vertex"))
+          .select(nbrs("src").as("v"), col("dst").as("nbr"), col("core").as("c"))
+        val h = msgs
+          .withColumn("rn", row_number().over(w).cast("long"))
+          .groupBy(col("v"))
+          .agg(max(least(col("rn"), col("c"))).as("h"))
+        // new estimate; join back to detect the fixpoint in the same pass.
+        // h <= old estimate always (estimates start at degree and neighbors
+        // only fall), so no explicit least(old, h) is needed — but keeping
+        // old_core lets one aggregate compute the convergence count.
+        val next = s.state(h.join(cores, h("v") === cores("vertex"))
+          .select(col("vertex"), col("h").as("core"), col("core").as("old_core")))
+        val changed = next
+          .agg(count(when(col("core") =!= col("old_core"), lit(1))).as("n"))
+          .head().getLong(0)
+        cores = next.select(col("vertex"), col("core"))
+        changed != 0L
+      }
+      cores
     }
-    cores
-  }
 }

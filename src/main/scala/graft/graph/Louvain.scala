@@ -92,34 +92,28 @@ object Louvain {
     * oracle's fixed-schedule refinement replay needs per level — the Spark
     * refinement itself uses the (faster-converging) small/large-star CC, so
     * this probe exists purely to keep the replay margin honest. Bounded
-    * loop, localCheckpoint per step (O(1) plan). */
+    * loop on the [[graft.core.Superstep]] driver (O(1) plan). */
   private[graft] def minLabelDepth(spark: SparkSession, edges: DataFrame,
-                                   cap: Int = 64): Int = {
-    val bi = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .localCheckpoint(true)
-    var lbl = bi.select(col("u").as("vertex")).distinct()
-      .select(col("vertex"), col("vertex").as("lbl")).localCheckpoint(true)
-    var depth = 0
-    var changed = true
-    var releasePrev: () => Unit = () => ()
-    while (changed && depth < cap) {
-      val nb = bi.join(lbl.select(col("vertex").as("v"), col("lbl").as("nl")), "v")
-        .groupBy(col("u").as("vertex")).agg(min(col("nl")).as("nb"))
-      val next = lbl.join(nb, Seq("vertex"), "left")
-        .select(col("vertex"), least(col("lbl"), coalesce(col("nb"), col("lbl"))).as("lbl"),
-          col("lbl").as("old"))
-      val (ck, release) = graft.core.Superstep.checkpointReleasable(next)
-      val moves = ck.agg(count(when(col("lbl") =!= col("old"), lit(1)))).head().getLong(0)
-      releasePrev() // step k-1's blocks are dead once step k is materialized
-      releasePrev = release
-      lbl = ck.select(col("vertex"), col("lbl"))
-      changed = moves > 0
-      if (changed) depth += 1
+                                   cap: Int = 64): Int =
+    graft.core.Superstep.run("Louvain.minLabelDepth") { s =>
+      val bi = s.pin(edges.select(col("src").as("u"), col("dst").as("v"))
+        .union(edges.select(col("dst").as("u"), col("src").as("v"))))
+      var lbl = s.pin(bi.select(col("u").as("vertex")).distinct()
+        .select(col("vertex"), col("vertex").as("lbl")))
+      var depth = 0
+      s.upTo(cap) { _ =>
+        val nb = bi.join(lbl.select(col("vertex").as("v"), col("lbl").as("nl")), "v")
+          .groupBy(col("u").as("vertex")).agg(min(col("nl")).as("nb"))
+        val ck = s.state(lbl.join(nb, Seq("vertex"), "left")
+          .select(col("vertex"), least(col("lbl"), coalesce(col("nb"), col("lbl"))).as("lbl"),
+            col("lbl").as("old")))
+        val moves = ck.agg(count(when(col("lbl") =!= col("old"), lit(1)))).head().getLong(0)
+        lbl = ck.select(col("vertex"), col("lbl"))
+        if (moves > 0) depth += 1
+        moves > 0
+      }
+      depth
     }
-    releasePrev()
-    depth
-  }
 
   def ensureConnected(spark: SparkSession, edges: DataFrame, assignment: DataFrame,
                       inputCanonical: Boolean = false): DataFrame = {
@@ -147,35 +141,39 @@ object Louvain {
     * maxLevels levels (idle passes/levels are no-ops) — which makes the
     * whole multi-level fixpoint replayable in SQL: the driver's DuckDB twin
     * re-executes every pass, refinement step and contraction over the
-    * composed assignment. Replay-exactness holds because every Louvain
-    * quantity (k, Σtot, k_v→c, 2m) is an integer-valued double (sums of
-    * 1.0s are exact in any order up to 2^53), so scores match
-    * IEEE-bit-for-bit across engines, and the damping parity is md5-derived
-    * (computable in any engine — see the class doc). */
+    * composed assignment. On the UNWEIGHTED path (`weightCol = None`)
+    * replay-exactness holds because every Louvain quantity (k, Σtot, k_v→c,
+    * 2m) is an integer-valued double (sums of 1.0s are exact in any order up
+    * to 2^53), so scores match IEEE-bit-for-bit across engines, and the
+    * damping parity is md5-derived (computable in any engine — see the class
+    * doc). With a weight column the sums are order-dependent in the last
+    * place, so a replay can differ where two scores tie to within rounding.
+    */
   def run(spark: SparkSession, edges: DataFrame, resolution: Double = 1.0,
           maxPasses: Int = 20, maxLevels: Int = 4,
           weightCol: Option[String] = None,
           connectedGuarantee: Boolean = true,
           earlyStop: Boolean = true,
-          measureRefineDepth: Boolean = false): Result = {
+          measureRefineDepth: Boolean = false): Result =
+    graft.core.Superstep.run("Louvain.run") { s =>
     // canonical weighted undirected edges; parallel edges sum
     val w0 = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    var g = edges.select(col("src").cast("long"), col("dst").cast("long"), w0.as("w"))
+    var g = s.state(edges.select(col("src").cast("long"), col("dst").cast("long"), w0.as("w"))
       .where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"), col("w"))
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
-      .withColumn("self", lit(0.0)) // self-loop mass appears on coarse levels
-      .transform(graft.core.Superstep.checkpoint(_, eager = true))
+      .withColumn("self", lit(0.0)), // self-loop mass appears on coarse levels
+      eager = true)
 
     // mapping from original vertices to current-level vertices
-    var mapping = g.select(col("a").as("vertex")).union(g.select(col("b").as("vertex")))
-      .distinct().select(col("vertex"), col("vertex").as("cur"))
-      .transform(graft.core.Superstep.checkpoint(_, eager = true))
+    var mapping = s.state(g.select(col("a").as("vertex")).union(g.select(col("b").as("vertex")))
+      .distinct().select(col("vertex"), col("vertex").as("cur")), eager = true)
 
     var level = 0
-    var improvedAtLevel = true
     val refineDepths = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while ((improvedAtLevel || !earlyStop) && level < maxLevels) {
+    // maxLevels is a budget the SQL twin replays; a level that moves nothing
+    // ends the run early (earlyStop)
+    s.upTo(maxLevels) { _ =>
       val (commRaw, moved0) = movePhase(spark, g, resolution, maxPasses, earlyStop)
       val moved = moved0 || !earlyStop // fixed schedule: always proceed (no-ops are harmless)
       if (measureRefineDepth && moved)
@@ -196,11 +194,9 @@ object Louvain {
           inputCanonical = true)
           .select(col("vertex"), col("community").as("comm"))
       } else commRaw
-      improvedAtLevel = moved0
       if (moved) {
-        mapping = mapping.join(comm, mapping("cur") === comm("vertex"))
-          .select(mapping("vertex"), col("comm").as("cur"))
-          .transform(graft.core.Superstep.checkpoint(_, eager = true))
+        mapping = s.state(mapping.join(comm, mapping("cur") === comm("vertex"))
+          .select(mapping("vertex"), col("comm").as("cur")), eager = true)
         // contract: communities become vertices; intra-community edge mass
         // becomes self-loop weight (counted once, contributing 2w to degree)
         val ce = g
@@ -208,13 +204,14 @@ object Louvain {
           .join(comm.select(col("vertex").as("b"), col("comm").as("cb")), "b")
           .select(least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"),
             col("w"), (col("self") + when(col("ca") === col("cb"), col("w")).otherwise(0.0)).as("selfw"))
-        g = ce.groupBy(col("a"), col("b"))
+        g = s.state(ce.groupBy(col("a"), col("b"))
           .agg(sum(when(col("a") =!= col("b"), col("w")).otherwise(0.0)).as("w"),
-            sum(col("selfw")).as("self"))
+            sum(col("selfw")).as("self")),
           // keep a row even for pure self-loop super-vertices (a == b)
-          .transform(graft.core.Superstep.checkpoint(_, eager = true))
+          eager = true)
         level += 1
       }
+      moved
     }
     // per-level refinement already guarantees connectedness of the composed
     // partition (see loop)
@@ -225,84 +222,80 @@ object Louvain {
   /** One level's move passes. Returns (vertex, comm) and whether any vertex
     * moved at this level. */
   private def movePhase(spark: SparkSession, g: DataFrame, resolution: Double,
-                        maxPasses: Int, earlyStop: Boolean = true): (DataFrame, Boolean) = {
+                        maxPasses: Int, earlyStop: Boolean = true): (DataFrame, Boolean) =
+    graft.core.Superstep.run("Louvain.movePhase") { s =>
     // bi-directed view for per-vertex neighbor scans (self-loops excluded
     // from neighbor mass, included in degree)
-    val bi = g.where(col("a") =!= col("b"))
+    val bi = s.pin(g.where(col("a") =!= col("b"))
       .select(col("a").as("u"), col("b").as("v"), col("w"))
       .union(g.where(col("a") =!= col("b"))
-        .select(col("b").as("u"), col("a").as("v"), col("w")))
-      .localCheckpoint(true)
+        .select(col("b").as("u"), col("a").as("v"), col("w"))))
     val selfs = g.groupBy(col("a").as("u")).agg(sum(col("self")).as("sw"))
 
     // k_v = incident edge mass (+2·self-loop); 2m = Σ k_v. The damping
     // digest rides along: one md5 per vertex per LEVEL here; each pass pair
     // just reads a different hex digit of the cached string.
-    val kv = bi.groupBy(col("u")).agg(sum(col("w")).as("kin"))
+    val kv = s.pin(bi.groupBy(col("u")).agg(sum(col("w")).as("kin"))
       .join(selfs, Seq("u"), "left")
       .select(col("u").as("vertex"), (col("kin") + lit(2.0) * coalesce(col("sw"), lit(0.0))).as("k"))
       .unionByName(
         // isolated super-vertices (only a self-loop) still carry degree
         selfs.join(bi.select(col("u")).distinct(), Seq("u"), "left_anti")
           .select(col("u").as("vertex"), (lit(2.0) * col("sw")).as("k")))
-      .withColumn("ph", md5(col("vertex").cast("string")))
-      .localCheckpoint(true)
+      .withColumn("ph", md5(col("vertex").cast("string"))))
     val m2 = kv.agg(coalesce(sum(col("k")), lit(0.0))).head().getDouble(0) // = 2m
-    if (m2 == 0.0) return (kv.select(col("vertex"), col("vertex").as("comm")), false)
-
-    var comm = kv.select(col("vertex"), col("vertex").as("comm")).localCheckpoint(true)
-    var pass = 0
-    var anyMove = false
-    var idleStreak = 0
-    // free pass k-1's checkpoint blocks once pass k is materialized
-    var releasePrev: () => Unit = () => ()
-    while (pass < maxPasses && (!earlyStop || idleStreak < 2)) {
-      // Σtot per community
-      val tot = comm.join(kv, "vertex").groupBy(col("comm")).agg(sum(col("k")).as("tot"))
-      // k_{v→c}: neighbor mass of v into community c, with the current
-      // community riding along as a zero-mass carrier row. ONE (u, c)
-      // aggregation over the unioned messages — the previous shape
-      // aggregated kvc first and re-aggregated after the carrier union,
-      // exchanging the Θ(E) candidate table twice for the same sums
-      // (sum∘union = sum of sums; the masses are integer-valued doubles,
-      // so the fused sum is IEEE-identical).
-      val kvcMsgs = bi.join(comm.select(col("vertex").as("v"), col("comm").as("c")), "v")
-        .select(col("u"), col("c"), col("w").as("kc"))
-      val cand = kvcMsgs.unionByName(
-          comm.select(col("vertex").as("u"), col("comm").as("c"), lit(0.0).as("kc")))
-        .groupBy(col("u"), col("c")).agg(sum(col("kc")).as("kc"))
-        .join(tot.select(col("comm").as("c"), col("tot")), "c")
-        .join(comm.select(col("vertex").as("u"), col("comm").as("cur")), "u")
-        .join(kv.select(col("vertex").as("u"), col("k"), col("ph")), "u")
-        .select(col("u"), col("c"), col("cur"), col("k"), col("ph"),
-          (col("kc") - lit(resolution) * col("k") *
-            (col("tot") - when(col("c") === col("cur"), col("k")).otherwise(0.0)) / lit(m2))
-            .as("score"))
-      val parity = pass % 2
-      // rotating damping bit: pass pair t reads hex digit t%32 of the digest
-      val bitPos = 1 + (pass / 2) % 32
-      val next = cand.groupBy(col("u")).agg(
-          max_by(col("c"), struct(col("score"), -col("c"))).as("best"),
-          max(col("score")).as("best_score"), // == score(best): argmax is score-first
-          max(when(col("c") === col("cur"), col("score"))).as("stay_score"),
-          first(col("cur")).as("cur"),
-          first(col("ph")).as("ph"))
-        .select(col("u").as("vertex"),
-          when(parityBit(col("ph"), bitPos) === lit(parity) && col("best_score") > col("stay_score"),
-            col("best")).otherwise(col("cur")).as("comm"),
-          col("cur").as("old_comm"))
-      val (nextCk, release) = // materialized by the move-count aggregate
-        graft.core.Superstep.checkpointReleasable(next)
-      val moves = nextCk.agg(count(when(col("comm") =!= col("old_comm"), lit(1))))
-        .head().getLong(0)
-      releasePrev()
-      releasePrev = release
-      comm = nextCk.select(col("vertex"), col("comm"))
-      anyMove ||= moves > 0
-      idleStreak = if (moves == 0) idleStreak + 1 else 0
-      pass += 1
+    if (m2 == 0.0) (kv.select(col("vertex"), col("vertex").as("comm")), false)
+    else {
+      var comm = s.pin(kv.select(col("vertex"), col("vertex").as("comm")))
+      var anyMove = false
+      var idleStreak = 0
+      // maxPasses is a budget the SQL twin replays
+      s.upTo(maxPasses) { pass =>
+        // Σtot per community
+        val tot = comm.join(kv, "vertex").groupBy(col("comm")).agg(sum(col("k")).as("tot"))
+        // k_{v→c}: neighbor mass of v into community c, with the current
+        // community riding along as a zero-mass carrier row. ONE (u, c)
+        // aggregation over the unioned messages — the previous shape
+        // aggregated kvc first and re-aggregated after the carrier union,
+        // exchanging the Θ(E) candidate table twice for the same sums
+        // (sum∘union = sum of sums). On the unweighted path the masses are
+        // integer-valued doubles, so the fused sum is IEEE-identical; weighted
+        // masses may round differently in the last place.
+        val kvcMsgs = bi.join(comm.select(col("vertex").as("v"), col("comm").as("c")), "v")
+          .select(col("u"), col("c"), col("w").as("kc"))
+        val cand = kvcMsgs.unionByName(
+            comm.select(col("vertex").as("u"), col("comm").as("c"), lit(0.0).as("kc")))
+          .groupBy(col("u"), col("c")).agg(sum(col("kc")).as("kc"))
+          .join(tot.select(col("comm").as("c"), col("tot")), "c")
+          .join(comm.select(col("vertex").as("u"), col("comm").as("cur")), "u")
+          .join(kv.select(col("vertex").as("u"), col("k"), col("ph")), "u")
+          .select(col("u"), col("c"), col("cur"), col("k"), col("ph"),
+            (col("kc") - lit(resolution) * col("k") *
+              (col("tot") - when(col("c") === col("cur"), col("k")).otherwise(0.0)) / lit(m2))
+              .as("score"))
+        val parity = pass % 2
+        // rotating damping bit: pass pair t reads hex digit t%32 of the digest
+        val bitPos = 1 + (pass / 2) % 32
+        val next = cand.groupBy(col("u")).agg(
+            max_by(col("c"), struct(col("score"), -col("c"))).as("best"),
+            max(col("score")).as("best_score"), // == score(best): argmax is score-first
+            max(when(col("c") === col("cur"), col("score"))).as("stay_score"),
+            first(col("cur")).as("cur"),
+            first(col("ph")).as("ph"))
+          .select(col("u").as("vertex"),
+            when(parityBit(col("ph"), bitPos) === lit(parity) && col("best_score") > col("stay_score"),
+              col("best")).otherwise(col("cur")).as("comm"),
+            col("cur").as("old_comm"))
+        val nextCk = s.state(next) // materialized by the move-count aggregate
+        val moves = nextCk.agg(count(when(col("comm") =!= col("old_comm"), lit(1))))
+          .head().getLong(0)
+        comm = nextCk.select(col("vertex"), col("comm"))
+        anyMove ||= moves > 0
+        idleStreak = if (moves == 0) idleStreak + 1 else 0
+        !earlyStop || idleStreak < 2
+      }
+      (comm, anyMove)
     }
-    (comm, anyMove)
   }
 
   /** Damping parity from a cached md5 hex digest: digit at `bitPos`

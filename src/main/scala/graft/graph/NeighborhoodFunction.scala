@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Superstep
+
 /** Approximate neighborhood function (ANF): per-vertex estimates of
   * |ball(v, h)| — how many vertices are within h hops — via k-minimum-values
   * (KMV) cardinality sketches propagated along edges (Palmer/Gibbons/
@@ -40,8 +42,8 @@ import org.apache.spark.sql.functions._
   * map-side with at most k longs of state per group everywhere — a hub of
   * degree 10⁷ costs the same 8·k-byte buffer as a leaf (round-5 VERDICT #1).
   * No windows, no per-vertex collect to the driver;
-  * loop-carried state goes through Superstep.checkpointReleasable so step
-  * t−1's blocks are freed as soon as step t materializes.
+  * loop-carried state goes through the [[graft.core.Superstep]] driver so
+  * step t−1's blocks are freed as soon as step t materializes.
   */
 object NeighborhoodFunction {
 
@@ -64,18 +66,18 @@ object NeighborhoodFunction {
       .otherwise(lit((k - 1).toDouble) * lit(HashScale) / element_at(col("sk"), k))
   }
 
-  /** Runs the KMV sketch supersteps, invoking `onHop(hop, state)` after each
-    * propagation round while the hop's state is checkpointed and live.
-    * Returns the final state (caller must not use it past another release). */
-  private def sketchLoop(edges: DataFrame, hops: Int, k: Int)
+  /** Runs the KMV sketch supersteps (`hops` is a budget the SQL twins
+    * replay), invoking `onHop(hop, state)` after each propagation round
+    * while the hop's state is checkpointed and live. Returns the final
+    * state. */
+  private def sketchLoop(s: Superstep, edges: DataFrame, hops: Int, k: Int)
                         (onHop: (Int, DataFrame) => Unit): DataFrame = {
     require(hops >= 1 && k >= 2, s"need hops >= 1 and k >= 2, got hops=$hops k=$k")
     val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-    val bi = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
+    val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
 
-    var (state, release) = graft.core.Superstep.checkpointReleasable(
+    var state = s.state(
       bi.select(col("src").as("v")).distinct()
         .select(col("v"), array(vhash(col("v"))).as("sk")),
       eager = true)
@@ -85,15 +87,14 @@ object NeighborhoodFunction {
     // the order statistic; replaces the flatten(collect_list)-then-slice
     // form whose buffer grew Θ(degree·k) on hub vertices before truncation.
     val kmvUnion = udaf(new graft.functions.KmvUnionAgg(k))
-    for (hop <- 1 to hops) {
+    s.upTo(hops) { hop =>
       val msgs = state.join(bi, state("v") === bi("src"))
         .select(bi("dst").as("v"), col("sk"))
-      val merged = state.unionByName(msgs)
+      state = s.state(state.unionByName(msgs)
         .groupBy("v")
-        .agg(kmvUnion(col("sk")).as("sk"))
-      val (next, rel) = graft.core.Superstep.checkpointReleasable(merged, eager = true)
-      release(); state = next; release = rel
-      onHop(hop, state)
+        .agg(kmvUnion(col("sk")).as("sk")), eager = true)
+      onHop(hop + 1, state)
+      true
     }
     state
   }
@@ -107,13 +108,13 @@ object NeighborhoodFunction {
     * @return (vertex, sketch_n, est_reach): sketch_n = min(|ball|, k);
     *         est_reach = exact |ball| while the sketch is not full, else
     *         (k−1)·2^60 / kth-smallest-hash, rounded 6 dp. */
-  def kmvReach(spark: SparkSession, edges: DataFrame, hops: Int, k: Int): DataFrame = {
-    val state = sketchLoop(edges, hops, k)((_, _) => ())
-    state.select(
-      col("v").as("vertex"),
-      size(col("sk")).cast("long").as("sketch_n"),
-      round(estCol(k), 6).as("est_reach"))
-  }
+  def kmvReach(spark: SparkSession, edges: DataFrame, hops: Int, k: Int): DataFrame =
+    Superstep.run("NeighborhoodFunction.kmvReach") { s =>
+      sketchLoop(s, edges, hops, k)((_, _) => ()).select(
+        col("v").as("vertex"),
+        size(col("sk")).cast("long").as("sketch_n"),
+        round(estCol(k), 6).as("est_reach"))
+    }
 
   /** The neighborhood function N(h) itself — the corpus-level reach curve
     * ANF exists to produce (Palmer et al. §1: effective diameter, hop plot).
@@ -137,25 +138,26 @@ object NeighborhoodFunction {
     * hop's checkpointed state is live (control-plane, same class as the
     * superstep `count()`s — releasing hop h's blocks must not force a
     * recompute of a lazily-held aggregate). */
-  def reachCurve(spark: SparkSession, edges: DataFrame, maxHops: Int, k: Int): DataFrame = {
-    val perHop = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, java.math.BigDecimal)]
-    sketchLoop(edges, maxHops, k) { (hop, state) =>
-      val r = state.agg(
-        count(lit(1)).as("nv"),
-        sum(when(size(col("sk")) >= k, 1L).otherwise(0L)).as("nsat"),
-        sum(round(estCol(k), 6).cast("decimal(38,6)")).as("total")).head()
-      perHop += ((hop, r.getLong(0), r.getLong(1), r.getDecimal(2)))
+  def reachCurve(spark: SparkSession, edges: DataFrame, maxHops: Int, k: Int): DataFrame =
+    Superstep.run("NeighborhoodFunction.reachCurve") { s =>
+      val perHop = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, java.math.BigDecimal)]
+      sketchLoop(s, edges, maxHops, k) { (hop, state) =>
+        val r = state.agg(
+          count(lit(1)).as("nv"),
+          sum(when(size(col("sk")) >= k, 1L).otherwise(0L)).as("nsat"),
+          sum(round(estCol(k), 6).cast("decimal(38,6)")).as("total")).head()
+        perHop += ((hop, r.getLong(0), r.getLong(1), r.getDecimal(2)))
+      }
+      val totalMax = perHop.last._4.doubleValue // deterministic round-to-nearest (exact below ~9.0e9)
+      // HALF_UP, the same tie rule as Spark's round() and DuckDB's round()
+      // on positive doubles (rint would be half-EVEN — wrong twin).
+      def r6(x: Double): Double =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val rows = perHop.toSeq.map { case (hop, nv, nsat, totalDec) =>
+        val total = totalDec.doubleValue
+        (hop.toLong, nv, nsat, r6(total), r6(total / nv), r6(total / totalMax))
+      }
+      import spark.implicits._
+      rows.toDF("hop", "n_vertices", "n_saturated", "total_reach", "avg_reach", "frac_of_max")
     }
-    val totalMax = perHop.last._4.doubleValue // deterministic round-to-nearest (exact below ~9.0e9)
-    // HALF_UP, the same tie rule as Spark's round() and DuckDB's round()
-    // on positive doubles (rint would be half-EVEN — wrong twin).
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = perHop.toSeq.map { case (hop, nv, nsat, totalDec) =>
-      val total = totalDec.doubleValue
-      (hop.toLong, nv, nsat, r6(total), r6(total / nv), r6(total / totalMax))
-    }
-    import spark.implicits._
-    rows.toDF("hop", "n_vertices", "n_saturated", "total_reach", "avg_reach", "frac_of_max")
-  }
 }

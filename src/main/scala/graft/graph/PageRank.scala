@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Pregel-style PageRank as pure Dataset joins/aggregations (the north-rule
   * flagship; no clusty counterpart — clusty's iterative loops are BFS/greedy,
@@ -23,8 +22,9 @@ import org.apache.spark.storage.StorageLevel
   *    both the convergence delta (`max |rank − old_rank|`) and the *next*
   *    superstep's dangling mass (`sum(rank where dangling)`). Dangling-ness
   *    is a precomputed boolean on the state, not a per-step anti-join.
-  *  - checkpointing truncates lineage to O(1) per superstep and is the
-  *    resumable frontier state (on a cluster this becomes a write to an
+  *  - the [[graft.core.Superstep]] driver's checkpoint truncates lineage to
+  *    O(1) per superstep, frees superstep k−1 once k has materialized, and
+  *    times every superstep; it is the resumable frontier state (on a cluster this becomes a write to an
   *    Iceberg/parquet `ranks_step_k` table; same contract).
   *  - convergence = `max(abs(delta)) < tol`; both our runs and the in-test
   *    oracle converge to the same epsilon so float-sum reorder noise stays
@@ -33,8 +33,9 @@ import org.apache.spark.storage.StorageLevel
 object PageRank {
 
   /** @param stepSeconds wall seconds of each executed superstep (plan build
-    *   + the materializing aggregate action) — the raw series behind the
-    *   scaling bench's first-step vs steady-state decomposition. */
+    *   + the materializing aggregate action), as the driver times them — the
+    *   raw series behind the scaling bench's first-step vs steady-state
+    *   decomposition. */
   final case class Result(ranks: DataFrame, iterations: Int, converged: Boolean,
                           stepSeconds: Seq[Double] = Nil)
 
@@ -52,7 +53,8 @@ object PageRank {
           tol: Double = 1e-8, maxIter: Int = 100,
           stateDir: Option[String] = None,
           weightCol: Option[String] = None,
-          seeds: Option[DataFrame] = None): Result = {
+          seeds: Option[DataFrame] = None): Result =
+    graft.core.Superstep.run("PageRank.run") { s =>
     // unweighted: every edge weighs 1; weighted: transition probability
     // proportional to the edge weight (share = w / Σ out-weights)
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
@@ -66,10 +68,9 @@ object PageRank {
     // edge table twice and the degree table once). Partitioned on src once;
     // the big side never moves again across supersteps.
     val wSrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    val links = e.repartition(col("src"))
+    val links = s.persist(e.repartition(col("src"))
       .select(col("src"), col("dst"),
-        (col("w") / sum(col("w")).over(wSrc)).as("share"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        (col("w") / sum(col("w")).over(wSrc)).as("share")))
     links.count() // materialize once
 
     val ckpt = stateDir.map(new RankCheckpointer(spark, _))
@@ -99,9 +100,9 @@ object PageRank {
     // Checkpoint (vertex, dangling, seed) ONCE: the scalar aggregate below
     // and the initial rank state both read it — previously each triggered
     // its own full recomputation of the union+aggregate pipeline (two jobs
-    // where one suffices). Released after superstep 0 materializes, via the
-    // releasePrev chain.
-    val (st0, relSt0) = graft.core.Superstep.checkpointReleasable(st0pre, eager = true)
+    // where one suffices). The driver frees it once superstep 0 has
+    // materialized.
+    val st0 = s.state(st0pre, eager = true)
     val r0: Row = st0
       .agg(count(lit(1)).as("n"),
         coalesce(sum(when(col("dangling"), lit(1L)).otherwise(lit(0L))), lit(0L)).as("nd"),
@@ -120,10 +121,9 @@ object PageRank {
       if (seeds.isEmpty) r0.getLong(1).toDouble / n
       else r0.getLong(3).toDouble / nSeeds
     // initial state = narrow projection over the st0 checkpoint (no second
-    // checkpoint copy — st0's blocks ARE the superstep-0 input, freed once
-    // superstep 1 materializes via the releasePrev chain)
+    // checkpoint copy — st0's blocks ARE the superstep-0 input)
     var state =
-      if (resumeStep >= 0) { relSt0(); ckpt.get.read(resumeStep) }
+      if (resumeStep >= 0) ckpt.get.read(resumeStep)
       else st0.select(col("vertex"), col("dangling"), teleCol.as("tele"),
         teleCol.as("rank"))
     var it = math.max(resumeStep + 1, 0)
@@ -133,13 +133,8 @@ object PageRank {
       if (!delta.isNaN) converged = delta < tol
     }
 
-    val stepSecs = Vector.newBuilder[Double]
-    // frees superstep k-1's checkpoint blocks once k is materialized; the
-    // FINAL state is never released (the caller reads Result.ranks from it).
-    // Superstep 0's "previous state" is the st0 checkpoint itself.
-    var releasePrev: () => Unit = if (resumeStep >= 0) () => () else relSt0
-    while (!converged && it < maxIter) {
-      val loopT0 = System.nanoTime()
+    // maxIter is a budget: running out is reported as converged = false
+    val stepSecs = if (converged) Vector.empty[Double] else s.upTo(maxIter, from = it) { k =>
       // Pregel union-carrier: the state row rides along as a
       // zero-contribution message carrying (dangling, old_rank), so the new
       // state is ONE aggregation — no contribs→state join, no sort, and
@@ -168,10 +163,8 @@ object PageRank {
           (lit(1.0 - damping) * col("tele") + lit(damping) * col("in_mass")
             + lit(damping * danglingMass) * col("tele")).as("rank"),
           col("old_rank"))
-      val (next, release) = ckpt match {
-        case Some(c) => (c.write(it, next0), () => ()) // durable superstep barrier
-        case None    => graft.core.Superstep.checkpointReleasable(next0) // materialized by the agg
-      }
+      // the durable superstep barrier, else a checkpoint the agg materializes
+      val next = ckpt.fold(s.state(next0))(_.write(k, next0))
 
       val row = next.agg(
         max(abs(col("rank") - col("old_rank"))).as("delta"),
@@ -179,20 +172,14 @@ object PageRank {
         .head()
       val delta = row.getDouble(0)
       danglingMass = row.getDouble(1)
-      ckpt.foreach(_.seal(it, (System.nanoTime() - stepT0) / 1e9, delta, danglingMass))
+      ckpt.foreach(_.seal(k, (System.nanoTime() - stepT0) / 1e9, delta, danglingMass))
 
-      // step-k state is fully materialized (the agg read every partition):
-      // step k-1's checkpointed blocks are dead — free them NOW instead of
-      // letting them pile up for the ContextCleaner (see Superstep scaladoc)
-      releasePrev()
-      releasePrev = release
       state = next.select(col("vertex"), col("dangling"), col("tele"), col("rank"))
-      it += 1
+      it = k + 1
       converged = delta < tol
-      stepSecs += (System.nanoTime() - loopT0) / 1e9
+      !converged
     }
-    links.unpersist(blocking = false)
-    Result(state.select(col("vertex"), col("rank")), it, converged, stepSecs.result())
+    Result(state.select(col("vertex"), col("rank")), it, converged, stepSecs)
   }
 
   /** Undirected convenience: run on the symmetrized edge set. */

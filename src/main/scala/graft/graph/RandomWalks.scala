@@ -25,42 +25,42 @@ object RandomWalks {
     *         non-isolated vertex per replica. walk_id = vertex + replica·V′
     *         where V′ = max vertex id + 1 (collision-free salting). */
   def walks(spark: SparkSession, edges: DataFrame, length: Int = 4,
-            walksPerVertex: Int = 1): DataFrame = {
-    require(length >= 0 && walksPerVertex >= 1)
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-    val bi = e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      .localCheckpoint(true)
-    val adj = bi
-      .withColumn("rn",
-        row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - lit(1))
-      .select(col("src").as("asrc"), col("dst").as("adst"), col("rn"))
-      .localCheckpoint(true)
-    val deg = bi.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .select(col("src").as("dsrc"), col("d"))
-      .localCheckpoint(true)
+            walksPerVertex: Int = 1): DataFrame =
+    graft.core.Superstep.run("RandomWalks.walks") { s =>
+      require(length >= 0 && walksPerVertex >= 1)
+      val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .where(col("src") =!= col("dst"))
+      val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+      val adj = s.pin(bi
+        .withColumn("rn",
+          row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - lit(1))
+        .select(col("src").as("asrc"), col("dst").as("adst"), col("rn")))
+      val deg = s.pin(bi.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        .select(col("src").as("dsrc"), col("d")))
 
-    val vmax = bi.agg(coalesce(max(col("src")) + 1, lit(0L))).head().getLong(0)
-    val starts = (0 until walksPerVertex).map { r =>
-      bi.select(col("src").as("vertex")).distinct()
-        .select((col("vertex") + lit(r.toLong * vmax)).as("walk_id"),
-          lit(0).as("step"), col("vertex"))
-    }.reduce(_ unionByName _)
+      val vmax = bi.agg(coalesce(max(col("src")) + 1, lit(0L))).head().getLong(0)
+      val starts = (0 until walksPerVertex).map { r =>
+        bi.select(col("src").as("vertex")).distinct()
+          .select((col("vertex") + lit(r.toLong * vmax)).as("walk_id"),
+            lit(0).as("step"), col("vertex"))
+      }.reduce(_ unionByName _)
 
-    var frontier = starts.localCheckpoint(true)
-    var out = frontier
-    for (k <- 0 until length) {
-      // u(walk, k) mod degree — md5-derived, engine-portable
-      val u = conv(substring(md5(concat(col("walk_id").cast("string"),
-        lit(":"), lit(k).cast("string"))), 1, 8), 16, 10).cast("long")
-      frontier = frontier
-        .join(deg, frontier("vertex") === col("dsrc"))
-        .select(col("walk_id"), col("vertex").as("cur"), (u % col("d")).as("pick"))
-        .join(adj, col("cur") === col("asrc") && col("pick") === col("rn"))
-        .select(col("walk_id"), lit(k + 1).as("step"), col("adst").as("vertex"))
-        .transform(graft.core.Superstep.checkpoint(_, eager = true))
-      out = out.unionByName(frontier)
+      // every hop is part of the output, so each is pinned for the whole
+      // call rather than released as loop state
+      var frontier = s.pin(starts)
+      var out = frontier
+      s.upTo(length) { k =>
+        // u(walk, k) mod degree — md5-derived, engine-portable
+        val u = conv(substring(md5(concat(col("walk_id").cast("string"),
+          lit(":"), lit(k).cast("string"))), 1, 8), 16, 10).cast("long")
+        frontier = s.pin(frontier
+          .join(deg, frontier("vertex") === col("dsrc"))
+          .select(col("walk_id"), col("vertex").as("cur"), (u % col("d")).as("pick"))
+          .join(adj, col("cur") === col("asrc") && col("pick") === col("rn"))
+          .select(col("walk_id"), lit(k + 1).as("step"), col("adst").as("vertex")))
+        out = out.unionByName(frontier)
+        true
+      }
+      out
     }
-    out
-  }
 }

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** SALSA (Lempel & Moran 2000, "The stochastic approach for link-structure
   * analysis") — the third canonical web link-analysis operator beside
@@ -24,16 +23,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * Superstep shape: per iteration each chain is two equi-joins against a
   * once-persisted edge table with map-side partial sums — Θ(E) messages,
-  * no windows, no driver round-trips; loop state goes through
-  * [[graft.core.Superstep.checkpointReleasable]] so iteration t−1's blocks
-  * free as soon as t materializes. The edge table is persisted TWICE — once
+  * no windows, no driver round-trips; loop state goes through the
+  * [[graft.core.Superstep]] driver so iteration t−1's blocks free as soon
+  * as t materializes. The edge table is persisted TWICE — once
   * hash-partitioned on src, once on dst (the in-session analogue of storing
   * it dual-bucketed via [[graft.sources.BucketedEdges]]) — so all four
   * per-iteration joins reuse a persisted partitioning and only the Θ(V)
   * score tables cross the wire each iteration; previously the two dst-keyed
   * joins re-exchanged the Θ(E) edge table every iteration (round-5 VERDICT
-  * #3, wired in round 6). Both copies are released in a finally, so an
-  * abnormal exit cannot leak cached blocks into the rest of the session.
+  * #3, wired in round 6). The driver releases both copies on every exit,
+  * so an abnormal exit cannot leak cached blocks into the rest of the
+  * session.
   */
 object Salsa {
 
@@ -41,76 +41,60 @@ object Salsa {
     *              (multi-edges weight the walk, faithful to the chain).
     * @return (vertex, salsa_hub, salsa_authority): the chain distributions
     *         after `iterations` steps, 0.0 off each side's support. */
-  def run(spark: SparkSession, edges: DataFrame, iterations: Int = 8): DataFrame = {
-    require(iterations >= 1, s"need iterations >= 1, got $iterations")
-    // Dual-partitioned edge storage: eSrc feeds the two src-keyed joins,
-    // eDst the two dst-keyed ones — no per-iteration Exchange on the Θ(E)
-    // side of any join (round-5 VERDICT #3). eDst derives from the persisted
-    // eSrc so the upstream edge derivation runs once.
-    val eSrc = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eDst = eSrc.repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+  def run(spark: SparkSession, edges: DataFrame, iterations: Int = 8): DataFrame =
+    graft.core.Superstep.run("Salsa.run") { s =>
+      require(iterations >= 1, s"need iterations >= 1, got $iterations")
+      // Dual-partitioned edge storage: eSrc feeds the two src-keyed joins,
+      // eDst the two dst-keyed ones — no per-iteration Exchange on the Θ(E)
+      // side of any join (round-5 VERDICT #3). eDst derives from the persisted
+      // eSrc so the upstream edge derivation runs once.
+      val eSrc = s.persist(edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .repartition(col("src")))
+      val eDst = s.persist(eSrc.repartition(col("dst")))
       eDst.count() // materializes eSrc too (eDst reads through it)
 
-      val outd = eSrc.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("od"))
-        .localCheckpoint(true)
-      val ind = eDst.groupBy(col("dst").as("vertex")).agg(count(lit(1)).as("id"))
-        .localCheckpoint(true)
+      val outd = s.pin(eSrc.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("od")))
+      val ind = s.pin(eDst.groupBy(col("dst").as("vertex")).agg(count(lit(1)).as("id")))
       val nH = outd.count()
       val nA = ind.count()
-      val vertices = outd.select("vertex").union(ind.select("vertex")).distinct()
-        .localCheckpoint(true)
+      val vertices = s.pin(outd.select("vertex").union(ind.select("vertex")).distinct())
 
-      if (nH == 0L || nA == 0L) {
-        return vertices.select(col("vertex"),
-          lit(0.0).as("salsa_hub"), lit(0.0).as("salsa_authority"))
+      if (nH == 0L || nA == 0L)
+        vertices.select(col("vertex"), lit(0.0).as("salsa_hub"), lit(0.0).as("salsa_authority"))
+      else {
+        var auth = s.pin(ind.select(col("vertex"), lit(1.0 / nA).as("s")))
+        var hub = s.pin(outd.select(col("vertex"), lit(1.0 / nH).as("s")))
+        s.upTo(iterations) { _ =>
+          // authority chain: contribution s/indeg flows back to hubs, is
+          // outdeg-normalized there, and flows forward to authorities
+          val ca = auth.join(ind, "vertex").select(col("vertex").as("a"), (col("s") / col("id")).as("c"))
+          val hc = eDst.join(ca, eDst("dst") === ca("a"))
+            .groupBy(eDst("src").as("h")).agg(sum(col("c")).as("hv"))
+            .join(outd.select(col("vertex").as("h"), col("od")), "h")
+            .select(col("h"), (col("hv") / col("od")).as("c"))
+          val authNext = eSrc.join(hc, eSrc("src") === hc("h"))
+            .groupBy(eSrc("dst").as("vertex")).agg(sum(col("c")).as("s"))
+
+          // hub chain: the mirror image (forward first, then back)
+          val ch = hub.join(outd, "vertex").select(col("vertex").as("h"), (col("s") / col("od")).as("c"))
+          val ac = eSrc.join(ch, eSrc("src") === ch("h"))
+            .groupBy(eSrc("dst").as("a")).agg(sum(col("c")).as("av"))
+            .join(ind.select(col("vertex").as("a"), col("id")), "a")
+            .select(col("a"), (col("av") / col("id")).as("c"))
+          val hubNext = eDst.join(ac, eDst("dst") === ac("a"))
+            .groupBy(eDst("src").as("vertex")).agg(sum(col("c")).as("s"))
+
+          auth = s.state(authNext, eager = true)
+          hub = s.state(hubNext, eager = true)
+          true
+        }
+
+        vertices
+          .join(hub.select(col("vertex"), col("s").as("salsa_hub")), Seq("vertex"), "left")
+          .join(auth.select(col("vertex"), col("s").as("salsa_authority")), Seq("vertex"), "left")
+          .select(col("vertex"),
+            coalesce(col("salsa_hub"), lit(0.0)).as("salsa_hub"),
+            coalesce(col("salsa_authority"), lit(0.0)).as("salsa_authority"))
       }
-
-      var auth = ind.select(col("vertex"), lit(1.0 / nA).as("s")).localCheckpoint(true)
-      var hub = outd.select(col("vertex"), lit(1.0 / nH).as("s")).localCheckpoint(true)
-      var releasePrev: () => Unit = () => ()
-
-      for (_ <- 1 to iterations) {
-        // authority chain: contribution s/indeg flows back to hubs, is
-        // outdeg-normalized there, and flows forward to authorities
-        val ca = auth.join(ind, "vertex").select(col("vertex").as("a"), (col("s") / col("id")).as("c"))
-        val hc = eDst.join(ca, eDst("dst") === ca("a"))
-          .groupBy(eDst("src").as("h")).agg(sum(col("c")).as("hv"))
-          .join(outd.select(col("vertex").as("h"), col("od")), "h")
-          .select(col("h"), (col("hv") / col("od")).as("c"))
-        val authNext = eSrc.join(hc, eSrc("src") === hc("h"))
-          .groupBy(eSrc("dst").as("vertex")).agg(sum(col("c")).as("s"))
-
-        // hub chain: the mirror image (forward first, then back)
-        val ch = hub.join(outd, "vertex").select(col("vertex").as("h"), (col("s") / col("od")).as("c"))
-        val ac = eSrc.join(ch, eSrc("src") === ch("h"))
-          .groupBy(eSrc("dst").as("a")).agg(sum(col("c")).as("av"))
-          .join(ind.select(col("vertex").as("a"), col("id")), "a")
-          .select(col("a"), (col("av") / col("id")).as("c"))
-        val hubNext = eDst.join(ac, eDst("dst") === ac("a"))
-          .groupBy(eDst("src").as("vertex")).agg(sum(col("c")).as("s"))
-
-        val (aCk, relA) = graft.core.Superstep.checkpointReleasable(authNext, eager = true)
-        val (hCk, relH) = graft.core.Superstep.checkpointReleasable(hubNext, eager = true)
-        releasePrev()
-        releasePrev = () => { relA(); relH() }
-        auth = aCk; hub = hCk
-      }
-
-      vertices
-        .join(hub.select(col("vertex"), col("s").as("salsa_hub")), Seq("vertex"), "left")
-        .join(auth.select(col("vertex"), col("s").as("salsa_authority")), Seq("vertex"), "left")
-        .select(col("vertex"),
-          coalesce(col("salsa_hub"), lit(0.0)).as("salsa_hub"),
-          coalesce(col("salsa_authority"), lit(0.0)).as("salsa_authority"))
-    } finally {
-      // release on every exit path (incl. a throwing iteration — round-5
-      // ADVICE: dead persisted blocks must not outlive the call)
-      eSrc.unpersist(blocking = false)
-      eDst.unpersist(blocking = false)
     }
-  }
 }

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * candidate neighbors (min-aggregated map-side), anti-joined against the
   * settled set; converges in eccentricity(source) supersteps (each a
   * constant number of hash-partitioned exchanges — no global funnel).
-  * Loop state goes through [[graft.core.Superstep.checkpoint]], keeping the
-  * logical plan O(1) across supersteps. Returns (vertex, dist) for
-  * REACHABLE vertices only — at web scale the unreachable complement is the
-  * overwhelming majority and materializing it would be wasteful; left-join
-  * downstream if absent-means-infinity semantics are needed.
+  * Loop state goes through the [[graft.core.Superstep]] driver, keeping the
+  * logical plan O(1) across supersteps and freeing dead supersteps.
+  * Returns (vertex, dist) for REACHABLE vertices only — at web scale the
+  * unreachable complement is the overwhelming majority and materializing
+  * it would be wasteful; left-join downstream if absent-means-infinity
+  * semantics are needed.
   */
 object ShortestPaths {
 
@@ -45,98 +46,100 @@ object ShortestPaths {
   def weighted(spark: SparkSession, edges: DataFrame, source: Long,
                weightCol: String = "weight", fixedIters: Option[Int] = None,
                maxIters: Int = 256): DataFrame = fixedIters match {
-    case Some(n) =>
+    case Some(n) => graft.core.Superstep.run("ShortestPaths.weighted") { s =>
       import spark.implicits._
-      val bi = biweighted(edges, weightCol)
-      var dist = Seq((source, 0.0)).toDF("vertex", "dist")
-        .transform(graft.core.Superstep.checkpoint(_, eager = true))
-      for (_ <- 0 until n) {
+      val bi = s.pin(biweighted(edges, weightCol))
+      var dist = s.state(Seq((source, 0.0)).toDF("vertex", "dist"), eager = true)
+      s.upTo(n) { _ =>
         val relaxed = dist.join(bi, dist("vertex") === bi("src"))
           .select(bi("dst").as("vertex"), (dist("dist") + bi("w")).as("dist"))
-        dist = graft.core.Superstep.checkpoint(
+        dist = s.state(
           dist.unionByName(relaxed).groupBy("vertex").agg(min(col("dist")).as("dist")),
           eager = true)
+        true
       }
       dist
+    }
     case None => weightedDelta(spark, edges, source, weightCol, maxIters).dist
   }
 
   /** Delta-frontier mode with the superstep count exposed (see [[weighted]]). */
   def weightedDelta(spark: SparkSession, edges: DataFrame, source: Long,
-                    weightCol: String = "weight", maxIters: Int = 256): Sssp = {
-    import spark.implicits._
-    val bi = biweighted(edges, weightCol)
-    var dist = Seq((source, 0.0)).toDF("vertex", "dist")
-      .transform(graft.core.Superstep.checkpoint(_, eager = true))
-    var delta = dist
-    var it = 0
-    var done = false
-    while (!done) {
-      // relax only the vertices that improved last superstep
-      val cand = delta.join(bi, delta("vertex") === bi("src"))
-        .select(bi("dst").as("vertex"), (delta("dist") + bi("w")).as("cd"))
-        .groupBy("vertex").agg(min(col("cd")).as("cd"))
-      val improved = graft.core.Superstep.checkpoint(
-        cand.join(dist, Seq("vertex"), "left")
-          .where(col("dist").isNull || col("cd") < col("dist"))
-          .select(col("vertex"), col("cd").as("dist")))
-      if (improved.count() == 0L) done = true
-      else {
-        it += 1
-        if (it >= maxIters)
-          throw new IllegalStateException(
-            s"weighted SSSP still improving after $maxIters supersteps — " +
-              "raise maxIters (deep weighted paths) instead of truncating distances")
-        // lazy checkpoint: the merge materializes inside the next
-        // superstep's count, keeping ~1 extra job per superstep
-        dist = graft.core.Superstep.checkpoint(
-          dist.unionByName(improved).groupBy("vertex").agg(min(col("dist")).as("dist")))
-        delta = improved
+                    weightCol: String = "weight", maxIters: Int = 256): Sssp =
+    graft.core.Superstep.run("ShortestPaths.weightedDelta") { s =>
+      import spark.implicits._
+      val bi = s.pin(biweighted(edges, weightCol))
+      var dist = s.state(Seq((source, 0.0)).toDF("vertex", "dist"), eager = true)
+      var delta = dist
+      // a cap below the weighted hop depth throws: a silently truncated
+      // distance is a wrong answer, not a partial one
+      val steps = s.loop(maxIters) { _ =>
+        // relax only the vertices that improved last superstep
+        val cand = delta.join(bi, delta("vertex") === bi("src"))
+          .select(bi("dst").as("vertex"), (delta("dist") + bi("w")).as("cd"))
+          .groupBy("vertex").agg(min(col("cd")).as("cd"))
+        val improved = s.state(
+          cand.join(dist, Seq("vertex"), "left")
+            .where(col("dist").isNull || col("cd") < col("dist"))
+            .select(col("vertex"), col("cd").as("dist")))
+        val more = improved.count() > 0L
+        if (more) {
+          // lazy checkpoint: the merge materializes inside the next
+          // superstep's count, keeping ~1 extra job per superstep
+          dist = s.state(
+            dist.unionByName(improved).groupBy("vertex").agg(min(col("dist")).as("dist")))
+          delta = improved
+        }
+        more
       }
+      Sssp(dist, steps.size - 1)
     }
-    Sssp(dist, it)
-  }
 
   private def biweighted(edges: DataFrame, weightCol: String): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
         col(weightCol).cast("double").as("w"))
       .where(col("src") =!= col("dst"))
     e0.union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .localCheckpoint(true)
   }
 
   def hops(spark: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 64): DataFrame = {
     import spark.implicits._
-    val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
     // parallel edges are harmless under the min-aggregate — no distinct
-    val bi = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-
-    var settled = Seq((source, 0L)).toDF("vertex", "dist")
-      .transform(graft.core.Superstep.checkpoint(_, eager = true))
-    var frontier = settled
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val cand = frontier.join(bi, frontier("vertex") === bi("src"))
-        .select(bi("dst").as("vertex"), (frontier("dist") + lit(1L)).as("dist"))
-        .groupBy("vertex").agg(min(col("dist")).as("dist"))
-      // 1-job-per-superstep discipline: lazy checkpoints, materialized by
-      // the single count() (the settled union folds into the next
-      // superstep's first action)
-      val next = graft.core.Superstep.checkpoint(
-        cand.join(settled.select("vertex"), Seq("vertex"), "left_anti"))
-      if (next.count() == 0L) done = true
-      else {
-        settled = graft.core.Superstep.checkpoint(settled.unionByName(next))
-        frontier = next
-        it += 1
-      }
-    }
-    settled
+    frontierBfs(spark, "ShortestPaths.hops", edges, maxIter, Seq("vertex"),
+      Seq((source, 0L)).toDF("vertex", "dist"))
   }
+
+  /** Frontier BFS shared by [[hops]] and [[multiHops]]: `keys` identify a
+    * settled row (the vertex, plus the source for multi-source runs). */
+  private def frontierBfs(spark: SparkSession, op: String, edges: DataFrame, maxIter: Int,
+                          keys: Seq[String], seeds: DataFrame): DataFrame =
+    graft.core.Superstep.run(op) { s =>
+      val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .where(col("src") =!= col("dst"))
+      val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))))
+
+      var settled = s.state(seeds, eager = true)
+      var frontier = settled
+      // maxIter is a budget the SQL twins replay (depth 40), not a cap
+      s.upTo(maxIter) { _ =>
+        val cand = frontier.join(bi, frontier("vertex") === bi("src"))
+          .select(keys.filter(_ != "vertex").map(frontier(_)) ++ Seq(bi("dst").as("vertex"),
+            (frontier("dist") + lit(1L)).as("dist")): _*)
+          .groupBy(keys.map(col): _*).agg(min(col("dist")).as("dist"))
+        // 1-job-per-superstep discipline: lazy checkpoints, materialized by
+        // the single count() (the settled union folds into the next
+        // superstep's first action)
+        val next = s.state(cand.join(settled.select(keys.map(col): _*), keys, "left_anti"))
+        val more = next.count() > 0L
+        if (more) {
+          settled = s.state(settled.unionByName(next))
+          frontier = next
+        }
+        more
+      }
+      settled
+    }
 
   /** Multi-source BFS: [[hops]] generalized to a source SET in one run —
     * the state/frontier key is (source, vertex), so k sources cost one
@@ -150,30 +153,7 @@ object ShortestPaths {
                 maxIter: Int = 64): DataFrame = {
     import spark.implicits._
     require(sources.nonEmpty)
-    val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
-    val bi = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-
-    var settled = sources.map(s => (s, s, 0L)).toDF("source", "vertex", "dist")
-      .transform(graft.core.Superstep.checkpoint(_, eager = true))
-    var frontier = settled
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val cand = frontier.join(bi, frontier("vertex") === bi("src"))
-        .select(frontier("source").as("source"), bi("dst").as("vertex"),
-          (frontier("dist") + lit(1L)).as("dist"))
-        .groupBy("source", "vertex").agg(min(col("dist")).as("dist"))
-      val next = graft.core.Superstep.checkpoint(
-        cand.join(settled.select("source", "vertex"), Seq("source", "vertex"), "left_anti"))
-      if (next.count() == 0L) done = true
-      else {
-        settled = graft.core.Superstep.checkpoint(settled.unionByName(next))
-        frontier = next
-        it += 1
-      }
-    }
-    settled
+    frontierBfs(spark, "ShortestPaths.multiHops", edges, maxIter, Seq("source", "vertex"),
+      sources.map(s => (s, s, 0L)).toDF("source", "vertex", "dist"))
   }
 }

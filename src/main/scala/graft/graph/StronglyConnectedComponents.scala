@@ -24,15 +24,15 @@ import org.apache.spark.sql.functions._
   * and repeats on the residual subgraph. With ids uncorrelated with
   * topology the expected outer depth is logarithmic; a pathological
   * monotone chain degrades to linear, so the round cap THROWS rather than
-  * returning a silently partial answer (the Truss discipline).
+  * returning a silently partial answer.
   *
   * Scale shape: each fixpoint superstep is one equi-join of the label
   * state against the once-persisted edge table + a map-side-combined min
   * aggregate — Θ(E) messages, no windows, no collects; convergence is
   * detected by the monotone sum(label) aggregate (labels only decrease),
   * one scalar read per superstep, the CC discipline. Loop state flows
-  * through Superstep.checkpointReleasable so superstep t−1's blocks free
-  * as soon as t lands.
+  * through the [[graft.core.Superstep]] driver so superstep t−1's blocks
+  * free as soon as t lands.
   */
 object StronglyConnectedComponents {
 
@@ -40,118 +40,96 @@ object StronglyConnectedComponents {
     *              never changes strong connectivity).
     * @return (vertex, scc) — scc = the minimum vertex id of v's SCC. */
   def run(spark: SparkSession, edges: DataFrame,
-          maxOuter: Int = 64, maxInner: Int = 256): DataFrame = {
-    val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
+          maxOuter: Int = 64, maxInner: Int = 256): DataFrame =
+    graft.core.Superstep.run("StronglyConnectedComponents.run") { s =>
+      val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .where(col("src") =!= col("dst")).distinct()
 
-    // vertex set from the RAW edges: a vertex incident only to self-loops
-    // is still its own (singleton) SCC and must appear in the output
-    val eAll = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    var (e, relE) = graft.core.Superstep.checkpointReleasable(e0, eager = true)
-    var (verts, relV) = graft.core.Superstep.checkpointReleasable(
-      eAll.select(col("src").as("vertex")).union(eAll.select(col("dst").as("vertex"))).distinct(),
-      eager = true)
-    var nLeft = verts.count()
+      // vertex set from the RAW edges: a vertex incident only to self-loops
+      // is still its own (singleton) SCC and must appear in the output
+      val eAll = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      var e = s.state(e0, eager = true)
+      var verts = s.state(
+        eAll.select(col("src").as("vertex")).union(eAll.select(col("dst").as("vertex"))).distinct(),
+        eager = true)
+      var nLeft = verts.count()
+      var result = spark.range(0).select(col("id").as("vertex"), col("id").as("scc"))
 
-    var result = spark.range(0).select(col("id").as("vertex"), col("id").as("scc"))
-    var relResult: () => Unit = () => ()
-    var outer = 0
-    while (nLeft > 0L) {
-      // ---- trim phase (FW-BW trim, Fleischer et al. §3): a vertex with no
+      /** Moves the resolved `(vertex, scc)` rows into the result and shrinks
+        * the residual graph to the vertex set `rest`. */
+      def peel(resolved: DataFrame, rest: DataFrame): Unit = {
+        result = s.state(result.unionByName(resolved), eager = true)
+        e = s.state(
+          e.join(rest.select(col("vertex").as("src")), Seq("src"), "left_semi")
+            .join(rest.select(col("vertex").as("dst")), Seq("dst"), "left_semi")
+            .select("src", "dst"),
+          eager = true)
+        verts = rest
+      }
+
+      // Trim phase (FW-BW trim, Fleischer et al. §3): a vertex with no
       // in-edge or no out-edge in the residual graph lies on no cycle, so it
       // is its own singleton SCC — peel iteratively to a fixpoint before
       // paying a forward/backward label fixpoint. On crawl graphs this
       // removes the IN/OUT tendril mass that dominates the bowtie; on the
       // pathological monotone chain (every vertex a singleton) it resolves
       // the WHOLE graph at two vertices per pass, where one FW-BW round
-      // resolved a single vertex (round-5 VERDICT #6).
-      var trimming = true
-      while (trimming && nLeft > 0L) {
-        val inner = e.select(col("src")).intersect(e.select(col("dst")).toDF("src"))
-          .toDF("vertex") // vertices with BOTH an in- and an out-edge
-        val (innerCk, relInner) = graft.core.Superstep.checkpointReleasable(inner, eager = true)
-        val nInner = innerCk.count()
-        if (nInner == nLeft) { relInner(); trimming = false }
-        else {
-          val trimmed = verts.join(innerCk, Seq("vertex"), "left_anti")
-            .select(col("vertex"), col("vertex").as("scc"))
-          val (res, relRes) = graft.core.Superstep.checkpointReleasable(
-            result.unionByName(trimmed), eager = true)
-          val (eNext, relEN) = graft.core.Superstep.checkpointReleasable(
-            e.join(innerCk.select(col("vertex").as("src")), Seq("src"), "left_semi")
-              .join(innerCk.select(col("vertex").as("dst")), Seq("dst"), "left_semi")
-              .select("src", "dst"),
-            eager = true)
-          relResult(); relE(); relV()
-          result = res; relResult = relRes
-          e = eNext; relE = relEN
-          verts = innerCk; relV = relInner
+      // resolved a single vertex (round-5 VERDICT #6). Every continuing pass
+      // peels at least one vertex, so nLeft + 1 passes always suffice.
+      def trim(): Unit = if (nLeft > 0L) s.loop(math.min(nLeft + 1, Int.MaxValue).toInt) { _ =>
+        val inner = s.state(e.select(col("src")).intersect(e.select(col("dst")).toDF("src"))
+          .toDF("vertex"), eager = true) // vertices with BOTH an in- and an out-edge
+        val nInner = inner.count()
+        val trimmed = nInner != nLeft
+        if (trimmed) {
+          peel(verts.join(inner, Seq("vertex"), "left_anti")
+            .select(col("vertex"), col("vertex").as("scc")), inner)
           nLeft = nInner
         }
+        trimmed && nLeft > 0L
       }
-      if (nLeft == 0L) { relE(); relV(); return result }
 
-      if (outer >= maxOuter)
-        throw new IllegalStateException(
-          s"SCC did not resolve in $maxOuter outer rounds ($nLeft vertices left) — " +
-            "pathological monotone-chain topology; raise maxOuter")
-
-      val (fwd, relFwd) = minLabelFixpoint(verts, e, maxInner) // (vertex, lbl=F)
-      val (bwd, relBwd) = minLabelFixpoint(verts,
-        e.select(col("dst").as("src"), col("src").as("dst")), maxInner) // (vertex, lbl=B)
-      val resolved = fwd.join(bwd.withColumnRenamed("lbl", "b"), "vertex")
-        .where(col("lbl") === col("b"))
-        .select(col("vertex"), col("lbl").as("scc"))
-      val (res, relRes) = graft.core.Superstep.checkpointReleasable(
-        result.unionByName(resolved), eager = true)
-      val (vNext, relVN) = graft.core.Superstep.checkpointReleasable(
-        verts.join(resolved.select("vertex"), Seq("vertex"), "left_anti"), eager = true)
-      val (eNext, relEN) = graft.core.Superstep.checkpointReleasable(
-        e.join(vNext.select(col("vertex").as("src")), Seq("src"), "left_semi")
-          .join(vNext.select(col("vertex").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst"),
-        eager = true)
-      relE(); relV(); relResult(); relFwd(); relBwd()
-      result = res; relResult = relRes
-      e = eNext; relE = relEN
-      verts = vNext; relV = relVN
-      nLeft = verts.count()
-      outer += 1
+      trim()
+      if (nLeft > 0L) s.loop(maxOuter) { _ =>
+        val fwd = minLabelFixpoint(verts, e, maxInner) // (vertex, lbl=F)
+        val bwd = minLabelFixpoint(verts,
+          e.select(col("dst").as("src"), col("src").as("dst")), maxInner) // (vertex, lbl=B)
+        val resolved = fwd.join(bwd.withColumnRenamed("lbl", "b"), "vertex")
+          .where(col("lbl") === col("b"))
+          .select(col("vertex"), col("lbl").as("scc"))
+        peel(resolved,
+          s.state(verts.join(resolved.select("vertex"), Seq("vertex"), "left_anti"), eager = true))
+        nLeft = verts.count()
+        trim()
+        nLeft > 0L
+      }
+      result
     }
-    relE(); relV()
-    result // final checkpoint stays live for the caller
-  }
 
   /** Min-label propagation to fixpoint: lbl(v) = min over {v} ∪ in-edges'
     * labels, iterated until the monotone sum(lbl) stops decreasing (labels
-    * only shrink, so one scalar per superstep detects the fixpoint).
-    * Returns the state plus its checkpoint-release handle. */
-  private def minLabelFixpoint(verts: DataFrame, e: DataFrame,
-                               maxInner: Int): (DataFrame, () => Unit) = {
-    // Sum labels as DECIMAL(38,0): a LongType sum would wrap silently in
-    // non-ANSI configurations once Σlabels > Long.MaxValue (reachable with
-    // large hashed vertex ids), and a wrapped collision would declare a
-    // premature fixpoint with wrong labels (round-5 ADVICE).
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-    var (state, release) = graft.core.Superstep.checkpointReleasable(
-      verts.select(col("vertex"), col("vertex").as("lbl")), eager = true)
-    var prevSum = lblSum(state)
-    var it = 0
-    while (it < maxInner) {
-      val msgs = e.join(state, e("src") === state("vertex"))
-        .select(e("dst").as("vertex"), col("lbl"))
-      val merged = state.unionByName(msgs)
-        .groupBy("vertex").agg(min(col("lbl")).as("lbl"))
-      val (next, rel) = graft.core.Superstep.checkpointReleasable(merged, eager = true)
-      val s = lblSum(next)
-      release(); state = next; release = rel
-      it += 1
-      if (s.compareTo(prevSum) == 0) return (state, release)
-      prevSum = s
+    * only shrink, so one scalar per superstep detects the fixpoint). */
+  private def minLabelFixpoint(verts: DataFrame, e: DataFrame, maxInner: Int): DataFrame =
+    graft.core.Superstep.run("StronglyConnectedComponents.minLabelFixpoint") { s =>
+      // Sum labels as DECIMAL(38,0): a LongType sum would wrap silently in
+      // non-ANSI configurations once Σlabels > Long.MaxValue (reachable with
+      // large hashed vertex ids), and a wrapped collision would declare a
+      // premature fixpoint with wrong labels (round-5 ADVICE).
+      def lblSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
+      var state = s.state(verts.select(col("vertex"), col("vertex").as("lbl")), eager = true)
+      var prevSum = lblSum(state)
+      s.loop(maxInner) { _ =>
+        val msgs = e.join(state, e("src") === state("vertex"))
+          .select(e("dst").as("vertex"), col("lbl"))
+        state = s.state(state.unionByName(msgs)
+          .groupBy("vertex").agg(min(col("lbl")).as("lbl")), eager = true)
+        val sum = lblSum(state)
+        val changed = sum.compareTo(prevSum) != 0
+        prevSum = sum
+        changed
+      }
+      state
     }
-    throw new IllegalStateException(
-      s"SCC min-label propagation did not reach a fixpoint in $maxInner supersteps")
-  }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * edges' support, so peeling is monotone and terminates in ≤ m rounds
   * (in practice a handful). Every round is scan + equi-join + partial
   * aggregate (AQE free to broadcast the shrinking edge set); loop-carried
-  * state goes through Superstep.checkpointReleasable so dead rounds free
-  * their shuffle/cache blocks immediately.
+  * state goes through the [[graft.core.Superstep]] driver so dead rounds
+  * free their blocks immediately and the round cap throws.
   */
 object Truss {
 
@@ -27,20 +27,15 @@ object Truss {
     * @param edges (src, dst) any orientation; self-loops/duplicates ignored.
     * @return (a, b, support) with a < b — the surviving undirected edges and
     *         the number of triangles each closes within the truss. */
-  def truss(spark: SparkSession, edges: DataFrame, k: Int, maxIter: Int = 64): DataFrame = {
-    require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val minSup = (k - 2).toLong
+  def truss(spark: SparkSession, edges: DataFrame, k: Int, maxIter: Int = 64): DataFrame =
+    graft.core.Superstep.run("Truss.truss") { s =>
+      require(k >= 3, s"k-truss needs k >= 3, got $k")
+      val minSup = (k - 2).toLong
 
-    var (ed, release) = graft.core.Superstep.checkpointReleasable(
-      TriangleCount.canonicalEdges(edges), eager = true)
-    var n = ed.count()
-    var it = 0
-    var result: DataFrame = null
-    try {
-      while (result == null) {
-        if (it >= maxIter)
-          throw new IllegalStateException(
-            s"truss(k=$k) did not reach a fixpoint in $maxIter peeling rounds")
+      var ed = s.state(TriangleCount.canonicalEdges(edges), eager = true)
+      var n = ed.count()
+      var ws: DataFrame = null
+      s.loop(maxIter) { _ =>
         // per-edge support: every triangle (a<b<c) supports its three edges
         // (ed is already canonical; the rename just satisfies the src/dst
         // input contract — re-canonicalization inside is a no-op)
@@ -52,30 +47,16 @@ object Truss {
             struct(col("b").as("x"), col("c").as("y")))).as("e"))
           .select(col("e.x").as("a"), col("e.y").as("b"))
         val sup = triEdges.groupBy("a", "b").agg(count(lit(1)).as("support"))
-        val withSup = ed.join(sup, Seq("a", "b"), "left")
-          .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
-        val (ws, relWs) = graft.core.Superstep.checkpointReleasable(withSup, eager = true)
-        try {
-          val kept = ws.where(col("support") >= minSup)
-          val nKept = kept.count()
-          if (nKept == n) { // fixpoint: ws's support reflects the final edge set
-            release() // ed is dead; ws's blocks stay live for the caller
-            result = ws
-          } else {
-            val (next, relNext) = graft.core.Superstep.checkpointReleasable(
-              kept.select("a", "b"), eager = true)
-            release(); relWs()
-            ed = next; release = relNext; n = nKept; it += 1
-          }
-        } catch {
-          // free this round's support checkpoint on abnormal exit (round-5
-          // ADVICE: the maxIter/throw path must not leak live blocks)
-          case t: Throwable => relWs(); throw t
-        }
+        ws = s.state(ed.join(sup, Seq("a", "b"), "left")
+          .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support")),
+          eager = true)
+        val kept = ws.where(col("support") >= minSup)
+        val nKept = kept.count()
+        // at the fixpoint ws's support reflects the final edge set
+        val peeled = nKept != n
+        if (peeled) { ed = s.state(kept.select("a", "b"), eager = true); n = nKept }
+        peeled
       }
-      result
-    } catch {
-      case t: Throwable => release(); throw t // frees the live ed checkpoint
+      ws
     }
-  }
 }

@@ -37,40 +37,35 @@ object OracleCalibration {
     * every smaller-order neighbor is dead (vacuously, if it has none).
     * @param bi  (u, v) bi-directed adjacency (distinct pairs)
     * @param ord (v, pos) visiting order */
-  def misDepth(spark: SparkSession, bi: DataFrame, ord: DataFrame, cap: Int = 64): Int = {
-    val nb = bi
-      .join(ord.select(col("v").as("u"), col("pos").as("pu")), "u")
-      .join(ord.select(col("v"), col("pos").as("pv")), "v")
-      .where(col("pv") < col("pu"))
-      .select(col("u"), col("v"))
-      .localCheckpoint(true)
-    var st = ord.select(col("v").as("vertex"), lit(0).as("status")).localCheckpoint(true)
-    var depth = 0
-    var changed = true
-    var releasePrev: () => Unit = () => ()
-    while (changed && depth < cap) {
-      val agg = nb.join(st.select(col("vertex").as("v"), col("status").as("ns")), "v")
-        .groupBy(col("u"))
-        .agg(max(when(col("ns") === 1, 1).otherwise(0)).as("any_seed"),
-          min(when(col("ns") === 2, 1).otherwise(0)).as("all_dead"))
-      val next = st.join(agg, st("vertex") === agg("u"), "left")
-        .select(st("vertex"),
-          when(col("status") =!= 0, col("status"))
-            .when(col("any_seed") === 1, lit(2))
-            .when(coalesce(col("all_dead"), lit(1)) === 1, lit(1)) // no smaller nbrs -> seed
-            .otherwise(lit(0)).as("status"),
-          col("status").as("old"))
-      val (ck, release) = graft.core.Superstep.checkpointReleasable(next)
-      val moves = ck.agg(count(when(col("status") =!= col("old"), lit(1)))).head().getLong(0)
-      releasePrev()
-      releasePrev = release
-      st = ck.select(col("vertex"), col("status"))
-      changed = moves > 0
-      if (changed) depth += 1
+  def misDepth(spark: SparkSession, bi: DataFrame, ord: DataFrame, cap: Int = 64): Int =
+    graft.core.Superstep.run("OracleCalibration.misDepth") { s =>
+      val nb = s.pin(bi
+        .join(ord.select(col("v").as("u"), col("pos").as("pu")), "u")
+        .join(ord.select(col("v"), col("pos").as("pv")), "v")
+        .where(col("pv") < col("pu"))
+        .select(col("u"), col("v")))
+      var st = s.pin(ord.select(col("v").as("vertex"), lit(0).as("status")))
+      var depth = 0
+      // the probe's cap is a budget: the guard compares the depth it reports
+      s.upTo(cap) { _ =>
+        val agg = nb.join(st.select(col("vertex").as("v"), col("status").as("ns")), "v")
+          .groupBy(col("u"))
+          .agg(max(when(col("ns") === 1, 1).otherwise(0)).as("any_seed"),
+            min(when(col("ns") === 2, 1).otherwise(0)).as("all_dead"))
+        val ck = s.state(st.join(agg, st("vertex") === agg("u"), "left")
+          .select(st("vertex"),
+            when(col("status") =!= 0, col("status"))
+              .when(col("any_seed") === 1, lit(2))
+              .when(coalesce(col("all_dead"), lit(1)) === 1, lit(1)) // no smaller nbrs -> seed
+              .otherwise(lit(0)).as("status"),
+            col("status").as("old")))
+        val moves = ck.agg(count(when(col("status") =!= col("old"), lit(1)))).head().getLong(0)
+        st = ck.select(col("vertex"), col("status"))
+        if (moves > 0) depth += 1
+        moves > 0
+      }
+      depth
     }
-    releasePrev()
-    depth
-  }
 
   /** Measure every calibrated depth over the given thresholded edge table
     * (src, dst, weight) — the same table the catalog queries run on — and

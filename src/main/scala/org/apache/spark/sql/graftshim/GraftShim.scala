@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Access shim for `private[sql]` bridge API (the usual pattern for Spark
   * extension libraries): Column <-> catalyst Expression conversion, needed to
@@ -18,42 +20,26 @@ object GraftShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
 
-  /** `localCheckpoint` that also resets plan STATISTICS, for loop-carried
-    * superstep state.
+  private def classic(df: DataFrame) =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+
+  /** The RDDs that `df`'s analyzed plan scans directly (its `LogicalRDD`
+    * leaves — e.g. local checkpoints). */
+  def scannedRdds(df: DataFrame): Seq[RDD[_]] =
+    classic(df).queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+
+  /** `localCheckpoint` that also resets plan STATISTICS; returns the new
+    * frame and the checkpointed RDD (unpersist it to free the blocks).
     *
     * `Dataset.localCheckpoint` truncates the logical plan to a `LogicalRDD`
     * but copies the pre-checkpoint plan's estimated `Statistics` into it.
-    * In an iterative loop whose state appears k times in the next step's
-    * plan, `sizeInBytes` therefore compounds to (2^63)^(k^step) — a BigInt
-    * whose DIGIT COUNT grows exponentially with the superstep number, until
-    * the driver stalls for minutes inside BigInteger multiplication during
-    * stats estimation (measured: a 4-reference loop becomes unusable at
-    * ~10 supersteps). Rebuilding the frame over the checkpointed RDD drops
-    * the inherited stats; AQE re-plans joins from true runtime sizes anyway.
-    */
-  def localCheckpointResetStats(df: org.apache.spark.sql.DataFrame,
-                                eager: Boolean): org.apache.spark.sql.DataFrame =
-    localCheckpointResetStatsReleasable(df, eager)._1
-
-  /** [[localCheckpointResetStats]] plus a release thunk that UNPERSISTS the
-    * checkpointed blocks. A superstep loop that checkpoints new state every
-    * iteration otherwise accumulates every previous step's blocks until the
-    * ContextCleaner gets around to them — with a large driver heap GC (and
-    * hence the cleaner) runs rarely, and the memory store's eviction churn
-    * shows up as progressively slower supersteps late in a run. Call the
-    * thunk only once NOTHING will read that state again (a localCheckpoint
-    * has no lineage to recompute from): i.e. release step k-1 after step
-    * k's checkpoint has fully materialized. */
-  def localCheckpointResetStatsReleasable(df: org.apache.spark.sql.DataFrame,
-                                          eager: Boolean)
-      : (org.apache.spark.sql.DataFrame, () => Unit) = {
-    val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val ck = classic.localCheckpoint(eager)
-    val handle = ck.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
+    * Rebuilding the frame over the checkpointed RDD drops them (and the
+    * output partitioning with them); AQE re-plans joins from true runtime
+    * sizes anyway. */
+  def checkpointWithoutStats(df: DataFrame, eager: Boolean): (DataFrame, RDD[_]) = {
+    val ck = classic(df).localCheckpoint(eager)
     val out = ck.sparkSession.internalCreateDataFrame(
       ck.queryExecution.toRdd, ck.schema, isStreaming = false)
-    (out, () => handle.foreach(_.unpersist(blocking = false)))
+    (out, scannedRdds(ck).head)
   }
 }

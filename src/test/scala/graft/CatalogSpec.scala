@@ -18,7 +18,7 @@ class CatalogSpec extends AnyFunSuite {
   test("README and SURVEY query counts match the catalog") {
     val n = SparkEntry.queries.size
     val pat = """(\d+)-query catalog""".r
-    Seq("README.md", "SURVEY.md").foreach { f =>
+    Seq("README.md", "SURVEY.md", ".claude/skills/verify/SKILL.md").foreach { f =>
       val text = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(f)), "UTF-8")
       val counts = pat.findAllMatchIn(text).map(_.group(1).toInt).toList

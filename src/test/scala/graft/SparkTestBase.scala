@@ -19,6 +19,10 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the "locally checkpointed … cannot be recomputed" WARN fires on every
+    // expected superstep release; keep the log for real warnings
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

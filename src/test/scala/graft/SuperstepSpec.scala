@@ -1,32 +1,75 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.core.Superstep
 
-/** Regression guard for the loop-state statistics blowup: plain
-  * localCheckpoint copies the pre-checkpoint plan's estimated sizeInBytes
-  * into the truncated plan, so a loop whose state feeds k places compounds
-  * the estimate to (2^63)^(k^step) and stats estimation eventually pins the
-  * driver in million-digit BigInteger math. Superstep.checkpoint must keep
-  * the estimate flat across passes. */
+/** The superstep driver's own contract: statistics reset, step release, the
+  * throwing cap, and the rule that no other code path checkpoints. */
 class SuperstepSpec extends SparkTestBase {
+  import spark.implicits._
 
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Plain localCheckpoint copies the pre-checkpoint plan's estimated
+    * sizeInBytes into the truncated plan, so a loop whose state feeds k
+    * places compounds the estimate to (2^63)^(k^step) and stats estimation
+    * eventually pins the driver in million-digit BigInteger math. */
   test("loop-state checkpoint resets inherited statistics") {
-    var comm = spark.range(10).toDF("v").localCheckpoint(true)
-    for (_ <- 1 to 8) {
-      val a = comm.select(col("v").as("a"))
-      val joined = a
-        .join(comm.select(col("v").as("b")), col("a") === col("b"))
-        .join(comm.select(col("v").as("c")), col("a") === col("c"))
-        .select(col("a").as("v"))
-      val next = Superstep.checkpoint(joined)
-      next.count()
-      comm = next
+    val before = persisted()
+    val bits = Superstep.run("SuperstepSpec") { s =>
+      var comm = s.pin(spark.range(10).toDF("v"))
+      s.upTo(8) { _ =>
+        // the pin plus the previous step's state, nothing older
+        assert((persisted() -- before).size <= 2)
+        val a = comm.select(col("v").as("a"))
+        comm = s.state(a
+          .join(comm.select(col("v").as("b")), col("a") === col("b"))
+          .join(comm.select(col("v").as("c")), col("a") === col("c"))
+          .select(col("a").as("v")))
+        comm.count()
+        true
+      }
+      assert(comm.count() == 10L)
+      comm.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
     }
-    val bits = comm.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
     // with inherited stats this is ~3^8 * 63 ≈ 413k bits; reset keeps it flat
     assert(bits < 128, s"sizeInBytes bitLength = $bits — stats are compounding again")
-    assert(comm.count() == 10L)
+    assert(persisted() == before, "an Int result reads nothing, so nothing may stay pinned")
+  }
+
+  private val path200 = (1L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
+
+  test("KCore.run's default cap throws on a 200-vertex path, naming the operator and step") {
+    val ex = intercept[IllegalStateException](graft.graph.KCore.run(spark, path200).collect())
+    assert(ex.getMessage.contains("KCore") && ex.getMessage.contains("step 64"), ex.getMessage)
+  }
+
+  test("KCore.run with a 128-step cap gives core 1 on every vertex of a 200-vertex path") {
+    val cores = graft.graph.KCore.run(spark, path200, maxIter = 128).collect()
+    assert(cores.length == 200)
+    assert(cores.forall(_.getLong(1) == 1L))
+  }
+
+  test("ConnectedComponents.run throws instead of returning a truncated labelling") {
+    val ex = intercept[IllegalStateException](
+      graft.graph.ConnectedComponents.run(spark, path200, maxIter = 1).collect())
+    assert(ex.getMessage.contains("ConnectedComponents"), ex.getMessage)
+  }
+
+  test("only the driver and the shim call localCheckpoint") {
+    val allowed = Set("Superstep.scala", "GraftShim.scala")
+    val banned = Seq(".localCheckpoint(", "checkpointReleasable", "localCheckpointResetStats")
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        banned.filter(text.contains).map(b => s"$p: $b")
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
