@@ -53,6 +53,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Superstep.quietReleases()
 
     val headline = Seq(
       "q_edges_build", "q_cc", "q_cluster_shape", "q_triangles",

@@ -34,6 +34,7 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Superstep.quietReleases()
 
     val loadBefore = loadavg1m()
     val warmDir = "/root/testdata/sf0.001"

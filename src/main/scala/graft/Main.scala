@@ -128,18 +128,9 @@ object Main {
 
   /** The reference tokenizes on both ',' and tab; a distributed reader needs
     * ONE separator, so sniff it from the header line. */
-  private def sniffSep(spark: SparkSession, path: String): String = {
-    val head = spark.sparkContext.textFile(path).first()
-    if (head.contains("\t")) "\t" else ","
-  }
-
-  /** End-to-end clustering run; returns the final assignments frame in
-    * output order — (object, cluster) or (object, cluster_rep, cluster) with
-    * `--out-representatives`. Separated from [[main]] so tests can compare
-    * results without touching the filesystem. */
-  private def readOptions(spark: SparkSession, cfg: Config): EdgeTableSource.Options =
+  private def readOptions(cfg: Config, header: String): EdgeTableSource.Options =
     EdgeTableSource.Options(
-      sep = sniffSep(spark, cfg.distances),
+      sep = if (header.contains("\t")) "\t" else ",",
       idCols = cfg.idCols,
       distanceCol = cfg.distanceCol,
       numericIds = cfg.numericIds,
@@ -150,14 +141,24 @@ object Main {
           max = Option(f.max).filter(_.isFinite))
       })
 
-  def execute(spark: SparkSession, cfg: Config): DataFrame =
-    execute(spark, cfg, EdgeTableSource.read(spark, cfg.distances, readOptions(spark, cfg)))
+  /** End-to-end clustering run; returns the final assignments frame in
+    * output order — (object, cluster) or (object, cluster_rep, cluster) with
+    * `--out-representatives`. Separated from [[main]] so tests can compare
+    * results without touching the filesystem. */
+  def execute(spark: SparkSession, cfg: Config): DataFrame = {
+    val header = EdgeTableSource.headerLine(spark, cfg.distances)
+    val opts = readOptions(cfg, header)
+    execute(spark, cfg, header,
+      EdgeTableSource.kept(EdgeTableSource.scan(spark, cfg.distances, opts, header), opts))
+  }
 
-  /** Variant taking the already-read (and possibly cached) filtered edge
-    * frame, so [[main]] can share ONE scan between the load report and the
-    * clustering run instead of re-reading the distance table. */
-  private[graft] def execute(spark: SparkSession, cfg: Config, rawEdges: DataFrame): DataFrame = {
-    val opts = readOptions(spark, cfg)
+  /** Variant taking the table's header line (read once, on the driver) and
+    * the already-read (and possibly cached) filtered edge frame, so [[main]]
+    * can share ONE scan between the load report and the clustering run
+    * instead of re-reading the distance table. */
+  private def execute(spark: SparkSession, cfg: Config, header: String,
+                      rawEdges: DataFrame): DataFrame = {
+    val opts = readOptions(cfg, header)
     val universe = cfg.objectsFile.map(EdgeTableSource.readObjects(spark, _))
 
     // Dictionary: objects-file rank order when present (reference seeds
@@ -172,13 +173,13 @@ object Main {
       case (true, Some(u)) =>
         (rawEdges, Some(Dictionary.buildFromRank(u)))
       case (true, None) =>
-        val fa = EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts)
+        val fa = EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)
         val d = fa.select(col("object").cast("long").as("object"), col("rank").as("vid"))
         (Dictionary.encodeEdges(rawEdges, d), Some(d))
       case (false, _) =>
         val d = universe.map(Dictionary.buildFromRank).getOrElse(
           Dictionary.buildFromRank(
-            EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts)))
+            EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)))
         (Dictionary.encodeEdges(rawEdges, d), Some(d))
     }
 
@@ -208,15 +209,12 @@ object Main {
       case other => throw new IllegalArgumentException(s"unknown --algo $other\n$usage")
     }
 
-    // decode vids → names, shape the output like the reference: size-renumber,
-    // append universe singletons, order by (cluster, representativeness)
+    // decode vids → names, shape the output like the reference: size-renumber
+    // and append universe singletons (one global rank), order by (cluster,
+    // representativeness)
     val named = Dictionary.decode(assignVid, dict.get, vidCol = "vertex")
       .select(col("object"), col("cluster"))
-    val renumbered = Shaping.renumberBySize(named).select(col("object"), col("cluster"))
-    val full = universe match {
-      case Some(u) => Shaping.appendSingletons(renumbered, u)
-      case None => renumbered
-    }
+    val full = Shaping.renumber(named, universe)
     universe match {
       case Some(u) =>
         val withRank = full.join(u, "object")
@@ -244,24 +242,12 @@ object Main {
     * diagnostics. Driver-dark by design (stdout diagnostics, not a catalog
     * row); the operators behind it are oracled via q_edge_stats /
     * q_weight_hist. */
-  private def printLoadReport(spark: SparkSession, cfg: Config,
-                              opts: EdgeTableSource.Options, filtered: DataFrame): Unit = {
-    val raw = EdgeTableSource.read(spark, cfg.distances,
-      opts.copy(filters = Nil, dropSelfLoops = false, distanceKind = EdgeOps.RawDistance))
-    // one aggregate job per frame: stack both endpoint columns, then
-    // count(*)/2 = edges and countDistinct = nodes in a single pass (the
-    // reference counts during its single load pass, console.cpp:106-110);
-    // `filtered` is the cached frame execute() reuses, so the filtered side
-    // costs no extra input scan
-    def stats(df: DataFrame): (Long, Long) = {
-      val row = df.select(col("src").as("v")).unionAll(df.select(col("dst").as("v")))
-        .agg(countDistinct(col("v")), count(lit(1))).head()
-      (row.getLong(0), row.getLong(1) / 2)
-    }
-    val (n0, e0) = stats(raw)
-    val (n1, e1) = stats(filtered)
-    println(s"  input graph: $n0 nodes, $e0 edges")
-    println(s"  filtered graph: $n1 nodes, $e1 edges")
+  private def printLoadReport(cfg: Config, scanned: DataFrame, filtered: DataFrame): Unit = {
+    // all four counts from one aggregate over the cached scan (the reference
+    // counts during its single load pass, console.cpp:106-110)
+    val c = EdgeTableSource.loadCounts(scanned)
+    println(s"  input graph: ${c.inputNodes} nodes, ${c.inputEdges} edges")
+    println(s"  filtered graph: ${c.keptNodes} nodes, ${c.keptEdges} edges")
     if (cfg.verbose) {
       println("\nDistance histogram")
       // A5 over the transformed distance; reference bounds 0, 0.001..0.05,
@@ -294,13 +280,17 @@ object Main {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Superstep.quietReleases()
     try {
-      val opts = readOptions(spark, cfg)
-      // ONE filtered scan shared by the load report and the clustering run
-      val filtered = EdgeTableSource.read(spark, cfg.distances, opts)
+      val header = EdgeTableSource.headerLine(spark, cfg.distances)
+      val opts = readOptions(cfg, header)
+      // ONE scan of the table, cached, shared by the load report and the
+      // clustering run
+      val scanned = EdgeTableSource.scan(spark, cfg.distances, opts, header)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      printLoadReport(spark, cfg, opts, filtered)
-      val out = execute(spark, cfg, filtered)
+      val filtered = EdgeTableSource.kept(scanned, opts)
+      printLoadReport(cfg, scanned, filtered)
+      val out = execute(spark, cfg, header, filtered)
       val sep = if (cfg.outCsv) "," else "\t"
       if (cfg.outRepresentatives)
         AssignmentsSink.writeWithRepresentatives(out, cfg.output, sep, singleFile = true)

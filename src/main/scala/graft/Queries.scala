@@ -120,10 +120,8 @@ object Queries {
   }
 
   def qClusterSingletons(spark: SparkSession, sfDir: String): DataFrame = {
-    val assign = Shaping.renumberBySize(
-        cc(spark, sfDir).select(col("vertex").as("object"), col("component").as("cluster")))
-      .select(col("object"), col("cluster"))
-    Shaping.appendSingletons(assign, universe(spark, sfDir)).orderBy("cluster", "object")
+    val assign = cc(spark, sfDir).select(col("vertex").as("object"), col("component").as("cluster"))
+    Shaping.renumber(assign, Some(universe(spark, sfDir))).orderBy("cluster", "object")
   }
 
   def qClusterRepresentatives(spark: SparkSession, sfDir: String): DataFrame = {

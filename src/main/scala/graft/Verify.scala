@@ -20,6 +20,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Superstep.quietReleases()
     new java.io.File(outDir).mkdirs()
     // Oracle-calibration guard FIRST: the greedy/Louvain SQL twins replay
     // fixpoints with fixed margins calibrated to this testdata — if the data

@@ -2,6 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 import graft.core.Ranking
 
@@ -17,11 +18,11 @@ import graft.core.Ranking
   *  - O3 representative fill: cluster id column replaced by the first member
   *    in final order (reference: src/graph.h:126-149)
   *
-  * The global dense renumberings (A3, O2) go through [[Ranking.withGlobalRank]]
-  * — a range-partitioned sort + zipWithIndex, never a single-partition
-  * window: cluster count is O(V), and on a web-scale universe MOST objects
-  * are singletons, so both orderings are full-size datasets. The remaining
-  * window (O3) is partitioned by cluster. The final orderings are
+  * The global dense renumbering (A3 with O2, [[renumber]]) is one
+  * [[Ranking.withGlobalRank]] — a range-partitioned sort + zipWithIndex,
+  * never a single-partition window: cluster count is O(V), and on a
+  * web-scale universe MOST objects are singletons, so the ordering is a
+  * full-size dataset. O3 is a per-cluster aggregate. The final orderings are
   * range-partitioned sorts, fine at scale because the assignment table is
   * O(vertices), not O(edges).
   */
@@ -42,21 +43,42 @@ object Shaping {
       .select(col("object"), col("new_cluster").as("cluster"), col("cluster_size"))
   }
 
-  /** O2 — append universe objects that have no assignment as singleton
-    * clusters, numbered `nClusters, nClusters+1, ...` in universe rank order.
+  /** A3 + O2 in one global rank: in-graph clusters numbered 0..k-1 by
+    * decreasing size (ties by ascending old cluster id, as in
+    * [[renumberBySize]]), then each universe object that has no assignment
+    * as a singleton cluster `k, k+1, …` in universe rank order. The rank key
+    * is `(appended, size desc, cluster asc, rank asc)` over the clusters and
+    * the missing objects together, so there is no cluster count to collect
+    * and no second ranking; the numbering is the same for every caller,
+    * in-graph size-1 clusters included.
     *
-    * @param assign   (object, cluster:long) — already renumbered 0..k-1.
-    * @param universe (object, rank:long) — full object universe + priority.
+    * @param assign   (object, cluster) — any types.
+    * @param universe (object, rank) — full object universe + priority.
+    * @return (object, cluster: long).
     */
-  def appendSingletons(assign: DataFrame, universe: DataFrame): DataFrame = {
-    val nClusters = assign.agg(coalesce(max(col("cluster")) + lit(1L), lit(0L)))
-      .head().getLong(0)
-    val missing = universe.join(assign, Seq("object"), "left_anti")
-      .select(col("object"), col("rank"))
-    val singletons = Ranking.withGlobalRank(missing, "_rn", col("rank").asc)
-      .select(col("object"), (col("_rn") + lit(nClusters)).cast("long").as("cluster"))
-    assign.select(col("object"), col("cluster").cast("long")).unionByName(singletons)
+  def renumber(assign: DataFrame, universe: Option[DataFrame]): DataFrame = {
+    val typeOf = (df: DataFrame, c: String) => df.schema(c).dataType
+    val clusters = assign.groupBy(col("cluster")).agg(count(lit(1)).as("size"))
+      .select(lit(false).as("appended"), col("size"), col("cluster"),
+        lit(null).cast(universe.fold(LongType: DataType)(typeOf(_, "rank"))).as("rank"),
+        lit(null).cast(typeOf(assign, "object")).as("object"))
+    val keyed = universe.fold(clusters) { u =>
+      clusters.unionByName(u.join(assign, Seq("object"), "left_anti").select(
+        lit(true).as("appended"), lit(1L).as("size"),
+        lit(null).cast(typeOf(assign, "cluster")).as("cluster"), col("rank"), col("object")))
+    }
+    val ranked = Ranking.withGlobalRank(keyed, "new_cluster",
+      col("appended").asc, col("size").desc, col("cluster").asc, col("rank").asc)
+    // a missing object's null cluster matches no member: it keeps its own row
+    ranked.join(assign.select(col("object").as("member"), col("cluster")), Seq("cluster"), "left")
+      .select(coalesce(col("member"), col("object")).as("object"), col("new_cluster").as("cluster"))
   }
+
+  /** O2 alone, for an assignment already numbered by [[renumberBySize]]
+    * (re-ranking such a numbering keeps it): append universe objects that
+    * have no assignment as singleton clusters in universe rank order. */
+  def appendSingletons(assign: DataFrame, universe: DataFrame): DataFrame =
+    renumber(assign, Some(universe))
 
   /** O1 — final output order: cluster asc, then member order (name asc when
     * no universe ranks; universe rank asc otherwise). Adds `member_order`
@@ -69,12 +91,13 @@ object Shaping {
   /** O3 — replace the cluster id with the cluster's representative: the first
     * member in final order. Partial-aggregating min_by argmax + join back,
     * not a per-cluster window — a window would sort a giant cluster's full
-    * member list in one task just to read its head (round 6; tie keys are
-    * unique per cluster in every caller, so the argmax is deterministic). */
+    * member list in one task just to read its head (round 6). The key
+    * `(tie, object)` is total, so the argmax is deterministic even when tie
+    * values repeat within a cluster. */
   def fillRepresentatives(assign: DataFrame, rankCol: Option[String] = None): DataFrame = {
     val tie = rankCol.map(col).getOrElse(col("object"))
     val reps = assign.groupBy(col("cluster"))
-      .agg(min_by(col("object"), tie).as("cluster_rep"))
+      .agg(min_by(col("object"), struct(tie, col("object"))).as("cluster_rep"))
     assign.join(reps, "cluster")
       .select(col("object"), col("cluster_rep"), col("cluster"))
   }

@@ -133,6 +133,13 @@ object Superstep {
 
   private val current = new DynamicVariable[Option[Superstep]](None)
 
+  /** Sets the "locally checkpointed … cannot be recomputed" WARN, which
+    * every expected release of a checkpoint logs, to ERROR; a main calls it
+    * where it builds its session so its log keeps the real warnings. */
+  def quietReleases(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+
   /** Runs one operator call as a driver scope named `op` (see the class
     * doc); `body` registers tables and runs loops on the scope it gets. */
   def run[T](op: String)(body: Superstep => T): T = {

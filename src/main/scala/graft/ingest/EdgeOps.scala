@@ -59,18 +59,17 @@ object EdgeOps {
     * accumulation (src/params.cpp:94-101). */
   case class RangeFilter(column: String, min: Option[Double] = None, max: Option[Double] = None)
 
-  def rangeFilters(edges: DataFrame, filters: Seq[RangeFilter]): DataFrame = {
-    val merged = filters.groupBy(_.column).map { case (c, fs) =>
-      RangeFilter(c,
-        fs.flatMap(_.min).reduceOption((a: Double, b: Double) => math.max(a, b)),
-        fs.flatMap(_.max).reduceOption((a: Double, b: Double) => math.min(a, b)))
-    }
-    merged.foldLeft(edges) { (df, f) =>
-      val lo = f.min.map(v => col(f.column) >= lit(v))
-      val hi = f.max.map(v => col(f.column) <= lit(v))
-      (lo ++ hi).foldLeft(df)(_ where _)
-    }
-  }
+  def rangeFilters(edges: DataFrame, filters: Seq[RangeFilter]): DataFrame =
+    edges.where(rangePredicate(filters))
+
+  /** The predicate of [[rangeFilters]]: true when there are no filters. */
+  def rangePredicate(filters: Seq[RangeFilter]): Column =
+    filters.groupBy(_.column).toSeq.sortBy(_._1).flatMap { case (c, fs) =>
+      fs.flatMap(_.min).reduceOption((a: Double, b: Double) => math.max(a, b))
+        .map(v => col(c) >= lit(v)) ++
+      fs.flatMap(_.max).reduceOption((a: Double, b: Double) => math.min(a, b))
+        .map(v => col(c) <= lit(v))
+    }.reduceOption(_ && _).getOrElse(lit(true))
 
   /** P3 — drop self loops (diagonal is implicit, distance 0). */
   def dropSelfLoops(edges: DataFrame, src: String = "src", dst: String = "dst"): DataFrame =

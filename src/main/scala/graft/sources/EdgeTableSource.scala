@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ingest.EdgeOps
 
@@ -36,27 +37,37 @@ object EdgeTableSource {
       filters: Seq[EdgeOps.RangeFilter] = Nil,
       dropSelfLoops: Boolean = true)
 
-  def read(spark: SparkSession, path: String, opts: Options = Options()): DataFrame = {
+  def read(spark: SparkSession, path: String, opts: Options = Options()): DataFrame =
+    kept(scan(spark, path, opts, headerLine(spark, path)), opts)
+
+  /** Every row of the table as `(src, dst, weight, kept)`, where `kept` says
+    * whether the row survives the P2 range filters and the P3 self-loop
+    * drop; `weight` is the raw distance column. [[kept]] turns a scan into
+    * [[read]]'s result, and [[loadCounts]] reports on both sides of the
+    * filters, so one scan (cached by the caller) serves both. */
+  def scan(spark: SparkSession, path: String, opts: Options, header: String): DataFrame = {
+    val names = columns(spark, header, opts.sep)
+    require(names.length >= 3,
+      s"edge table needs >= 3 columns (two ids + distance), got ${names.length}") // graph.cpp:65-66
+    // an explicit all-string schema: no header-inference job
     val raw = spark.read
+      .schema(StructType(names.map(StructField(_, StringType))))
       .option("header", true)
       .option("sep", opts.sep)
       .csv(path)
-    val header = raw.columns
-    require(header.length >= 3,
-      s"edge table needs >= 3 columns (two ids + distance), got ${header.length}") // graph.cpp:65-66
 
     def resolve(name: String): String = {
-      require(header.contains(name), s"column '$name' not in header ${header.mkString(",")}")
+      require(names.contains(name), s"column '$name' not in header ${names.mkString(",")}")
       name
     }
     // positional defaults + order normalization to header position
     val (c1, c2) = opts.idCols match {
-      case None => (header(0), header(1))
+      case None => (names(0), names(1))
       case Some((a, b)) =>
         val (ra, rb) = (resolve(a), resolve(b))
-        if (header.indexOf(ra) <= header.indexOf(rb)) (ra, rb) else (rb, ra)
+        if (names.indexOf(ra) <= names.indexOf(rb)) (ra, rb) else (rb, ra)
     }
-    val dc = opts.distanceCol.map(resolve).getOrElse(header(2))
+    val dc = opts.distanceCol.map(resolve).getOrElse(names(2))
 
     // try_cast, not cast: this build runs Spark 4 with ANSI mode on, where a
     // plain cast of a malformed numeric string THROWS. The contract (mirrored
@@ -69,11 +80,61 @@ object EdgeTableSource {
         col(dc).try_cast("double").as("weight")) ++
         opts.filters.map(f => col(resolve(f.column)).try_cast("double").as(f.column))): _*)
 
-    // P2 before anything downstream (ids of dropped rows never materialize)
-    val filtered = EdgeOps.rangeFilters(projected, opts.filters)
-      .select(col("src"), col("dst"), col("weight"))
-    val transformed = EdgeOps.distanceTransform(filtered, opts.distanceKind)
-    if (opts.dropSelfLoops) EdgeOps.dropSelfLoops(transformed) else transformed
+    // P2 and P3; a null predicate drops the row
+    val survives = EdgeOps.rangePredicate(opts.filters) &&
+      (if (opts.dropSelfLoops) col("src") =!= col("dst") else lit(true))
+    projected.select(col("src"), col("dst"), col("weight"),
+      coalesce(survives, lit(false)).as("kept"))
+  }
+
+  /** The kept rows of a [[scan]] as `(src, dst, weight)`, with the P1
+    * distance transform applied. */
+  def kept(scanned: DataFrame, opts: Options): DataFrame =
+    EdgeOps.distanceTransform(
+      scanned.where(col("kept")).select(col("src"), col("dst"), col("weight")),
+      opts.distanceKind)
+
+  /** Node and edge counts of a [[scan]] before and after its filters — the
+    * reference's load report (console.cpp:106-110) — in one aggregate: both
+    * endpoint columns stacked, countDistinct for nodes, rows / 2 for edges. */
+  final case class LoadCounts(inputNodes: Long, inputEdges: Long,
+                              keptNodes: Long, keptEdges: Long)
+
+  def loadCounts(scanned: DataFrame): LoadCounts = {
+    val row = scanned.select(explode(array(col("src"), col("dst"))).as("v"), col("kept"))
+      .agg(countDistinct(col("v")), count(lit(1)),
+        countDistinct(when(col("kept"), col("v"))), count(when(col("kept"), lit(1))))
+      .head()
+    LoadCounts(row.getLong(0), row.getLong(1) / 2, row.getLong(2), row.getLong(3) / 2)
+  }
+
+  /** The first non-blank line of the table — of its first visible file in
+    * path order — read on the driver through the Hadoop FileSystem (any
+    * compression codec the path names), so no Spark job runs for it. */
+  def headerLine(spark: SparkSession, path: String): String = {
+    import org.apache.hadoop.io.compress.CompressionCodecFactory
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = new org.apache.hadoop.fs.Path(listFiles(spark, path).head)
+    val codec = new CompressionCodecFactory(conf).getCodec(file)
+    val raw = file.getFileSystem(conf).open(file)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      if (codec == null) raw else codec.createInputStream(raw),
+      java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).find(_.trim.nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(s"edge table has no header line: $path"))
+    finally in.close()
+  }
+
+  /** Column names of a header line exactly as Spark's CSV reader would infer
+    * them (same tokenizer settings, `_cN` for blank names, index suffixes on
+    * duplicates). */
+  private def columns(spark: SparkSession, header: String, sep: String): Array[String] = {
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    val options = new CSVOptions(Map("sep" -> sep, "header" -> "true"), true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val tokens = new com.univocity.parsers.csv.CsvParser(options.asParserSettings).parseLine(header)
+    org.apache.spark.sql.execution.datasources.csv.CSVUtils.makeSafeHeader(tokens,
+      spark.conf.get("spark.sql.caseSensitive").toBoolean, options)
   }
 
   /** S5 — objects-file scan: one-column header'd table; rank = line order
@@ -96,7 +157,7 @@ object EdgeTableSource {
     * dropped. */
   def readObjects(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.LongType
     val rows = orderedLines(spark, path)
       .map { case (key, line) =>
         val cut = line.indexOf(sep)
@@ -110,6 +171,21 @@ object EdgeTableSource {
       StructField("rank", LongType, nullable = false))))
   }
 
+  /** The visible files a file/directory/glob names, sorted by path. */
+  private def listFiles(spark: SparkSession, path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // globStatus handles literal paths AND patterns (matching textFile's
+    // old glob support); hidden-file filter mirrors FileInputFormat's
+    // ('.'-prefixed sidecars like .crc, and '_'-prefixed markers)
+    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
+    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
+    require(matched.nonEmpty, s"input path matches nothing: $path")
+    matched.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
+    }.map(_.getPath).filter(pp => visible(pp.getName)).map(_.toString).sorted.toSeq
+  }
+
   /** Non-header, non-empty lines of a file/directory/glob, each keyed by its
     * deterministic physical position `(fileIdx, byteOffset)` — the shared
     * scanner behind [[readObjects]] and [[firstAppearanceRanks]] (see the S5
@@ -119,17 +195,7 @@ object EdgeTableSource {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapred.TextInputFormat
     val sc = spark.sparkContext
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    // globStatus handles literal paths AND patterns (matching textFile's
-    // old glob support); hidden-file filter mirrors FileInputFormat's
-    // ('.'-prefixed sidecars like .crc, and '_'-prefixed markers)
-    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    require(matched.nonEmpty, s"input path matches nothing: $path")
-    val files: Seq[String] = matched.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
-    }.map(_.getPath).filter(pp => visible(pp.getName)).map(_.toString).sorted.toSeq
+    val files = listFiles(spark, path)
     val tagged = files.zipWithIndex.map { case (f, fi) =>
       sc.hadoopFile[LongWritable, Text, TextInputFormat](f)
         .flatMap { case (off, t) =>
@@ -160,12 +226,17 @@ object EdgeTableSource {
     * sort + zipWithIndex (same justified RDD hop as [[readObjects]]), then
     * a min-aggregate per name and one more dense ranking. */
   def firstAppearanceRanks(spark: SparkSession, path: String,
-                           opts: Options = Options()): DataFrame = {
+                           opts: Options = Options()): DataFrame =
+    firstAppearanceRanks(spark, path, opts, headerLine(spark, path))
+
+  /** [[firstAppearanceRanks]] with the table's header line already read. */
+  def firstAppearanceRanks(spark: SparkSession, path: String, opts: Options,
+                           headerLine: String): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.LongType
     val sepRegex = java.util.regex.Pattern.quote(opts.sep)
-    val header0 = spark.sparkContext.textFile(path).first().stripSuffix("\r")
-    val header = header0.split(sepRegex, -1).map(_.trim)
+    // the names read() resolves, so both scans agree on every column
+    val header = columns(spark, headerLine, opts.sep)
     require(header.length >= 3,
       s"edge table needs >= 3 columns (two ids + distance), got ${header.length}")
     def idx(name: String): Int = {
@@ -226,8 +297,7 @@ object EdgeTableSource {
     val df = spark.createDataFrame(firstSeen, StructType(Seq(
       StructField("object", StringType, nullable = false),
       StructField("ord", LongType, nullable = false))))
-    graft.core.Ranking.withGlobalRank(df, "rank", org.apache.spark.sql.functions.col("ord").asc)
-      .select(org.apache.spark.sql.functions.col("object"),
-        org.apache.spark.sql.functions.col("rank"))
+    graft.core.Ranking.withGlobalRank(df, "rank", col("ord").asc)
+      .select(col("object"), col("rank"))
   }
 }

@@ -51,10 +51,12 @@ class GraphAlgoSpec extends SparkTestBase {
         seen.foreach(w => comp(w) = label)
       }
     }
-    val got = ConnectedComponents.run(spark, edgeDf)
+    def got = ConnectedComponents.run(spark, edgeDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == comp.toMap)
     assert(got.values.toSet.size > 1, "test graph should have several components")
+    // and with the star loop finishing what the per-partition contraction left
+    assert(withSplitPartitions(got) == comp.toMap)
   }
 
   test("pagerank matches power-iteration oracle to 1e-6") {

@@ -47,11 +47,43 @@ class PropertySpec extends SparkTestBase {
     comp.toMap
   }
 
+  /** Union-find reference: label = min vertex of the component; self-loops
+    * are dropped before anything (a self-loop-only vertex has no label). */
+  private def unionFindComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).toMap
+  }
+
+  // adversarial shapes: a chain longer than any one-pass contraction of a
+  // split table finishes, a mega-hub, duplicate / reversed / self-loop edges,
+  // and ids at the top of the long range (ANSI mode throws on overflow)
+  private val shapes: Seq[(String, Seq[(Long, Long)])] = Seq(
+    "300-vertex chain" -> (0L until 299L).map(i => (i, i + 1)),
+    "mega-hub" -> ((1L to 400L).map(i => (0L, i)) ++ (401L to 420L).map(i => (i, i + 1))),
+    "duplicate, reversed and self-loop edges" -> Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L),
+      (3L, 3L), (4L, 4L), (5L, 6L), (6L, 5L), (6L, 6L), (7L, 5L)),
+    "ids near Long.MaxValue" -> ((0L until 40L).map(i => (Long.MaxValue - i, Long.MaxValue - i - 1)) ++
+      Seq((Long.MaxValue - 100L, Long.MaxValue - 200L), (Long.MinValue, Long.MaxValue - 150L))))
+
   test("property: connected components equal BFS partition on random graphs") {
+    def cc(edges: Seq[(Long, Long)]) = ConnectedComponents.run(spark, edges.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     samples(4).foreach { edges =>
-      val got = ConnectedComponents.run(spark, edges.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == bfsComponents(edges), s"edges=$edges")
+      assert(cc(edges) == bfsComponents(edges), s"edges=$edges")
+      assert(withSplitPartitions(cc(edges)) == bfsComponents(edges), s"split, edges=$edges")
+    }
+    shapes.foreach { case (name, edges) =>
+      val want = unionFindComponents(edges)
+      assert(cc(edges) == want, name)
+      assert(withSplitPartitions(cc(edges)) == want, s"split, $name")
     }
   }
 

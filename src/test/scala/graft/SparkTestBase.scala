@@ -7,6 +7,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * getOrCreate dedups across suites in the same fork). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `body` with the given SQL confs set, restoring them afterwards. */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `body` where connected components' per-partition contraction
+    * cannot finish a small graph in one pass: 8 shuffle partitions, none
+    * coalesced, so the large-star/small-star loop runs after it. */
+  def withSplitPartitions[T](body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8")(body)
 }
 
 object SparkTestBase {
@@ -19,10 +37,7 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // the "locally checkpointed … cannot be recomputed" WARN fires on every
-    // expected superstep release; keep the log for real warnings
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    graft.core.Superstep.quietReleases()
     s
   }
 }
