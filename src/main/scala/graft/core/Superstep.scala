@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.util.DynamicVariable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.storage.StorageLevel
 
@@ -12,19 +12,28 @@ import org.apache.spark.storage.StorageLevel
   * runs its loop and holds its intermediates. An operator call opens a
   * scope with [[Superstep.run]] and registers every table it materializes:
   *
-  *  - [[state]] — loop state, local-checkpointed with plan STATISTICS
-  *    reset. Plain `localCheckpoint` copies the pre-checkpoint plan's
-  *    estimated statistics into the truncated plan; state that feeds k
-  *    places in the next step compounds `sizeInBytes` to (2^63)^(k^step),
-  *    and stats estimation ends up pinning the driver in million-digit
-  *    BigInteger multiplication (a multi-minute "hang" at ~10 steps, k=4).
-  *    `eager = false` keeps one job per step: the step's own aggregate
-  *    materializes the checkpoint.
+  *  - [[state]] — loop state, an eager local checkpoint with plan
+  *    STATISTICS reset. Plain `localCheckpoint` copies the pre-checkpoint
+  *    plan's estimated statistics into the truncated plan; state that feeds
+  *    k places in the next step compounds `sizeInBytes` to
+  *    (2^63)^(k^step), and stats estimation ends up pinning the driver in
+  *    million-digit BigInteger multiplication (a multi-minute "hang" at ~10
+  *    steps, k=4). [[stateWith]] also returns aggregate metrics over the
+  *    state's rows (a changed count, a delta) computed by the checkpoint's
+  *    own job: this is how a loop reads its convergence, with no second
+  *    query per step.
   *  - [[pin]] — a static per-call input computed once (edge tables, vertex
-  *    sets). A plain eager `localCheckpoint`: it keeps the estimated
-  *    statistics (computed once, they cannot compound) and the output
-  *    partitioning, so per-step joins reuse it without an exchange.
+  *    sets): an eager local checkpoint that keeps the estimated statistics
+  *    (computed once, they cannot compound).
   *  - [[persist]] — a `MEMORY_AND_DISK` cached table.
+  *
+  * A [[state]] or [[pin]] declares its real partitioning: when the final
+  * adaptive plan that built it ends in a hash exchange on its own columns,
+  * not coalesced by AQE, a later join on those columns reads it in place
+  * (see `GraftShim.checkpoint`). An operator that relies on this keeps P
+  * (`spark.sql.shuffle.partitions`) fixed for its scope with
+  * [[Superstep.NoCoalescing]]; elsewhere AQE may coalesce, nothing is
+  * declared, and a join exchanges as it would without checkpoints.
   *
   * Loops run through [[loop]] (a cap that throws) or [[upTo]] (a budget
   * that defines the answer). Per step k the driver:
@@ -51,18 +60,28 @@ final class Superstep private (op: String) {
 
   private def hold(h: Held): Unit = { seq += 1; h.seq = seq; held += h }
 
-  /** Loop state: a stats-resetting local checkpoint, released by the step
-    * rule (see the class doc). */
-  def state(df: DataFrame, eager: Boolean = false): DataFrame = {
-    val (out, rdd) = GraftShim.checkpointWithoutStats(df, eager)
-    hold(checkpointed(rdd, stepScoped = true)); out
+  /** Loop state: an eager stats-resetting local checkpoint, released by the
+    * step rule (see the class doc). */
+  def state(df: DataFrame): DataFrame = stateWith(df)._1
+
+  /** [[state]] plus the values of `metrics` — aggregate columns over `df`'s
+    * rows, e.g. `count(when(changed, 1))` — from the checkpoint's own job,
+    * in a row in their order. */
+  def stateWith(df: DataFrame, metrics: Column*): (DataFrame, Row) =
+    stateWith(df, df.columns.toSeq, metrics: _*)
+
+  /** [[stateWith]] that stores only the columns `keep`; the metrics may
+    * read the others (an old value that only the changed count needs). */
+  def stateWith(df: DataFrame, keep: Seq[String], metrics: Column*): (DataFrame, Row) = {
+    val (out, rdd, row) = GraftShim.checkpoint(df, resetStats = true, metrics, keep)
+    hold(checkpointed(rdd, stepScoped = true)); (out, row)
   }
 
-  /** A static per-call input: an eager plain local checkpoint, released on
-    * exit unless the result reads it. */
+  /** A static per-call input: an eager local checkpoint that keeps its
+    * estimated statistics, released on exit unless the result reads it. */
   def pin(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(true)
-    hold(checkpointed(GraftShim.scannedRdds(out).head, stepScoped = false)); out
+    val (out, rdd, _) = GraftShim.checkpoint(df, resetStats = false, Nil, df.columns.toSeq)
+    hold(checkpointed(rdd, stepScoped = false)); out
   }
 
   /** A cached table, released on every exit (the result must not need it). */
@@ -140,18 +159,44 @@ object Superstep {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
 
+  /** Keeps every shuffle of a scope at `spark.sql.shuffle.partitions` (P):
+    * AQE partition coalescing off, so a state or pin built by a hash
+    * exchange declares that partitioning and the next step joins it in
+    * place. Map-side combine is unaffected. A setting, not a session
+    * default: [[run]] applies it to one operator call (LPA and PageRank).
+    * Measured with perfbench's traced `cooc-analytics` run (seed 7, 4-CPU
+    * VM, P = 4), with and without it on otherwise the same code: LPA 22 vs
+    * 39 Spark jobs (2.26 vs 2.20 s), PageRank 13 vs 21 jobs (2.23 vs
+    * 2.53 s, 1.4 vs 4.0 MB shuffled), identical outputs. */
+  val NoCoalescing: Seq[(String, String)] =
+    Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
   /** Runs one operator call as a driver scope named `op` (see the class
-    * doc); `body` registers tables and runs loops on the scope it gets. */
-  def run[T](op: String)(body: Superstep => T): T = {
+    * doc), with the SQL settings `conf` in force for the call;
+    * `body` registers tables and runs loops on the scope it gets. */
+  def run[T](op: String, conf: Seq[(String, String)] = Nil)(body: Superstep => T): T = {
     val s = new Superstep(op)
     val parent = current.value
     val result =
-      try current.withValue(Some(s))(body(s))
+      try withConf(conf)(current.withValue(Some(s))(body(s)))
       catch { case t: Throwable => s.close(None); throw t }
     val survivors = s.close(Some(result))
     parent.foreach(p => survivors.foreach(h => p.hold(new Held(h.rdd, stepScoped = true, h.free))))
     result
   }
+
+  private def withConf[T](conf: Seq[(String, String)])(body: => T): T =
+    if (conf.isEmpty) body
+    else {
+      val sqlConf = org.apache.spark.sql.SparkSession.active.conf
+      val saved = conf.map { case (k, _) => k -> sqlConf.getOption(k) }
+      conf.foreach { case (k, v) => sqlConf.set(k, v) }
+      try body
+      finally saved.foreach {
+        case (k, Some(v)) => sqlConf.set(k, v)
+        case (k, None) => sqlConf.unset(k)
+      }
+    }
 
   /** The frames reachable in a returned value (a frame, or case classes and
     * tuples holding frames). */

@@ -53,7 +53,7 @@ object Bipartite {
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component")))
 
     var settled = s.state(cc.where(col("vertex") === col("component"))
-      .select(col("vertex"), lit(0L).as("dist")), eager = true)
+      .select(col("vertex"), lit(0L).as("dist")))
     var frontier = settled
     // The round cap THROWS rather than silently dropping unreached vertices:
     // an unsettled vertex would get no parity row, the conflict join below
@@ -63,8 +63,9 @@ object Bipartite {
       val cand = frontier.join(bi, frontier("vertex") === bi("src"))
         .select(bi("dst").as("vertex"), (frontier("dist") + lit(1L)).as("dist"))
         .groupBy("vertex").agg(min(col("dist")).as("dist"))
-      val next = s.state(cand.join(settled.select("vertex"), Seq("vertex"), "left_anti"))
-      val more = next.count() > 0L
+      val (next, m) = s.stateWith(cand.join(settled.select("vertex"), Seq("vertex"), "left_anti"),
+        count(lit(1)))
+      val more = m.getLong(0) > 0L
       if (more) {
         settled = s.state(settled.unionByName(next))
         frontier = next

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * analysis stays O(1) across iterations, and the round cap throws rather
   * than returning a partial labelling. Convergence is detected with a
   * content checksum (count + xor of pair hashes) rather than a set-compare,
-  * one cheap aggregate per round.
+  * computed as a metric of each round's state checkpoint.
   *
   * The final component label is the minimum vertex id of the component —
   * order-independent and deterministic under any parallelism, which is how
@@ -67,25 +67,33 @@ object ConnectedComponents {
           .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
           .distinct()
 
-      // One contraction pass: its star rows, pinned, and (split, repeated) —
-      // how many vertices have more than one root, and how many have more
-      // than one (equal-root) row. Every input vertex is a row's dst.
-      def pass(in: DataFrame): (DataFrame, Long, Long) = {
-        val st = s.pin(contract(spark, in))
+      // The star-forest check of a pass's rows: (split, repeated) — how many
+      // vertices have more than one root, and how many have more than one
+      // (equal-root) row. Every input vertex is a row's dst.
+      def check(st: DataFrame): (Long, Long) = {
         val row = st.groupBy(col("dst"))
           .agg(min(col("src")).as("lo"), max(col("src")).as("hi"), count(lit(1)).as("n"))
           .agg(
             coalesce(sum(when(col("lo") =!= col("hi"), 1L)), lit(0L)),
             coalesce(sum(when(col("n") > 1L, 1L)), lit(0L)))
           .head()
-        (st, row.getLong(0), row.getLong(1))
+        (row.getLong(0), row.getLong(1))
       }
-      val first = pass(canonical)
-      // Not a star forest: the rows of each vertex meet in one partition of a
-      // second pass, which merges its roots (AQE coalesces this exchange, so
-      // an input held in several partitions finishes here when it is small).
-      val (stars, split, repeated) =
-        if (first._2 == 0L) first else pass(first._1.repartition(col("dst")))
+      val first = s.pin(contract(spark, canonical))
+      // Pass 1 is checked only when it ran in one partition: the stars of
+      // several partitions overlap in all but contrived inputs, so there
+      // the check would only cost its jobs. Otherwise, or when it fails (an
+      // input of several chunks), the rows of each vertex meet in one
+      // partition of a second pass, which merges its roots (AQE coalesces
+      // this exchange, so an input held in several partitions finishes here
+      // when it is small).
+      val firstCheck = if (first.rdd.getNumPartitions == 1) Some(check(first)) else None
+      val (stars, (split, repeated)) = firstCheck match {
+        case Some(c @ (0L, _)) => (first, c)
+        case _ =>
+          val second = s.pin(contract(spark, first.repartition(col("dst"))))
+          (second, check(second))
+      }
 
       if (split == 0L) {
         // A star forest: the root is the label (repeats carry one root).
@@ -96,12 +104,10 @@ object ConnectedComponents {
         // i.e. components that contract away entirely).
         val vertices = s.pin(stars.select(col("dst").as("vertex")).distinct())
         var e = stars.where(col("src") =!= col("dst"))
-        var prev = checksum(e)
+        var prev = e.agg(checksum.head, checksum.tail: _*).head()
         s.loop(maxIter) { _ =>
-          // Lazy checkpoint: the checksum aggregate below is a full scan, so it
-          // materializes every partition — one Spark job per round, not two.
-          e = s.state(smallStar(largeStar(e)))
-          val cs = checksum(e)
+          val (next, cs) = s.stateWith(smallStar(largeStar(e)), checksum: _*)
+          e = next
           val changed = cs != prev
           prev = cs
           changed
@@ -225,13 +231,9 @@ object ConnectedComponents {
     relink.union(selfEdge).distinct()
   }
 
-  /** Order-insensitive content checksum of the edge set. */
-  private def checksum(e: DataFrame): (Long, Long) = {
-    // bit_xor, not sum: ANSI mode (Spark 4 default) would throw on long
-    // overflow of a sum of 64-bit hashes.
-    val row = e.select(xxhash64(col("src"), col("dst")).as("h"))
-      .agg(count(lit(1)).as("n"), coalesce(expr("bit_xor(h)"), lit(0L)).as("x"))
-      .head()
-    (row.getLong(0), row.getLong(1))
-  }
+  /** Order-insensitive content checksum of an edge set: its row count and
+    * the xor of its pair hashes. bit_xor, not sum: ANSI mode (Spark 4
+    * default) would throw on long overflow of a sum of 64-bit hashes. */
+  private val checksum = Seq(count(lit(1)),
+    coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)))
 }

@@ -11,13 +11,12 @@ import org.apache.spark.sql.functions._
   *   authority(v) = Σ_{u→v} hub(u)   then L2-normalize
   *   hub(u)       = Σ_{u→v} auth(v)  then L2-normalize
   *
-  * The single-job trick: normalization is a scalar multiple that passes
-  * linearly through the next half-step (hub ∝ Eᵀ·auth regardless of auth's
-  * scale), so the hub sums are computed from the UNNORMALIZED authority sums
-  * and both L2 norms are read back by one union-aggregate that also
-  * materializes the two lazily-localCheckpointed states — no per-half-step
-  * driver round-trip. Magnitudes stay bounded because each iteration's
-  * inputs are the previous iteration's normalized scores.
+  * Normalization is a scalar multiple that passes linearly through the
+  * next half-step (hub ∝ Eᵀ·auth regardless of auth's scale), so the hub
+  * sums are computed from the UNNORMALIZED authority sums, and each L2 norm
+  * is a metric of its state checkpoint's own job — no separate norm query.
+  * Magnitudes stay bounded because each iteration's inputs are the previous
+  * iteration's normalized scores.
   */
 object Hits {
 
@@ -46,25 +45,20 @@ object Hits {
       var it = 0
       var degenerate = nEdges == 0L
       if (!degenerate) s.upTo(iterations) { _ =>
-        val aRaw = s.state(
+        // each state's squared norm comes with its checkpoint's job
+        val (aRaw, a2) = s.stateWith(
           eSrc.join(hubs, eSrc("src") === hubs("vertex"))
             .groupBy(col("dst")).agg(sum(col("hub")).as("a"))
-            .select(col("dst").as("vertex"), col("a")))
+            .select(col("dst").as("vertex"), col("a")),
+          coalesce(sum(col("a") * col("a")), lit(0.0)))
         // hub sums from the unnormalized authority sums (scale cancels)
-        val hRaw = s.state(
+        val (hRaw, h2) = s.stateWith(
           eDst.join(aRaw, eDst("dst") === aRaw("vertex"))
             .groupBy(col("src")).agg(sum(col("a")).as("h"))
-            .select(col("src").as("vertex"), col("h")))
-
-        // one job: materializes both checkpointed states, returns both norms
-        val row = aRaw.select(col("a").as("x"), lit(true).as("isA"))
-          .unionByName(hRaw.select(col("h").as("x"), lit(false).as("isA")))
-          .agg(
-            coalesce(sum(when(col("isA"), col("x") * col("x"))), lit(0.0)).as("a2"),
-            coalesce(sum(when(!col("isA"), col("x") * col("x"))), lit(0.0)).as("h2"))
-          .head()
-        val aNorm = math.sqrt(row.getDouble(0))
-        val hNorm = math.sqrt(row.getDouble(1))
+            .select(col("src").as("vertex"), col("h")),
+          coalesce(sum(col("h") * col("h")), lit(0.0)))
+        val aNorm = math.sqrt(a2.getDouble(0))
+        val hNorm = math.sqrt(h2.getDouble(0))
         degenerate = aNorm == 0.0 || hNorm == 0.0
         if (!degenerate) {
           auths = aRaw.select(col("vertex"), (col("a") / lit(aNorm)).as("authority"))

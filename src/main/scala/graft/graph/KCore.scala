@@ -40,9 +40,9 @@ object KCore {
 
   /** Vertices of the single k-core, by iterative degree peeling. Each
     * round: one partial-aggregated degree count + two semi-joins that drop
-    * edges touching sub-k vertices; a lazy driver checkpoint per round keeps
-    * the plan O(1) and the convergence count materializes it (one job per
-    * round, same discipline as CC/PageRank). Rounds are O(peeling depth),
+    * edges touching sub-k vertices; a driver checkpoint per round keeps
+    * the plan O(1) and counts its rows in its own job (one job per round,
+    * same discipline as CC/PageRank). Rounds are O(peeling depth),
     * which is small on power-law graphs. For the whole decomposition in one
     * pass, use [[run]].
     *
@@ -62,11 +62,12 @@ object KCore {
       if (nEdges > 0) s.loop(maxIter) { _ =>
         val deg = bi.groupBy(col("src")).agg(count(lit(1)).as("d"))
         val keep = deg.where(col("d") >= k).select(col("src").as("v"))
-        bi = s.state(bi
+        val (next, m) = s.stateWith(bi
           .join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))) // materialized by the count below
-        val n2 = bi.count()
+          .select(col("src"), col("dst")), count(lit(1)))
+        bi = next
+        val n2 = m.getLong(0)
         val peeled = n2 != nEdges
         nEdges = n2
         peeled && n2 > 0
@@ -120,14 +121,12 @@ object KCore {
         // new estimate; join back to detect the fixpoint in the same pass.
         // h <= old estimate always (estimates start at degree and neighbors
         // only fall), so no explicit least(old, h) is needed — but keeping
-        // old_core lets one aggregate compute the convergence count.
-        val next = s.state(h.join(cores, h("v") === cores("vertex"))
-          .select(col("vertex"), col("h").as("core"), col("core").as("old_core")))
-        val changed = next
-          .agg(count(when(col("core") =!= col("old_core"), lit(1))).as("n"))
-          .head().getLong(0)
+        // old_core lets the checkpoint count the changed estimates.
+        val (next, m) = s.stateWith(h.join(cores, h("v") === cores("vertex"))
+          .select(col("vertex"), col("h").as("core"), col("core").as("old_core")),
+          count(when(col("core") =!= col("old_core"), lit(1))))
         cores = next.select(col("vertex"), col("core"))
-        changed != 0L
+        m.getLong(0) != 0L
       }
       cores
     }

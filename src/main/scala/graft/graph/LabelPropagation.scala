@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Superstep
+
 /** Synchronous label propagation — the Spark-native counterpart of clusty's
   * Leiden community detection (SURVEY.md §2.6 C6; the reference itself
   * delegates Leiden to igraph and ships without it by default,
@@ -14,9 +16,17 @@ import org.apache.spark.sql.functions._
   * partitioning/arrival order (our substitute for the reference's ordered
   * mapper determinism).
   *
-  * Each superstep: one shuffle to group neighbor labels, one window argmax
-  * (re-uses the same hash partitioning on dst), one join back. Lineage
-  * truncated per superstep by the [[graft.core.Superstep]] driver.
+  * Layout (Pregel/GraphX): the symmetrized edge table `bi` is built by one
+  * hash exchange on `src` and pinned, and the label state is
+  * hash-partitioned on `vertex` with the same P partitions, so each
+  * superstep joins them in place. The messages, plus one carrier row per
+  * vertex with its old label, go through ONE exchange to `dst` and one
+  * aggregate: `mode(label, deterministic = true)` is the (count desc,
+  * label asc) argmax and ignores the carrier, whose old label rides in its
+  * own column. The changed count is a metric of the state checkpoint, which
+  * stores only (vertex, label), so a superstep is one Spark job. P stays fixed because the call runs with
+  * [[graft.core.Superstep.NoCoalescing]]; lineage is truncated per
+  * superstep by the [[graft.core.Superstep]] driver.
   */
 object LabelPropagation {
 
@@ -25,44 +35,30 @@ object LabelPropagation {
     *         earlier if a fixpoint is reached.
     */
   def run(spark: SparkSession, edges: DataFrame, iterations: Int = 10): DataFrame =
-    graft.core.Superstep.run("LabelPropagation.run") { s =>
+    Superstep.run("LabelPropagation.run", Superstep.NoCoalescing) { s =>
       val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
         .where(col("src") =!= col("dst"))
-      // distinct leaves the table partitioned on (src, dst); re-partition on
-      // src BEFORE checkpointing so the per-superstep ranks-into-neighbors
-      // join reuses this partitioning (a pin preserves it) and only the small
-      // label table moves each superstep — without this the full edge table
-      // re-exchanged every superstep.
+      // one exchange: hash on src; the distinct is satisfied by it
       val bi = s.pin(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(col("src")))
-
-      val vertices = s.pin(bi.select(col("src").as("vertex")).distinct())
-      var labels = s.pin(vertices.select(col("vertex"), col("vertex").as("label")))
+        .repartition(col("src"))
+        .distinct())
+      // every vertex has a neighbour, so every vertex gets a message
+      var labels = s.state(bi.select(col("src").as("vertex")).distinct()
+        .select(col("vertex"), col("vertex").as("label")))
 
       s.upTo(iterations) { _ =>
-        // (count desc, label asc) argmax via max_by over (n, -label) — a hash
-        // aggregate instead of a window sort. The previous label rides along
-        // as a carrier row with n=0 (every vertex has >= 1 neighbor by
-        // construction of `vertices`, so a real count row always outranks
-        // the carrier), which removes the per-superstep join-back entirely.
-        val msgs = bi.join(labels, bi("src") === labels("vertex"))
-          .select(col("dst"), col("label"))
-        val counts = msgs.groupBy(col("dst"), col("label")).agg(count(lit(1)).as("n"))
-        val carrier = labels.select(col("vertex").as("dst"), col("label"), lit(0L).as("n"))
-
-        val newLabels = s.state(counts.unionByName(carrier)
+        val msgs = bi.join(labels.hint("shuffle_hash"), bi("src") === labels("vertex"))
+          .select(col("dst"), col("label"), lit(null).cast("long").as("old"))
+        val carrier = labels.select(col("vertex").as("dst"),
+          lit(null).cast("long").as("label"), col("label").as("old"))
+        val (next, m) = s.stateWith(msgs.unionByName(carrier)
           .groupBy(col("dst")).agg(
-            max_by(col("label"), struct(col("n"), -col("label"))).as("label"),
-            max(when(col("n") === 0L, col("label"))).as("old_label"))
-          .select(col("dst").as("vertex"), col("label"), col("old_label"))
-        ) // materialized by the stability aggregate
-
-        val changed = newLabels
-          .agg(count(when(col("label") =!= col("old_label"), lit(1))).as("c"))
-          .head().getLong(0)
-        labels = newLabels.select(col("vertex"), col("label"))
-        changed != 0L
+            mode(col("label"), deterministic = true).as("label"),
+            max(col("old")).as("old"))
+          .select(col("dst").as("vertex"), col("label"), col("old")),
+          Seq("vertex", "label"), count(when(col("label") =!= col("old"), lit(1))))
+        labels = next
+        m.getLong(0) != 0L
       }
       labels
     }

@@ -104,10 +104,11 @@ object Louvain {
       s.upTo(cap) { _ =>
         val nb = bi.join(lbl.select(col("vertex").as("v"), col("lbl").as("nl")), "v")
           .groupBy(col("u").as("vertex")).agg(min(col("nl")).as("nb"))
-        val ck = s.state(lbl.join(nb, Seq("vertex"), "left")
+        val (ck, m) = s.stateWith(lbl.join(nb, Seq("vertex"), "left")
           .select(col("vertex"), least(col("lbl"), coalesce(col("nb"), col("lbl"))).as("lbl"),
-            col("lbl").as("old")))
-        val moves = ck.agg(count(when(col("lbl") =!= col("old"), lit(1)))).head().getLong(0)
+            col("lbl").as("old")),
+          count(when(col("lbl") =!= col("old"), lit(1))))
+        val moves = m.getLong(0)
         lbl = ck.select(col("vertex"), col("lbl"))
         if (moves > 0) depth += 1
         moves > 0
@@ -162,12 +163,11 @@ object Louvain {
       .where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"), col("w"))
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
-      .withColumn("self", lit(0.0)), // self-loop mass appears on coarse levels
-      eager = true)
+      .withColumn("self", lit(0.0))) // self-loop mass appears on coarse levels
 
     // mapping from original vertices to current-level vertices
     var mapping = s.state(g.select(col("a").as("vertex")).union(g.select(col("b").as("vertex")))
-      .distinct().select(col("vertex"), col("vertex").as("cur")), eager = true)
+      .distinct().select(col("vertex"), col("vertex").as("cur")))
 
     var level = 0
     val refineDepths = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -196,7 +196,7 @@ object Louvain {
       } else commRaw
       if (moved) {
         mapping = s.state(mapping.join(comm, mapping("cur") === comm("vertex"))
-          .select(mapping("vertex"), col("comm").as("cur")), eager = true)
+          .select(mapping("vertex"), col("comm").as("cur")))
         // contract: communities become vertices; intra-community edge mass
         // becomes self-loop weight (counted once, contributing 2w to degree)
         val ce = g
@@ -206,9 +206,8 @@ object Louvain {
             col("w"), (col("self") + when(col("ca") === col("cb"), col("w")).otherwise(0.0)).as("selfw"))
         g = s.state(ce.groupBy(col("a"), col("b"))
           .agg(sum(when(col("a") =!= col("b"), col("w")).otherwise(0.0)).as("w"),
-            sum(col("selfw")).as("self")),
-          // keep a row even for pure self-loop super-vertices (a == b)
-          eager = true)
+            // keep a row even for pure self-loop super-vertices (a == b)
+            sum(col("selfw")).as("self")))
         level += 1
       }
       moved
@@ -286,9 +285,8 @@ object Louvain {
             when(parityBit(col("ph"), bitPos) === lit(parity) && col("best_score") > col("stay_score"),
               col("best")).otherwise(col("cur")).as("comm"),
             col("cur").as("old_comm"))
-        val nextCk = s.state(next) // materialized by the move-count aggregate
-        val moves = nextCk.agg(count(when(col("comm") =!= col("old_comm"), lit(1))))
-          .head().getLong(0)
+        val (nextCk, m) = s.stateWith(next, count(when(col("comm") =!= col("old_comm"), lit(1))))
+        val moves = m.getLong(0)
         comm = nextCk.select(col("vertex"), col("comm"))
         anyMove ||= moves > 0
         idleStreak = if (moves == 0) idleStreak + 1 else 0

@@ -79,8 +79,7 @@ object NeighborhoodFunction {
 
     var state = s.state(
       bi.select(col("src").as("v")).distinct()
-        .select(col("v"), array(vhash(col("v"))).as("sk")),
-      eager = true)
+        .select(col("v"), array(vhash(col("v"))).as("sk")))
 
     // Bounded-buffer KMV union (k longs of aggregation state per group at
     // every point, map-side partials included) — exact by associativity of
@@ -92,7 +91,7 @@ object NeighborhoodFunction {
         .select(bi("dst").as("v"), col("sk"))
       state = s.state(state.unionByName(msgs)
         .groupBy("v")
-        .agg(kmvUnion(col("sk")).as("sk")), eager = true)
+        .agg(kmvUnion(col("sk")).as("sk")))
       onHop(hop + 1, state)
       true
     }

@@ -1,31 +1,41 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Superstep
 
 /** Pregel-style PageRank as pure Dataset joins/aggregations (the north-rule
   * flagship; no clusty counterpart — clusty's iterative loops are BFS/greedy,
   * SURVEY.md §2.6 note).
   *
-  * Design for 100 TB:
-  *  - `links` (edge list joined with out-degree) is computed once, hash
-  *    re-partitioned on `src` and persisted — every superstep's
-  *    ranks-into-links join then shuffles only the small rank table, the
-  *    big edge table stays put.
-  *  - contributions are partial-aggregated map-side (`groupBy(dst).sum`),
-  *    so hub fan-in skew is combined before the exchange.
-  *  - the per-vertex state `(vertex, dangling, rank)` is hash-partitioned on
-  *    `vertex` by construction, so both per-superstep joins (ranks→links,
-  *    contribs→state) reuse partitionings instead of re-shuffling the state.
-  *  - **one Spark job per superstep**: the new state is `localCheckpoint`ed
-  *    lazily and materialized by a single combined aggregate that returns
-  *    both the convergence delta (`max |rank − old_rank|`) and the *next*
-  *    superstep's dangling mass (`sum(rank where dangling)`). Dangling-ness
-  *    is a precomputed boolean on the state, not a per-step anti-join.
+  * Design for 100 TB (the Pregel/GraphX layout: state partitioned like the
+  * edges, only messages move):
+  *  - `links` (edge list with each edge's share of its source's out-weight)
+  *    is built by ONE hash exchange on `src` and pinned; the per-vertex
+  *    state `(vertex, dangling, tele, rank)` is hash-partitioned on
+  *    `vertex` with the same P partitions. Each superstep's ranks-into-links
+  *    join reads both in place — no exchange.
+  *  - the messages, plus one zero-contribution carrier row per vertex with
+  *    its `(dangling, tele, old_rank)`, go through ONE exchange to `dst`,
+  *    partial-aggregated map-side (`sum`), so hub fan-in skew is combined
+  *    before the wire; the aggregate's output is the next state, already
+  *    partitioned on `vertex`.
+  *  - the convergence delta (`max |rank − old_rank|`) and the *next*
+  *    superstep's dangling mass (`sum(rank where dangling)`) are metrics of
+  *    the state checkpoint, and the initial counts (n, dangling, seeds) are
+  *    metrics of the initial state: one Spark job per superstep, and no
+  *    separate convergence query. Dangling-ness is a precomputed boolean
+  *    on the state, not a per-step anti-join.
+  *  - P stays fixed because the call runs with
+  *    [[graft.core.Superstep.NoCoalescing]]; if a table's partitioning
+  *    cannot be declared, its join falls back to an exchange.
   *  - the [[graft.core.Superstep]] driver's checkpoint truncates lineage to
   *    O(1) per superstep, frees superstep k−1 once k has materialized, and
-  *    times every superstep; it is the resumable frontier state (on a cluster this becomes a write to an
-  *    Iceberg/parquet `ranks_step_k` table; same contract).
+  *    times every superstep. With `stateDir`, each superstep's checkpoint
+  *    is also written durably (on a cluster, an Iceberg/parquet
+  *    `ranks_step_k` table; same contract), which is what a re-run resumes
+  *    from.
   *  - convergence = `max(abs(delta)) < tol`; both our runs and the in-test
   *    oracle converge to the same epsilon so float-sum reorder noise stays
   *    below the compare tolerance.
@@ -33,7 +43,7 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   /** @param stepSeconds wall seconds of each executed superstep (plan build
-    *   + the materializing aggregate action), as the driver times them — the
+    *   + the checkpoint job), as the driver times them — the
     *   raw series behind the scaling bench's first-step vs steady-state
     *   decomposition. */
   final case class Result(ranks: DataFrame, iterations: Int, converged: Boolean,
@@ -54,7 +64,7 @@ object PageRank {
           stateDir: Option[String] = None,
           weightCol: Option[String] = None,
           seeds: Option[DataFrame] = None): Result =
-    graft.core.Superstep.run("PageRank.run") { s =>
+    Superstep.run("PageRank.run", Superstep.NoCoalescing) { s =>
     // unweighted: every edge weighs 1; weighted: transition probability
     // proportional to the edge weight (share = w / Σ out-weights)
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
@@ -63,15 +73,11 @@ object PageRank {
     // Pre-divide: contribution factor per edge = w/Σw(src). ONE exchange
     // builds the whole table: repartition on src, then out-degree as a
     // window sum over the src partition (WindowExec only sorts within the
-    // already-co-located partition — no second shuffle, unlike the previous
-    // groupBy(outdeg) + join + repartition chain, which exchanged the big
-    // edge table twice and the degree table once). Partitioned on src once;
-    // the big side never moves again across supersteps.
+    // already-co-located partition — no second shuffle).
     val wSrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    val links = s.persist(e.repartition(col("src"))
+    val links = s.pin(e.repartition(col("src"))
       .select(col("src"), col("dst"),
         (col("w") / sum(col("w")).over(wSrc)).as("share")))
-    links.count() // materialize once
 
     val ckpt = stateDir.map(new RankCheckpointer(spark, _))
     val resumeStep = ckpt.map(_.latestStep()).getOrElse(-1)
@@ -82,8 +88,7 @@ object PageRank {
     // elsewhere; dangling mass is redistributed by tele, so uniform
     // PageRank is exactly the seeds=None special case.
     // Vertex set + dangling flag in ONE partial-aggregated shuffle (dangling
-    // = never appears as src), replacing the previous distinct-union +
-    // left-join-with-degrees pair of exchanges.
+    // = never appears as src), partitioned on vertex like the state.
     val st0base = e.select(col("src").as("vertex"), lit(true).as("_has_out"))
       .unionByName(e.select(col("dst").as("vertex"), lit(false).as("_has_out")))
       .groupBy(col("vertex")).agg(max(col("_has_out")).as("_has_out"))
@@ -97,18 +102,10 @@ object PageRank {
           .select(col("vertex"), col("dangling"),
             coalesce(col("_is_seed"), lit(false)).as("seed"))
     }
-    // Checkpoint (vertex, dangling, seed) ONCE: the scalar aggregate below
-    // and the initial rank state both read it — previously each triggered
-    // its own full recomputation of the union+aggregate pipeline (two jobs
-    // where one suffices). The driver frees it once superstep 0 has
-    // materialized.
-    val st0 = s.state(st0pre, eager = true)
-    val r0: Row = st0
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(when(col("dangling"), lit(1L)).otherwise(lit(0L))), lit(0L)).as("nd"),
-        coalesce(sum(when(col("seed"), lit(1L)).otherwise(lit(0L))), lit(0L)).as("ns"),
-        coalesce(sum(when(col("dangling") && col("seed"), lit(1L)).otherwise(lit(0L))), lit(0L)).as("nds"))
-      .head()
+    def ones(c: Column) = coalesce(sum(when(c, lit(1L)).otherwise(lit(0L))), lit(0L))
+    // the vertex, dangling and seed counts come with the checkpoint's job
+    val (st0, r0) = s.stateWith(st0pre, count(lit(1)), ones(col("dangling")),
+      ones(col("seed")), ones(col("dangling") && col("seed")))
     val n = r0.getLong(0)
     val nSeeds = r0.getLong(2)
     require(seeds.isEmpty || nSeeds > 0, "personalized PageRank needs >= 1 seed present in the graph")
@@ -127,7 +124,8 @@ object PageRank {
       else st0.select(col("vertex"), col("dangling"), teleCol.as("tele"),
         teleCol.as("rank"))
     var it = math.max(resumeStep + 1, 0)
-    var converged = false
+    // an empty graph has nothing to rank
+    var converged = n == 0L
     if (resumeStep >= 0) ckpt.get.scalars(resumeStep).foreach { case (delta, carry) =>
       if (!carry.isNaN) danglingMass = carry
       if (!delta.isNaN) converged = delta < tol
@@ -136,14 +134,12 @@ object PageRank {
     // maxIter is a budget: running out is reported as converged = false
     val stepSecs = if (converged) Vector.empty[Double] else s.upTo(maxIter, from = it) { k =>
       // Pregel union-carrier: the state row rides along as a
-      // zero-contribution message carrying (dangling, old_rank), so the new
-      // state is ONE aggregation — no contribs→state join, no sort, and
-      // every vertex is guaranteed present. Two exchanges per superstep:
-      // ranks to the links partitioning, messages to the dst partitioning
-      // (both partial-aggregated map-side, so hub fan-in skew is combined
-      // before the wire).
+      // zero-contribution message carrying (dangling, tele, old_rank), so
+      // the new state is ONE aggregation — no contribs→state join, no sort,
+      // and every vertex is guaranteed present.
       val msgs = links
-        .join(state.select(col("vertex"), col("rank")), links("src") === col("vertex"))
+        .join(state.select(col("vertex"), col("rank")).hint("shuffle_hash"),
+          links("src") === col("vertex"))
         .select(col("dst"), (col("rank") * col("share")).as("contrib"),
           lit(null).cast("boolean").as("dangling"),
           lit(null).cast("double").as("tele"),
@@ -163,18 +159,18 @@ object PageRank {
           (lit(1.0 - damping) * col("tele") + lit(damping) * col("in_mass")
             + lit(damping * danglingMass) * col("tele")).as("rank"),
           col("old_rank"))
-      // the durable superstep barrier, else a checkpoint the agg materializes
-      val next = ckpt.fold(s.state(next0))(_.write(k, next0))
-
-      val row = next.agg(
+      val (next, row) = s.stateWith(next0, Seq("vertex", "dangling", "tele", "rank"),
         max(abs(col("rank") - col("old_rank"))).as("delta"),
         coalesce(sum(when(col("dangling"), col("rank"))), lit(0.0)).as("dmass"))
-        .head()
       val delta = row.getDouble(0)
       danglingMass = row.getDouble(1)
-      ckpt.foreach(_.seal(k, (System.nanoTime() - stepT0) / 1e9, delta, danglingMass))
+      // the durable superstep record, written from the checkpoint's blocks
+      ckpt.foreach { c =>
+        c.write(k, next)
+        c.seal(k, (System.nanoTime() - stepT0) / 1e9, delta, danglingMass)
+      }
 
-      state = next.select(col("vertex"), col("dangling"), col("tele"), col("rank"))
+      state = next
       it = k + 1
       converged = delta < tol
       !converged

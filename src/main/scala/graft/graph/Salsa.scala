@@ -84,8 +84,8 @@ object Salsa {
           val hubNext = eDst.join(ac, eDst("dst") === ac("a"))
             .groupBy(eDst("src").as("vertex")).agg(sum(col("c")).as("s"))
 
-          auth = s.state(authNext, eager = true)
-          hub = s.state(hubNext, eager = true)
+          auth = s.state(authNext)
+          hub = s.state(hubNext)
           true
         }
 

@@ -49,13 +49,12 @@ object ShortestPaths {
     case Some(n) => graft.core.Superstep.run("ShortestPaths.weighted") { s =>
       import spark.implicits._
       val bi = s.pin(biweighted(edges, weightCol))
-      var dist = s.state(Seq((source, 0.0)).toDF("vertex", "dist"), eager = true)
+      var dist = s.state(Seq((source, 0.0)).toDF("vertex", "dist"))
       s.upTo(n) { _ =>
         val relaxed = dist.join(bi, dist("vertex") === bi("src"))
           .select(bi("dst").as("vertex"), (dist("dist") + bi("w")).as("dist"))
         dist = s.state(
-          dist.unionByName(relaxed).groupBy("vertex").agg(min(col("dist")).as("dist")),
-          eager = true)
+          dist.unionByName(relaxed).groupBy("vertex").agg(min(col("dist")).as("dist")))
         true
       }
       dist
@@ -69,7 +68,7 @@ object ShortestPaths {
     graft.core.Superstep.run("ShortestPaths.weightedDelta") { s =>
       import spark.implicits._
       val bi = s.pin(biweighted(edges, weightCol))
-      var dist = s.state(Seq((source, 0.0)).toDF("vertex", "dist"), eager = true)
+      var dist = s.state(Seq((source, 0.0)).toDF("vertex", "dist"))
       var delta = dist
       // a cap below the weighted hop depth throws: a silently truncated
       // distance is a wrong answer, not a partial one
@@ -78,14 +77,13 @@ object ShortestPaths {
         val cand = delta.join(bi, delta("vertex") === bi("src"))
           .select(bi("dst").as("vertex"), (delta("dist") + bi("w")).as("cd"))
           .groupBy("vertex").agg(min(col("cd")).as("cd"))
-        val improved = s.state(
+        val (improved, m) = s.stateWith(
           cand.join(dist, Seq("vertex"), "left")
             .where(col("dist").isNull || col("cd") < col("dist"))
-            .select(col("vertex"), col("cd").as("dist")))
-        val more = improved.count() > 0L
+            .select(col("vertex"), col("cd").as("dist")),
+          count(lit(1)))
+        val more = m.getLong(0) > 0L
         if (more) {
-          // lazy checkpoint: the merge materializes inside the next
-          // superstep's count, keeping ~1 extra job per superstep
           dist = s.state(
             dist.unionByName(improved).groupBy("vertex").agg(min(col("dist")).as("dist")))
           delta = improved
@@ -119,7 +117,7 @@ object ShortestPaths {
         .where(col("src") =!= col("dst"))
       val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))))
 
-      var settled = s.state(seeds, eager = true)
+      var settled = s.state(seeds)
       var frontier = settled
       // maxIter is a budget the SQL twins replay (depth 40), not a cap
       s.upTo(maxIter) { _ =>
@@ -127,11 +125,9 @@ object ShortestPaths {
           .select(keys.filter(_ != "vertex").map(frontier(_)) ++ Seq(bi("dst").as("vertex"),
             (frontier("dist") + lit(1L)).as("dist")): _*)
           .groupBy(keys.map(col): _*).agg(min(col("dist")).as("dist"))
-        // 1-job-per-superstep discipline: lazy checkpoints, materialized by
-        // the single count() (the settled union folds into the next
-        // superstep's first action)
-        val next = s.state(cand.join(settled.select(keys.map(col): _*), keys, "left_anti"))
-        val more = next.count() > 0L
+        val (next, m) = s.stateWith(
+          cand.join(settled.select(keys.map(col): _*), keys, "left_anti"), count(lit(1)))
+        val more = m.getLong(0) > 0L
         if (more) {
           settled = s.state(settled.unionByName(next))
           frontier = next

@@ -32,8 +32,9 @@ object Truss {
       require(k >= 3, s"k-truss needs k >= 3, got $k")
       val minSup = (k - 2).toLong
 
-      var ed = s.state(TriangleCount.canonicalEdges(edges), eager = true)
-      var n = ed.count()
+      val (ed0, n0) = s.stateWith(TriangleCount.canonicalEdges(edges), count(lit(1)))
+      var ed = ed0
+      var n = n0.getLong(0)
       var ws: DataFrame = null
       s.loop(maxIter) { _ =>
         // per-edge support: every triangle (a<b<c) supports its three edges
@@ -47,14 +48,15 @@ object Truss {
             struct(col("b").as("x"), col("c").as("y")))).as("e"))
           .select(col("e.x").as("a"), col("e.y").as("b"))
         val sup = triEdges.groupBy("a", "b").agg(count(lit(1)).as("support"))
-        ws = s.state(ed.join(sup, Seq("a", "b"), "left")
+        val (next, m) = s.stateWith(ed.join(sup, Seq("a", "b"), "left")
           .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support")),
-          eager = true)
+          count(when(col("support") >= minSup, lit(1))))
+        ws = next
         val kept = ws.where(col("support") >= minSup)
-        val nKept = kept.count()
+        val nKept = m.getLong(0)
         // at the fixpoint ws's support reflects the final edge set
         val peeled = nKept != n
-        if (peeled) { ed = s.state(kept.select("a", "b"), eager = true); n = nKept }
+        if (peeled) { ed = s.state(kept.select("a", "b")); n = nKept }
         peeled
       }
       ws

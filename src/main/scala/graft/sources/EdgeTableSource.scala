@@ -151,21 +151,24 @@ object EdgeTableSource {
     * offset) EXPLICITLY — Hadoop's split enumeration does not promise
     * listing order, so the files are listed and sorted here and every
     * record carries its (fileIdx, offset) sort key through one
-    * range-partitioned sort. The header line of EVERY file is skipped
+    * range-partitioned sort. One file needs no sort: `TextInputFormat`
+    * cuts a file's splits in offset order, so its lines are numbered by
+    * `zipWithIndex` in split order. The header line of EVERY file is skipped
     * (byte offset 0 ⇔ first line of its file), so a directory of headered
     * part files does not ingest phantom header objects; blank lines are
     * dropped. */
   def readObjects(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
-    val rows = orderedLines(spark, path)
-      .map { case (key, line) =>
-        val cut = line.indexOf(sep)
-        (key, if (cut >= 0) line.substring(0, cut) else line)
-      }
-      .sortBy(_._1) // range-partitioned sort on (fileIdx, byteOffset)
-      .zipWithIndex()
-      .map { case ((_, obj), i) => Row(obj, i) }
+    val files = listFiles(spark, path)
+    val lines = orderedLines(spark, files)
+    val inOrder =
+      if (files.size == 1) lines
+      else lines.sortBy(_._1) // range-partitioned sort on (fileIdx, byteOffset)
+    val rows = inOrder.zipWithIndex().map { case ((_, line), i) =>
+      val cut = line.indexOf(sep)
+      Row(if (cut >= 0) line.substring(0, cut) else line, i)
+    }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("object", StringType, nullable = false),
       StructField("rank", LongType, nullable = false))))
@@ -186,16 +189,15 @@ object EdgeTableSource {
     }.map(_.getPath).filter(pp => visible(pp.getName)).map(_.toString).sorted.toSeq
   }
 
-  /** Non-header, non-empty lines of a file/directory/glob, each keyed by its
+  /** Non-header, non-empty lines of `files` (a listing in path order), each keyed by its
     * deterministic physical position `(fileIdx, byteOffset)` — the shared
     * scanner behind [[readObjects]] and [[firstAppearanceRanks]] (see the S5
     * scaladoc above for why a DataFrame scan cannot recover line order). */
-  private def orderedLines(spark: SparkSession, path: String)
+  private def orderedLines(spark: SparkSession, files: Seq[String])
       : org.apache.spark.rdd.RDD[((Int, Long), String)] = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapred.TextInputFormat
     val sc = spark.sparkContext
-    val files = listFiles(spark, path)
     val tagged = files.zipWithIndex.map { case (f, fi) =>
       sc.hadoopFile[LongWritable, Text, TextInputFormat](f)
         .flatMap { case (off, t) =>
@@ -274,7 +276,7 @@ object EdgeTableSource {
       val t = s.trim
       if (t.isEmpty) None else try Some(t.toLong) catch { case _: NumberFormatException => None }
     }
-    val pairs = orderedLines(spark, path).flatMap { case ((fi, off), line) =>
+    val pairs = orderedLines(spark, listFiles(spark, path)).flatMap { case ((fi, off), line) =>
       val toks = line.split(sepRegex, -1)
       val ok = toks.length >= needed &&
         filt.forall { case (c, mn, mx) =>

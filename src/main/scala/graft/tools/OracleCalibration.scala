@@ -52,14 +52,15 @@ object OracleCalibration {
           .groupBy(col("u"))
           .agg(max(when(col("ns") === 1, 1).otherwise(0)).as("any_seed"),
             min(when(col("ns") === 2, 1).otherwise(0)).as("all_dead"))
-        val ck = s.state(st.join(agg, st("vertex") === agg("u"), "left")
+        val (ck, m) = s.stateWith(st.join(agg, st("vertex") === agg("u"), "left")
           .select(st("vertex"),
             when(col("status") =!= 0, col("status"))
               .when(col("any_seed") === 1, lit(2))
               .when(coalesce(col("all_dead"), lit(1)) === 1, lit(1)) // no smaller nbrs -> seed
               .otherwise(lit(0)).as("status"),
-            col("status").as("old")))
-        val moves = ck.agg(count(when(col("status") =!= col("old"), lit(1)))).head().getLong(0)
+            col("status").as("old")),
+          count(when(col("status") =!= col("old"), lit(1))))
+        val moves = m.getLong(0)
         st = ck.select(col("vertex"), col("status"))
         if (moves > 0) depth += 1
         moves > 0

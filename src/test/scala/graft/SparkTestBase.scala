@@ -25,6 +25,12 @@ trait SparkTestBase extends AnyFunSuite {
   def withSplitPartitions[T](body: => T): T =
     withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "8")(body)
+
+  /** Registers `name` on the default partitioning and on split partitions. */
+  def bothPartitionings(name: String)(body: => Unit): Unit = {
+    test(s"$name (default partitions)")(body)
+    test(s"$name (split partitions)")(withSplitPartitions(body))
+  }
 }
 
 object SparkTestBase {

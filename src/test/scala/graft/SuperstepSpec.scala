@@ -4,12 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.Superstep
 
-/** The superstep driver's own contract: statistics reset, step release, the
-  * throwing cap, and the rule that no other code path checkpoints. */
+/** The superstep driver's own contract: statistics reset, declared
+  * partitioning, step release, the throwing cap, and the rule that no other
+  * code path checkpoints. */
 class SuperstepSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -40,6 +45,45 @@ class SuperstepSpec extends SparkTestBase {
     // with inherited stats this is ~3^8 * 63 ≈ 413k bits; reset keeps it flat
     assert(bits < 128, s"sizeInBytes bitLength = $bits — stats are compounding again")
     assert(persisted() == before, "an Int result reads nothing, so nothing may stay pinned")
+  }
+
+  /** The partitioning a checkpointed frame declares to the planner. */
+  private def declared(df: DataFrame): Partitioning =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.outputPartitioning }.get
+
+  private def keyed = (0L until 40L).map(i => (i % 7, i)).toDF("k", "v")
+  private def other = (0L until 10L).map(i => (i, s"x$i")).toDF("k", "name")
+  private def joined(a: DataFrame) =
+    a.join(other, "k").collect().map(_.toString).sorted.toSeq
+
+  bothPartitionings("a pin built by a hash exchange on k declares HashPartitioning(k, P)") {
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Superstep.run("SuperstepSpec") { s =>
+      val pinned = s.pin(keyed.repartition(p, col("k")))
+      declared(pinned) match {
+        case HashPartitioning(Seq(k: Attribute), n) => assert(k.name == "k" && n == p)
+        case other => fail(s"declared $other")
+      }
+      val state = s.state(keyed.groupBy("k").agg(count(lit(1)).as("n")))
+      assert(joined(pinned) == joined(keyed))
+      assert(joined(state) == joined(keyed.groupBy("k").agg(count(lit(1)).as("n"))))
+      // a shuffled join reads the pin in place: only the other side moves
+      val plan = pinned.join(other.hint("shuffle_hash"), "k").queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    }
+  }
+
+  bothPartitionings("a checkpoint whose exchange AQE coalesced declares nothing") {
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "true") {
+      Superstep.run("SuperstepSpec") { s =>
+        val pinned = s.pin(keyed.repartition(col("k")))
+        val state = s.state(keyed.repartition(col("k")))
+        assert(declared(pinned) == UnknownPartitioning(0))
+        assert(declared(state) == UnknownPartitioning(0))
+        assert(joined(pinned) == joined(keyed))
+        assert(joined(state) == joined(keyed))
+      }
+    }
   }
 
   private val path200 = (1L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
