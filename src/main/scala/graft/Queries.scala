@@ -46,15 +46,19 @@ object Queries {
     edgeCache.getOrElseUpdate((spark.sparkContext.applicationId, sfDir, key), {
       val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize eagerly so every consumer pays the build once
-      graft.core.CacheRegistry.register(df)
+      df
     })
 
-  /** Release every internally persisted table (shared edge/cc caches here,
-    * LSH signature projections registered by Dedup/Similarity). Call before
-    * `spark.stop()` in batch mains, or whenever the data under an sfDir
-    * changes mid-session (the cache is keyed by path, not content). */
+  /** Release the session cache of the catalog's shared inputs (the edge and
+    * cc tables above) and the memoized models. Call before `spark.stop()` in
+    * batch mains, or whenever the data under an sfDir changes mid-session
+    * (the cache is keyed by path, not content). Operator-internal tables
+    * are not cached here: they live in [[graft.core.Superstep]] scopes. */
   def clearCaches(): Unit = {
-    graft.core.CacheRegistry.clearAll()
+    edgeCache.valuesIterator.foreach { df =>
+      try df.unpersist(blocking = false)
+      catch { case scala.util.control.NonFatal(_) => () } // session may already be stopped
+    }
     edgeCache.clear()
     QueriesDoc.clearModels()
   }

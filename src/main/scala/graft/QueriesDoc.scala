@@ -192,7 +192,7 @@ object QueriesDoc {
       _ => graft.sim.Ivf.train(emb(spark, sfDir), nlist = 8, iters = 5))
 
   /** Drop memoized trained models (Queries.clearCaches calls this — same
-    * lifecycle as the persisted-table registry). */
+    * lifecycle as the catalog's session cache of shared inputs). */
   private[graft] def clearModels(): Unit = ivfModels.clear()
 
   /** The inverted file itself: nearest-cell assignment + cell population

@@ -8,9 +8,10 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.storage.StorageLevel
 
-/** The superstep driver: the one way an iterative (Pregel-style) operator
-  * runs its loop and holds its intermediates. An operator call opens a
-  * scope with [[Superstep.run]] and registers every table it materializes:
+/** The superstep driver: the one way an operator holds its intermediates
+  * and an iterative (Pregel-style) one runs its loop. An operator call
+  * opens a scope with [[Superstep.run]] and registers every table it
+  * materializes:
   *
   *  - [[state]] — loop state, an eager local checkpoint with plan
   *    STATISTICS reset. Plain `localCheckpoint` copies the pre-checkpoint
@@ -26,6 +27,15 @@ import org.apache.spark.storage.StorageLevel
   *    sets): an eager local checkpoint that keeps the estimated statistics
   *    (computed once, they cannot compound).
   *  - [[persist]] — a `MEMORY_AND_DISK` cached table.
+  *
+  * A non-iterative operator whose lazy result reads a table it built once
+  * (triangle counting's oriented edges, an LSH signature projection) opens
+  * a scope and [[pin]]s that table: it is computed when the frame is built,
+  * survives the scope because the result reads it, and is freed with the
+  * result (see the exit rule below). Outside this driver, only the
+  * catalog's session cache of shared inputs (`graft.Queries`) and the CLI's
+  * one scan per process (`graft.Main`) persist a table (SuperstepSpec
+  * guards this).
   *
   * A [[state]] or [[pin]] declares its real partitioning: when the final
   * adaptive plan that built it ends in a hash exchange on its own columns,
@@ -50,7 +60,10 @@ import org.apache.spark.storage.StorageLevel
   * registered except the checkpoints that the frames in the returned value
   * read; persisted tables are always released. Checkpoints that survive a
   * scope nested in another (an operator calling an operator) pass to the
-  * enclosing scope as its state.
+  * enclosing scope as its state, so the enclosing loop's step rule frees
+  * them (Truss frees each round's triangle table in the next round).
+  * Checkpoints that survive an outermost scope are Spark's: its
+  * ContextCleaner frees them once no live frame reads them.
   */
 final class Superstep private (op: String) {
   import Superstep.{checkpointed, Held}

@@ -91,61 +91,63 @@ object Dedup {
         (m, h) => least(m, h)))
 
   /** LSH banding: rows×bands decomposition of the signature; one row per
-    * (doc, band) with the band's bucket hash. */
+    * (doc, band) with the band's bucket hash. The signature job runs when
+    * the frame is built (the projection is an eager pin, see below). */
   def lshBuckets(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                  k: Int = 32, bands: Int = 8, shingleN: Int = 3): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    // Persist the (id, sig) projection: without the barrier, projection
-    // collapse inlines the k-hash signature into the per-band lambda and it
-    // is recomputed `bands` times per row (and once more per self-join side
-    // downstream). (id, sig[k]) is ~8k bytes/row — cheap at any scale.
-    val sig = graft.core.CacheRegistry.register(
-      docs.select(col(idCol), minhashSignature(col(textCol), k, shingleN).as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    sig.select(col(idCol), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",", slice(col("sig"), b * lit(r) + lit(1), lit(r))), b))))
-      .toDF(idCol, "band", "bucket")
+    graft.core.Superstep.run("Dedup.lshBuckets") { s =>
+      // Pin the (id, sig) projection: without the barrier, projection
+      // collapse inlines the k-hash signature into the per-band lambda and
+      // it is recomputed `bands` times per row (and once more per self-join
+      // side downstream). (id, sig[k]) is ~8k bytes/row — cheap at any scale.
+      val sig = s.pin(docs.select(col(idCol), minhashSignature(col(textCol), k, shingleN).as("sig")))
+      sig.select(col(idCol), posexplode(
+          transform(sequence(lit(0), lit(bands - 1)),
+            b => xxhash64(concat_ws(",", slice(col("sig"), b * lit(r) + lit(1), lit(r))), b))))
+        .toDF(idCol, "band", "bucket")
+    }
   }
 
   /** Candidate near-dup pairs from LSH buckets, verified with exact shingle
     * Jaccard; `maxBucket` caps pathological buckets (skew guardrail).
-    * Returns (a, b, jaccard) with a < b, jaccard >= threshold. */
+    * Returns (a, b, jaccard) with a < b, jaccard >= threshold. Building
+    * the frame runs the signature and candidate jobs (both are pins). */
   def minhashPairs(docs: DataFrame, threshold: Double, idCol: String = "doc_id",
                    textCol: String = "text", k: Int = 32, bands: Int = 8,
-                   shingleN: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    val buckets = lshBuckets(docs, idCol, textCol, k, bands, shingleN)
-    // Bucket cap via partial-aggregated count + join, NOT a window: a
-    // window partitioned by (band, bucket) funnels a degenerate mega-bucket
-    // — the exact thing the cap exists to defuse — through ONE sort task
-    // before dropping it. The groupBy count combines map-side and the join
-    // spreads the doomed bucket's rows across tasks (round 6; the
-    // q_vocab_stats argmax argument applied to the guardrail itself).
-    val sizes = buckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bn")).where(col("bn") <= maxBucket)
-    val capped = buckets.join(sizes, Seq("band", "bucket"))
-    val l = capped.select(col("band"), col("bucket"), col(idCol).as("a"))
-    val rt = capped.select(col("band"), col("bucket"), col(idCol).as("b"))
-    // the candidate id-pair set is tiny (8-byte keys, post-cap) and feeds
-    // TWO consumers below — persist it so the bucket join runs once
-    val cand = graft.core.CacheRegistry.register(
-      l.join(rt, Seq("band", "bucket")).where(col("a") < col("b"))
-        .select("a", "b").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // materialize shingles ONLY for docs that appear in a candidate pair
-    // (semi-join prune): at corpus scale candidates are a sliver of the
-    // corpus, and rebuilding every document's shingle set just to verify
-    // that sliver would dominate the job
-    val candIds = cand.select(col("a").as(idCol)).union(cand.select(col("b").as(idCol))).distinct()
-    val sh = docs.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol), shingles(col(textCol), shingleN).as("sh"))
-    cand
-      .join(sh.select(col(idCol).as("a"), col("sh").as("sha")), "a")
-      .join(sh.select(col(idCol).as("b"), col("sh").as("shb")), "b")
-      .select(col("a"), col("b"), round(jaccard(array_distinct(col("sha")), array_distinct(col("shb"))), 6).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
+                   shingleN: Int = 3, maxBucket: Int = 1000): DataFrame =
+    graft.core.Superstep.run("Dedup.minhashPairs") { s =>
+      val buckets = lshBuckets(docs, idCol, textCol, k, bands, shingleN)
+      // Bucket cap via partial-aggregated count + join, NOT a window: a
+      // window partitioned by (band, bucket) funnels a degenerate mega-bucket
+      // — the exact thing the cap exists to defuse — through ONE sort task
+      // before dropping it. The groupBy count combines map-side and the join
+      // spreads the doomed bucket's rows across tasks (round 6; the
+      // q_vocab_stats argmax argument applied to the guardrail itself).
+      val sizes = buckets.groupBy(col("band"), col("bucket"))
+        .agg(count(lit(1)).as("bn")).where(col("bn") <= maxBucket)
+      val capped = buckets.join(sizes, Seq("band", "bucket"))
+      val l = capped.select(col("band"), col("bucket"), col(idCol).as("a"))
+      val rt = capped.select(col("band"), col("bucket"), col(idCol).as("b"))
+      // the candidate id-pair set is tiny (8-byte keys, post-cap) and feeds
+      // TWO consumers below — pin it so the bucket join runs once (the
+      // signature pin is freed when this scope exits: nothing below reads it)
+      val cand = s.pin(l.join(rt, Seq("band", "bucket")).where(col("a") < col("b"))
+        .select("a", "b").distinct())
+      // materialize shingles ONLY for docs that appear in a candidate pair
+      // (semi-join prune): at corpus scale candidates are a sliver of the
+      // corpus, and rebuilding every document's shingle set just to verify
+      // that sliver would dominate the job
+      val candIds = cand.select(col("a").as(idCol)).union(cand.select(col("b").as(idCol))).distinct()
+      val sh = docs.join(candIds, Seq(idCol), "left_semi")
+        .select(col(idCol), shingles(col(textCol), shingleN).as("sh"))
+      cand
+        .join(sh.select(col(idCol).as("a"), col("sh").as("sha")), "a")
+        .join(sh.select(col(idCol).as("b"), col("sh").as("shb")), "b")
+        .select(col("a"), col("b"), round(jaccard(array_distinct(col("sha")), array_distinct(col("shb"))), 6).as("jaccard"))
+        .where(col("jaccard") >= threshold)
+    }
 
   /** Benchmark decontamination: documents of `docs` that share at least
     * `minHits` distinct n-gram shingles with ANY document of `bench` — the

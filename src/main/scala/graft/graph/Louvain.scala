@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed Louvain community detection with a resolution parameter and
   * Leiden's connectedness guarantee — the engine's counterpart of clusty's

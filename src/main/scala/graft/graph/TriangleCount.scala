@@ -45,33 +45,33 @@ object TriangleCount {
   /** All triangles as (a, b, c) with a < b < c, each exactly once.
     *
     * The oriented edge table feeds THREE consumers below (both wedge sides
-    * and the closing-edge probe); without a cache barrier the whole
+    * and the closing-edge probe); without a barrier the whole
     * canonicalize→degree→orient pipeline re-executes once per consumer
-    * (no ReuseExchange fires — the broadcast sides differ). Persisting it
-    * (registered with [[graft.core.CacheRegistry]]: plan-dedup'd, LRU-
-    * bounded, so repeated calls — e.g. Truss's per-round invocation — stay
-    * bounded) computes it once per call. */
-  def triangles(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val or = graft.core.CacheRegistry.register(
-      oriented(canonicalEdges(edges))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val l = or.toDF("u", "va", "dva")
-    val r = or.toDF("u", "vb", "dvb")
-    // ordered out-neighbor pairs at the middle vertex: (dva,va) < (dvb,vb),
-    // which is exactly the orientation of the closing edge va -> vb
-    val wedges = l.join(r, "u")
-      .where((col("dva") < col("dvb")) ||
-        (col("dva") === col("dvb") && col("va") < col("vb")))
-      .select(col("u"), col("va"), col("vb"))
-    val closing = or.select(col("u").as("va"), col("v").as("vb"))
-    val tri = wedges.join(closing, Seq("va", "vb"))
-    // restore the id-canonical (a < b < c) output contract
-    val sorted = array_sort(array(col("u"), col("va"), col("vb")))
-    tri.select(
-      element_at(sorted, 1).as("a"),
-      element_at(sorted, 2).as("b"),
-      element_at(sorted, 3).as("c"))
-  }
+    * (no ReuseExchange fires — the broadcast sides differ). It is pinned
+    * in a [[graft.core.Superstep]] scope, so it is computed once, when the
+    * frame is built, and freed with the frame: inside an enclosing scope
+    * (Truss's per-round call) by that scope's step rule, otherwise by
+    * Spark's ContextCleaner once no live frame reads it. */
+  def triangles(spark: SparkSession, edges: DataFrame): DataFrame =
+    graft.core.Superstep.run("TriangleCount.triangles") { s =>
+      val or = s.pin(oriented(canonicalEdges(edges)))
+      val l = or.toDF("u", "va", "dva")
+      val r = or.toDF("u", "vb", "dvb")
+      // ordered out-neighbor pairs at the middle vertex: (dva,va) < (dvb,vb),
+      // which is exactly the orientation of the closing edge va -> vb
+      val wedges = l.join(r, "u")
+        .where((col("dva") < col("dvb")) ||
+          (col("dva") === col("dvb") && col("va") < col("vb")))
+        .select(col("u"), col("va"), col("vb"))
+      val closing = or.select(col("u").as("va"), col("v").as("vb"))
+      val tri = wedges.join(closing, Seq("va", "vb"))
+      // restore the id-canonical (a < b < c) output contract
+      val sorted = array_sort(array(col("u"), col("va"), col("vb")))
+      tri.select(
+        element_at(sorted, 1).as("a"),
+        element_at(sorted, 2).as("b"),
+        element_at(sorted, 3).as("c"))
+    }
 
   /** Global triangle count: single-row DataFrame (n_triangles: Long). */
   def globalCount(spark: SparkSession, edges: DataFrame): DataFrame =

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * edges' support, so peeling is monotone and terminates in ≤ m rounds
   * (in practice a handful). Every round is scan + equi-join + partial
   * aggregate (AQE free to broadcast the shrinking edge set); loop-carried
-  * state goes through the [[graft.core.Superstep]] driver so dead rounds
-  * free their blocks immediately and the round cap throws.
+  * state, each round's pinned triangle table included, goes through the
+  * [[graft.core.Superstep]] driver so dead rounds free their blocks in the
+  * next round and the round cap throws.
   */
 object Truss {
 

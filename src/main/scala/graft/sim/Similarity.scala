@@ -2,7 +2,6 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor / similarity search over an embedding column
   * (`array<float>`).
@@ -128,14 +127,6 @@ object Similarity {
         call_function("shiftright", sig, b * lit(r)).bitwiseAND(lit(mask)).as("bucket")))
   }
 
-  /** (id, band, bucket) exploded banding of the signature table.
-    *
-    * The signature projection is **persisted** before the per-band explode:
-    * otherwise Catalyst's projection collapse inlines the (nBits × dim
-    * xxhash64) signature expression into the band lambda — recomputing it
-    * once per band — and a downstream self-join doubles the whole subtree
-    * again. The persisted table is (id, sig:long): tiny at any scale, and
-    * exactly what a production pipeline would materialize anyway. */
   /** Fail-fast guard: the literal plane matrix is dim-specific, and the
     * kernel's HOF-parity contract maps a length mismatch to an all-zero
     * signature — at scale that silently degenerates LSH to one bucket (or,
@@ -152,14 +143,25 @@ object Similarity {
           s"$what: embedding length ${r.getInt(0)} != configured dim $dim — pass dim explicitly")
     }
 
+  /** (id, band, bucket) exploded banding of the signature table.
+    *
+    * The signature projection is **pinned** before the per-band explode:
+    * otherwise Catalyst's projection collapse inlines the (nBits × dim
+    * xxhash64) signature expression into the band lambda — recomputing it
+    * once per band — and a downstream self-join doubles the whole subtree
+    * again. The pinned table is (id, sig:long): tiny at any scale, and
+    * exactly what a production pipeline would materialize anyway. The pin
+    * is a [[graft.core.Superstep]] scope's: it is computed when the frame is
+    * built and freed with the frame (by Spark's ContextCleaner once no live
+    * frame reads it, or by an enclosing scope). */
   private def bandedIds(df: DataFrame, idCol: String, vecCol: String,
                         nBits: Int, bands: Int, seed: Long, dim: Int): DataFrame = {
     checkDim(df, vecCol, dim, s"rhpSignature($idCol)")
-    val sig = graft.core.CacheRegistry.register(
-      df.select(col(idCol), rhpSignature(col(vecCol), nBits, seed, dim).as("sig"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    sig.select(col(idCol), explode(bandBuckets(col("sig"), nBits, bands)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
+    graft.core.Superstep.run("Similarity.bandedIds") { s =>
+      val sig = s.pin(df.select(col(idCol), rhpSignature(col(vecCol), nBits, seed, dim).as("sig")))
+      sig.select(col(idCol), explode(bandBuckets(col("sig"), nBits, bands)).as("bb"))
+        .select(col(idCol), col("bb.band"), col("bb.bucket"))
+    }
   }
 
   /** LSH-bucketed ANN: candidates share at least one signature band; rerank

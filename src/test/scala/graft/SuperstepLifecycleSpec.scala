@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
 
 import graft.graph._
 
-/** Storage lifecycle of every operator on the superstep driver, from the
-  * outside: the `getPersistentRDDs` delta of one call must be exactly the
-  * checkpoints its returned frames read after a normal return, and empty
-  * after a throw. Tables in the session-wide `CacheRegistry` (triangle
-  * counting's oriented edges) are not the operator's and are cleared before
-  * the delta is taken. */
+/** Storage lifecycle of every operator that holds tables on the superstep
+  * driver — the iterative ones and those that pin a per-call table
+  * (triangle counting, the LSH operators) — from the outside: the
+  * `getPersistentRDDs` delta of one call must be exactly the checkpoints
+  * its returned frames read after a normal return, and empty after a
+  * throw. */
 class SuperstepLifecycleSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -30,7 +30,7 @@ class SuperstepLifecycleSpec extends SparkTestBase {
 
   private def delta(call: => Unit): Set[Int] = {
     val before = persisted()
-    try call finally core.CacheRegistry.clearAll()
+    call
     persisted() -- before
   }
 
@@ -45,6 +45,13 @@ class SuperstepLifecycleSpec extends SparkTestBase {
   private def path(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
   // a chain of triangles sharing edges peels one triangle per 4-truss round
   private def triChain = (1L to 6L).flatMap(i => Seq((i, i + 1), (i, i + 2))).toDF("src", "dst")
+  // near-duplicate texts (0, 1, 3) and vectors (ids 0 and 1 share a direction)
+  private def docs = Seq((0L, "the quick brown fox jumps over the lazy dog today"),
+    (1L, "the quick brown fox jumps over the lazy dog tonight"),
+    (2L, "completely different words about cooking pasta with basil"),
+    (3L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")
+  private def vecs = Seq((0L, Seq(1f, 2f, 3f, 4f)), (1L, Seq(1f, 2f, 3f, 4.01f)),
+    (2L, Seq(-4f, 1f, 0f, 2f)), (3L, Seq(0f, -1f, 5f, -2f))).toDF("id", "vec")
   private def failing(df: DataFrame) =
     df.withColumn("src", when(col("src") === 5L, raise_error(lit("boom"))).otherwise(col("src")))
 
@@ -71,6 +78,11 @@ class SuperstepLifecycleSpec extends SparkTestBase {
       measureRefineDepth = true).assignment)),
     "Louvain.minLabelDepth" -> (() => { Louvain.minLabelDepth(spark, g); Nil }),
     "Truss.truss" -> (() => Seq(Truss.truss(spark, triChain, 4))),
+    "TriangleCount.globalCount" -> (() => Seq(TriangleCount.globalCount(spark, g))),
+    "Dedup.minhashPairs" -> (() => Seq(dedup.Dedup.minhashPairs(docs, 0.5))),
+    "Similarity.lshTopK" -> (() => Seq(sim.Similarity.lshTopK(vecs,
+      vecs.toDF("qid", "qvec"), k = 2, dim = 4))),
+    "Similarity.nearDupPairs" -> (() => Seq(sim.Similarity.nearDupPairs(vecs, 0.99, dim = 4))),
     "NeighborhoodFunction.kmvReach" -> (() => Seq(NeighborhoodFunction.kmvReach(spark, g, 3, 4))),
     "NeighborhoodFunction.reachCurve" -> (() => Seq(NeighborhoodFunction.reachCurve(spark, g, 3, 4))),
     "StronglyConnectedComponents.run" -> (() => Seq(StronglyConnectedComponents.run(spark, dg))),
@@ -108,7 +120,9 @@ class SuperstepLifecycleSpec extends SparkTestBase {
       StronglyConnectedComponents.run(spark, dg, maxInner = 1)),
     "Hits.run (failing input)" -> (() => Hits.run(spark, failing(dg))),
     "PageRank.run (failing input)" -> (() => PageRank.run(spark, failing(dg))),
-    "Salsa.run (failing input)" -> (() => Salsa.run(spark, failing(dg))))
+    "Salsa.run (failing input)" -> (() => Salsa.run(spark, failing(dg))),
+    "TriangleCount.globalCount (failing input)" -> (() =>
+      TriangleCount.globalCount(spark, failing(g)).collect()))
 
   throws.foreach { case (name, call) =>
     test(s"$name: after a throw, nothing stays") {
