@@ -272,15 +272,7 @@ object Main {
     // missing-positionals usage error
     if (args.contains("--version")) { println("graft (clusty-compatible CLI) 0.1.0"); return }
     val cfg = parse(args.toSeq)
-    val builder = SparkSession.builder().appName("graft")
-    if (!sys.props.contains("spark.master") && sys.env.get("MASTER").isEmpty)
-      builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-    val spark = builder
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Superstep.quietReleases()
+    val spark = graft.core.Session.getOrCreate()
     try {
       val header = EdgeTableSource.headerLine(spark, cfg.distances)
       val opts = readOptions(cfg, header)

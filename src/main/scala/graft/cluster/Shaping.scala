@@ -74,12 +74,6 @@ object Shaping {
       .select(coalesce(col("member"), col("object")).as("object"), col("new_cluster").as("cluster"))
   }
 
-  /** O2 alone, for an assignment already numbered by [[renumberBySize]]
-    * (re-ranking such a numbering keeps it): append universe objects that
-    * have no assignment as singleton clusters in universe rank order. */
-  def appendSingletons(assign: DataFrame, universe: DataFrame): DataFrame =
-    renumber(assign, Some(universe))
-
   /** O1 — final output order: cluster asc, then member order (name asc when
     * no universe ranks; universe rank asc otherwise). Adds `member_order`
     * for deterministic downstream byte-compare. */

@@ -165,13 +165,6 @@ object Superstep {
 
   private val current = new DynamicVariable[Option[Superstep]](None)
 
-  /** Sets the "locally checkpointed … cannot be recomputed" WARN, which
-    * every expected release of a checkpoint logs, to ERROR; a main calls it
-    * where it builds its session so its log keeps the real warnings. */
-  def quietReleases(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-
   /** Keeps every shuffle of a scope at `spark.sql.shuffle.partitions` (P):
     * AQE partition coalescing off, so a state or pin built by a hash
     * exchange declares that partitioning and the next step joins it in

@@ -34,8 +34,9 @@ package object functions {
   def stopword_hits(text: Column): Column =
     GraftShim.column(StopwordHitCount(GraftShim.expression(text)))
 
-  /** Register the native expressions as SQL functions on a live session
-    * (alternative to spark.sql.extensions=graft.plans.GraftExtensions). */
+  /** Register the native expressions as SQL functions on a live session,
+    * e.g. `SELECT simhash64(text) FROM documents`. The Column API above
+    * needs no registration. */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     GraftShim.registerFunction(spark, "simhash64", es => SimHash64(es.head))
     GraftShim.registerFunction(spark, "simhash64_md5", es => SimHash64(es.head, portable = true))

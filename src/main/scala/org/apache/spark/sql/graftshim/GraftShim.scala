@@ -15,8 +15,8 @@ object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a SQL function on a live session (the extensions-free path;
-    * `graft.plans.GraftExtensions` covers the spark.sql.extensions path). */
+  /** Register a SQL function on a live session (the one registration path,
+    * used by `graft.functions.registerAll`). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

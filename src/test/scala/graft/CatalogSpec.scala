@@ -28,4 +28,10 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("every Bench group names catalog queries") {
+    // a renamed catalog entry would otherwise only show as a -1 row
+    val unknown = (Bench.Headline ++ Bench.GraphGroup).filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"Bench rows with no catalog query: $unknown")
+  }
+
 }

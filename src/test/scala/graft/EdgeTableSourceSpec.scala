@@ -173,7 +173,7 @@ class EdgeTableSourceSpec extends SparkTestBase {
       .select(col("object"), col("component").as("cluster"))
     val shaped = Shaping.renumberBySize(assign0)
       .select(col("object"), col("cluster"))
-    val full = Shaping.appendSingletons(shaped, universe)
+    val full = Shaping.renumber(shaped, Some(universe))
       .join(universe, "object")
       .orderBy(col("cluster"), col("rank"))
       .select(col("object"), col("cluster"))

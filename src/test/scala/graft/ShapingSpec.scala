@@ -45,7 +45,7 @@ class ShapingSpec extends SparkTestBase {
 
     val universe = objs.zipWithIndex.map { case (o, i) => (o, i.toLong) }.toDF("object", "rank")
     val assign = inGraph.toSeq.toDF("object", "cluster")
-    val full = Shaping.appendSingletons(assign, universe)
+    val full = Shaping.renumber(assign, Some(universe))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(full == inGraph ++ Map("c" -> 3L, "d" -> 4L, "e" -> 5L, "f" -> 6L, "g" -> 7L))
 

@@ -34,16 +34,6 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.core.Superstep.quietReleases()
-    s
-  }
+  /** `local[4]`, 4 shuffle partitions, UTC, no UI. */
+  lazy val session: SparkSession = graft.core.Session.getOrCreate(cpus = 4)
 }

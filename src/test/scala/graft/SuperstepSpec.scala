@@ -135,4 +135,11 @@ class SuperstepSpec extends SparkTestBase {
       Seq("""(?<!\bs)\.persist\(""".r, """\.cache\(\)""".r))
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  /** One way to build a session: every main gets its master, defaults and
+    * log levels from `graft.core.Session`. */
+  test("only the session helper builds a SparkSession") {
+    val found = offenders(Set("Session.scala"), Seq(Regex.quote("SparkSession.builder").r))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }
