@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.dedup.Dedup
+import graft.events.EventOps
 import graft.sim.Similarity
-import graft.streaming.EventOps
 import graft.text.TextOps
 
 /** Document / embedding / event queries (training-data-pipeline operator

@@ -14,12 +14,7 @@ object Tables {
     spark.read.parquet(s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "lineitem")
-  def orders(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "orders")
-  def customer(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "customer")
   def part(spark: SparkSession, sfDir: String): DataFrame      = load(spark, sfDir, "part")
-  def supplier(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "supplier")
-  def nation(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "nation")
-  def region(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "region")
   def events(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "events")
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
@@ -27,14 +22,7 @@ object Tables {
 
 /** Core row types of the engine (see SURVEY.md §1). */
 object Model {
-  /** A weighted edge of the link graph; clusty's distance-table row
-    * (reference: src/sparse_matrix.h:15-38 stores the same triple per
-    * adjacency entry). */
-  case class Edge(src: Long, dst: Long, weight: Double)
-
   /** A Common-Crawl-style web page (BASELINE.json input_hint shape). */
   case class Page(url: String, warc_ts: java.sql.Timestamp, html: Array[Byte],
                   text: String, lang: String)
-
-  case class Assignment(vertex: Long, cluster: Long)
 }

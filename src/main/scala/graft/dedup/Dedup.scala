@@ -38,8 +38,7 @@ object Dedup {
     * min id wins, matching [[exact]]). `knownFps` is the stored fingerprint
     * column of the existing corpus — 8 bytes/doc, the only state the ingest
     * job needs (at 100 TB: a bucketed fingerprint table; this anti-join is
-    * then co-located). The streaming twin is
-    * [[graft.streaming.StreamingDedup]]. */
+    * then co-located). */
   def incremental(newDocs: DataFrame, knownFps: DataFrame,
                   idCol: String = "doc_id", textCol: String = "text",
                   fpCol: String = "fingerprint"): DataFrame = {

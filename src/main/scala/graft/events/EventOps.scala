@@ -1,17 +1,15 @@
-package graft.streaming
+package graft.events
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-table operators, batch + Structured Streaming.
-  *
-  * The reference has no streaming surface (SURVEY.md §2.7) — these are the
-  * training-pipeline operators a web-scale engine needs anyway. The batch
-  * forms below are deterministic and DuckDB-checkable; [[streamingWindowCounts]]
-  * runs the same windowed aggregation as an unbounded `readStream` with a
-  * watermark, demonstrating the migration path (same logical plan, incremental
-  * execution).
+/** Event-table operators: sessionization, hourly window counts and top
+  * users over the `events` table. All are batch, deterministic and
+  * DuckDB-checkable (catalog queries `q_sessions`, `q_window_counts` and
+  * `q_top_users`). The reference has no event surface (SURVEY.md §2.7);
+  * these are the training-pipeline operators a web-scale engine needs
+  * anyway.
   */
 object EventOps {
 
@@ -39,34 +37,10 @@ object EventOps {
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 6).as("value_sum"))
 
-  /** Tumbling-window counts per event type (batch form; hour buckets). */
+  /** Tumbling-window counts per event type (hour buckets). */
   def windowCounts(events: DataFrame): DataFrame =
     events.groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("value_sum"))
-
-  /** The same windowed aggregation as Structured Streaming over a bounded
-    * file source — watermarked event-time tumbling windows, memory sink.
-    * Returns the materialized result after processing all available input. */
-  def streamingWindowCounts(spark: SparkSession, parquetPath: String,
-                            queryName: String = "graft_stream_counts"): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    // watermarks require TIMESTAMP (LTZ); parquet event time may be NTZ —
-    // under session TZ UTC the cast is value-preserving
-    val stream = spark.readStream.schema(schema).parquet(parquetPath)
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("hour"), col("event_type"), col("n"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
-  }
 
   /** Top-N users by event volume with rank. `orderBy.limit` compiles to
     * TakeOrderedAndProject (per-partition top-n + merge of n·P rows — no

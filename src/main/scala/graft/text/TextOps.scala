@@ -17,11 +17,6 @@ object TextOps {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: alternating letter-runs / digit-runs /
-    * single punctuation, the classic pre-tokenizer regex. */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, """(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"""), t => t =!= lit("")))
-
   /** Ratio of punctuation (non-alphanumeric, non-space) chars. */
   def punctRatio(text: Column): Column =
     when(length(text) === 0, lit(0.0)).otherwise(
@@ -230,17 +225,5 @@ object TextOps {
       .select(col("lang"), col("n_terms"), col("n_tokens"), col("n_hapax"),
         col("top.term").as("top_term"), col("top.c").as("top_count"),
         round(col("top.c").cast("double") / col("n_tokens"), 6).as("top_share"))
-  }
-
-  // ---- DataFrame-level conveniences ---------------------------------------
-
-  def analyze(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs.withColumn("n_tokens", tokenCount(t))
-      .withColumn("n_subwords", subwordCount(t))
-      .withColumn("punct_ratio", round(punctRatio(t), 6))
-      .withColumn("stopword_ratio", round(stopwordRatio(t), 6))
-      .withColumn("lang_pred", langId(t))
-      .withColumn("quality", qualityScore(t))
   }
 }

@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
-import graft.streaming.EventOps
+import graft.events.EventOps
 
 class EventOpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -27,24 +25,6 @@ class EventOpsSpec extends SparkTestBase {
     assert(got((1L, 1L)) == (3L, 6.0))
     assert(got((1L, 2L)) == (1L, 4.0))
     assert(got((2L, 1L)) == (1L, 5.0))
-  }
-
-  test("streaming windowed counts equal the batch form on the events table") {
-    // streaming file source needs a directory: stage the single parquet file
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      dir.resolve("events.parquet"))
-    val path = dir.toString
-    // compare on string form: batch hour is NTZ, streaming (watermark) is LTZ,
-    // equal wall-clock under session TZ UTC
-    val batch = EventOps.windowCounts(spark.read.parquet(path))
-      .selectExpr("cast(hour as string) h", "event_type", "n")
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val streamed = EventOps.streamingWindowCounts(spark, path, "evtest")
-      .selectExpr("cast(hour as string) h", "event_type", "n")
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(streamed == batch)
   }
 
   test("top users ranking is deterministic") {

@@ -108,6 +108,40 @@ class SuperstepSpec extends SparkTestBase {
     assert(ex.getMessage.contains("ConnectedComponents"), ex.getMessage)
   }
 
+  test("KCore.coreVertices throws at its cap while peeling a 200-vertex path") {
+    // k = 2 peels only the two ends of the path per round
+    val ex = intercept[IllegalStateException](
+      graft.graph.KCore.coreVertices(spark, path200, k = 2, maxIter = 5).collect())
+    assert(ex.getMessage.contains("KCore.coreVertices") && ex.getMessage.contains("step 5"),
+      ex.getMessage)
+  }
+
+  test("Truss.truss throws at its cap while peeling a triangulated cylinder") {
+    // 7 rings of 4 vertices, each square between rings split by a diagonal:
+    // every edge lies on two triangles except the end rings' edges, so the
+    // 4-truss peel works inward from both ends, 8 rounds in all
+    val rings = 7
+    def v(i: Int, j: Int): Long = i * 4L + Math.floorMod(j, 4)
+    val cylinder = (for {
+      i <- 0 until rings; j <- 0 until 4
+      e <- Seq((v(i, j), v(i, j + 1))) ++
+        (if (i + 1 < rings) Seq((v(i, j), v(i + 1, j)), (v(i, j), v(i + 1, j + 1))) else Nil)
+    } yield e).toDF("src", "dst")
+    val ex = intercept[IllegalStateException](
+      graft.graph.Truss.truss(spark, cylinder, k = 4, maxIter = 3).collect())
+    assert(ex.getMessage.contains("Truss.truss") && ex.getMessage.contains("step 3"),
+      ex.getMessage)
+  }
+
+  test("StronglyConnectedComponents.run throws when a min-label walk outruns its inner cap") {
+    // a directed 40-cycle: trimming peels nothing, and label 1 needs 39 hops
+    val cycle = (1L to 40L).map(i => (i, i % 40L + 1L)).toDF("src", "dst")
+    val ex = intercept[IllegalStateException](
+      graft.graph.StronglyConnectedComponents.run(spark, cycle, maxInner = 4).collect())
+    assert(ex.getMessage.contains("StronglyConnectedComponents.minLabelFixpoint") &&
+      ex.getMessage.contains("step 4"), ex.getMessage)
+  }
+
   /** `src/main` files, other than `allowed`, whose text matches a `banned`
     * pattern. */
   private def offenders(allowed: Set[String], banned: Seq[Regex]): List[String] =
