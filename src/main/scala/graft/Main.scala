@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cluster.{GreedyClustering, Shaping}
+import graft.core.Superstep
 import graft.graph.{ConnectedComponents, Louvain}
 import graft.ingest.{Dictionary, EdgeOps}
 import graft.sources.{AssignmentsSink, EdgeTableSource}
@@ -32,6 +33,11 @@ import graft.sources.{AssignmentsSink, EdgeTableSource}
   *   --leiden-resolution x (0.7) / --leiden-iterations n — leiden maps to
   *     [[graft.graph.Louvain]]; --leiden-beta is accepted and ignored (our
   *     refinement is deterministic, no randomness knob).
+  *
+  * The table is scanned once and cached. The load report (and the `-v`
+  * histogram) runs on a second driver thread over that scan while the main
+  * thread clusters; the report prints whole before the sink writes, and a
+  * run whose report fails writes nothing.
   *
   * Determinism note: without an objects file the reference assigns local ids
   * in first-appearance order of the (single-threaded) edge stream; a
@@ -83,6 +89,8 @@ object Main {
     }
 
     takeOpt("--algo").foreach(a => cfg = cfg.copy(algo = a))
+    // before any session starts, not after a cold start in `execute`
+    require(Algos.contains(cfg.algo), s"unknown --algo ${cfg.algo}\n$usage")
     takeOpt("--objects-file").foreach(f => cfg = cfg.copy(objectsFile = Some(f)))
     takeOpt2("--id-cols").foreach(c => cfg = cfg.copy(idCols = Some(c)))
     takeOpt("--distance-col").foreach(c => cfg = cfg.copy(distanceCol = Some(c)))
@@ -120,8 +128,10 @@ object Main {
     cfg.copy(distances = args(0), output = args(1))
   }
 
+  private val Algos = Seq("single", "complete", "uclust", "set-cover", "cd-hit", "leiden")
+
   private val usage =
-    "usage: graft.Main [--algo single|complete|uclust|set-cover|cd-hit|leiden] " +
+    s"usage: graft.Main [--algo ${Algos.mkString("|")}] " +
       "[--objects-file F] [--id-cols c1 c2] [--distance-col c] [--similarity] " +
       "[--percent-similarity] [--min col v]... [--max col v]... [--numeric-ids] " +
       "[--out-representatives] [--out-csv] [-v] <distances> <assignments>"
@@ -191,46 +201,40 @@ object Main {
         .distinct().select(col("vertex"), col("vertex").as("rank"))
     }
 
-    val assignVid = cfg.algo match {
-      case "single" =>
-        ConnectedComponents.run(spark, enc).select(col("vertex"), col("component").as("cluster"))
-      case "complete" =>
-        GreedyClustering.completeLinkage(spark, enc).select(col("vertex"), col("cluster"))
-      case "uclust" =>
-        GreedyClustering.run(spark, enc, ranks, GreedyClustering.Uclust)
-      case "set-cover" =>
-        GreedyClustering.run(spark, enc, ranks, GreedyClustering.SetCover)
-      case "cd-hit" =>
-        GreedyClustering.run(spark, enc, ranks, GreedyClustering.CdHit)
-      case "leiden" =>
-        Louvain.run(spark, enc, resolution = cfg.leidenResolution,
-            maxLevels = math.max(cfg.leidenIterations, 1) + 1)
-          .assignment.select(col("vertex"), col("community").as("cluster"))
-      case other => throw new IllegalArgumentException(s"unknown --algo $other\n$usage")
-    }
+    Superstep.run("Main.execute") { s =>
+      val assignVid = cfg.algo match {
+        case "single" =>
+          ConnectedComponents.run(spark, enc).select(col("vertex"), col("component").as("cluster"))
+        case "complete" =>
+          GreedyClustering.completeLinkage(spark, enc).select(col("vertex"), col("cluster"))
+        case "uclust" =>
+          GreedyClustering.run(spark, enc, ranks, GreedyClustering.Uclust)
+        case "set-cover" =>
+          GreedyClustering.run(spark, enc, ranks, GreedyClustering.SetCover)
+        case "cd-hit" =>
+          GreedyClustering.run(spark, enc, ranks, GreedyClustering.CdHit)
+        case "leiden" =>
+          Louvain.run(spark, enc, resolution = cfg.leidenResolution,
+              maxLevels = math.max(cfg.leidenIterations, 1) + 1)
+            .assignment.select(col("vertex"), col("community").as("cluster"))
+        case other => throw new IllegalArgumentException(s"unknown --algo $other\n$usage")
+      }
 
-    // decode vids → names, shape the output like the reference: size-renumber
-    // and append universe singletons (one global rank), order by (cluster,
-    // representativeness)
-    val named = Dictionary.decode(assignVid, dict.get, vidCol = "vertex")
-      .select(col("object"), col("cluster"))
-    val full = Shaping.renumber(named, universe)
-    universe match {
-      case Some(u) =>
-        val withRank = full.join(u, "object")
-        if (cfg.outRepresentatives)
-          Shaping.fillRepresentatives(withRank, rankCol = Some("rank"))
-            .join(u, "object").orderBy(col("cluster"), col("rank"))
-            .select(col("object"), col("cluster_rep"), col("cluster"))
-        else withRank.orderBy(col("cluster"), col("rank")).select(col("object"), col("cluster"))
-      case None =>
-        // reference order: (cluster, name) named / (cluster, numeric id)
-        // numeric — the numeric path keeps `object` as long, so one sort
-        // expression serves both (graph_named.h:307, graph_numbered.h:306)
-        if (cfg.outRepresentatives)
-          Shaping.fillRepresentatives(full).orderBy(col("cluster"), col("object"))
-            .select(col("object"), col("cluster_rep"), col("cluster"))
-        else full.orderBy(col("cluster"), col("object"))
+      // decode vids → names once, into a pin that the global rank's input,
+      // the member join and the output order all read; with an objects file
+      // vid == rank, so the pin carries the rank the output is ordered by.
+      // Then shape the output like the reference: size-renumber and append
+      // universe singletons (one global rank), order by (cluster, rank) with
+      // an objects file, else by (cluster, name) named / (cluster, numeric
+      // id) numeric — the numeric path keeps `object` as long
+      // (graph_named.h:307, graph_numbered.h:306)
+      val rankCol = universe.map(_ => "rank")
+      val named = s.pin(Dictionary.decode(
+        rankCol.fold(assignVid)(assignVid.withColumn(_, col("vertex"))), dict.get, vidCol = "vertex"))
+      val full = Shaping.renumber(named, universe)
+      val shaped =
+        if (cfg.outRepresentatives) Shaping.fillRepresentatives(full, rankCol) else full
+      Shaping.ordered(shaped, rankCol).drop("rank")
     }
   }
 
@@ -246,23 +250,21 @@ object Main {
     // all four counts from one aggregate over the cached scan (the reference
     // counts during its single load pass, console.cpp:106-110)
     val c = EdgeTableSource.loadCounts(scanned)
-    println(s"  input graph: ${c.inputNodes} nodes, ${c.inputEdges} edges")
-    println(s"  filtered graph: ${c.keptNodes} nodes, ${c.keptEdges} edges")
-    if (cfg.verbose) {
-      println("\nDistance histogram")
+    val counts = Seq(s"  input graph: ${c.inputNodes} nodes, ${c.inputEdges} edges",
+      s"  filtered graph: ${c.keptNodes} nodes, ${c.keptEdges} edges")
+    val histogram = if (!cfg.verbose) Nil else {
       // A5 over the transformed distance; reference bounds 0, 0.001..0.05,
       // +inf, printed as first-match "d < bound: n" counts
       val hist = EdgeOps.weightHistogram(
           filtered.select(col("src"), col("dst"), col("weight").cast("double")),
           lo = 0.0, hi = 0.05, width = 0.001)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      println(s"  d < 0: 0")
-      (0 until 50).foreach { i =>
-        println(s"  d < ${(i + 1) * 0.001}: ${hist.getOrElse(i.toLong, 0L)}")
-      }
-      println(s"  d < inf: ${hist.getOrElse(50L, 0L)}")
-      println()
+      Seq("", "Distance histogram", "  d < 0: 0") ++
+        (0 until 50).map(i => s"  d < ${(i + 1) * 0.001}: ${hist.getOrElse(i.toLong, 0L)}") ++
+        Seq(s"  d < inf: ${hist.getOrElse(50L, 0L)}", "")
     }
+    // one print: the report reaches stdout whole
+    print((counts ++ histogram).mkString("", "\n", "\n"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -281,8 +283,21 @@ object Main {
       val scanned = EdgeTableSource.scan(spark, cfg.distances, opts, header)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val filtered = EdgeTableSource.kept(scanned, opts)
-      printLoadReport(cfg, scanned, filtered)
+      // The load report runs on a second driver thread while this one
+      // clusters; both read the one cached scan. It starts before any
+      // Superstep scope opens (a thread inherits the scope of its parent)
+      // and opens none. A daemon: a run that fails before joining it still
+      // exits, and spark.stop() ends its jobs.
+      var reportFailure: Option[Throwable] = None
+      val report = new Thread(() =>
+        try printLoadReport(cfg, scanned, filtered)
+        catch { case t: Throwable => reportFailure = Some(t) }, "graft-load-report")
+      report.setDaemon(true)
+      report.start()
       val out = execute(spark, cfg, header, filtered)
+      // the report prints before the sink writes; a failed one writes nothing
+      report.join()
+      reportFailure.foreach(t => throw t)
       val sep = if (cfg.outCsv) "," else "\t"
       if (cfg.outRepresentatives)
         AssignmentsSink.writeWithRepresentatives(out, cfg.output, sep, singleFile = true)

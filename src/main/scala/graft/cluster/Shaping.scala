@@ -52,9 +52,11 @@ object Shaping {
     * and no second ranking; the numbering is the same for every caller,
     * in-graph size-1 clusters included.
     *
-    * @param assign   (object, cluster) — any types.
+    * @param assign   (object, cluster) — any types — optionally with each
+    *                 member's universe `rank`.
     * @param universe (object, rank) — full object universe + priority.
-    * @return (object, cluster: long).
+    * @return (object, cluster: long), plus `rank` when `assign` has it (a
+    *         missing object takes its universe rank).
     */
   def renumber(assign: DataFrame, universe: Option[DataFrame]): DataFrame = {
     val typeOf = (df: DataFrame, c: String) => df.schema(c).dataType
@@ -70,13 +72,17 @@ object Shaping {
     val ranked = Ranking.withGlobalRank(keyed, "new_cluster",
       col("appended").asc, col("size").desc, col("cluster").asc, col("rank").asc)
     // a missing object's null cluster matches no member: it keeps its own row
-    ranked.join(assign.select(col("object").as("member"), col("cluster")), Seq("cluster"), "left")
-      .select(coalesce(col("member"), col("object")).as("object"), col("new_cluster").as("cluster"))
+    val withRank = assign.columns.contains("rank")
+    val members = assign.select((Seq(col("object").as("member"), col("cluster")) ++
+      Option.when(withRank)(col("rank").as("member_rank"))): _*)
+    ranked.join(members, Seq("cluster"), "left")
+      .select((Seq(coalesce(col("member"), col("object")).as("object"),
+        col("new_cluster").as("cluster")) ++
+        Option.when(withRank)(coalesce(col("member_rank"), col("rank")).as("rank"))): _*)
   }
 
   /** O1 — final output order: cluster asc, then member order (name asc when
-    * no universe ranks; universe rank asc otherwise). Adds `member_order`
-    * for deterministic downstream byte-compare. */
+    * no universe ranks; universe rank asc otherwise). */
   def ordered(assign: DataFrame, rankCol: Option[String] = None): DataFrame = {
     val tie = rankCol.map(col).getOrElse(col("object"))
     assign.orderBy(col("cluster").asc, tie.asc)
@@ -87,12 +93,13 @@ object Shaping {
     * not a per-cluster window — a window would sort a giant cluster's full
     * member list in one task just to read its head (round 6). The key
     * `(tie, object)` is total, so the argmax is deterministic even when tie
-    * values repeat within a cluster. */
+    * values repeat within a cluster. The rank column, when given, is kept
+    * for the final order. */
   def fillRepresentatives(assign: DataFrame, rankCol: Option[String] = None): DataFrame = {
     val tie = rankCol.map(col).getOrElse(col("object"))
     val reps = assign.groupBy(col("cluster"))
       .agg(min_by(col("object"), struct(tie, col("object"))).as("cluster_rep"))
     assign.join(reps, "cluster")
-      .select(col("object"), col("cluster_rep"), col("cluster"))
+      .select((Seq(col("object"), col("cluster_rep"), col("cluster")) ++ rankCol.map(col)): _*)
   }
 }

@@ -64,6 +64,11 @@ import org.apache.spark.storage.StorageLevel
   * them (Truss frees each round's triangle table in the next round).
   * Checkpoints that survive an outermost scope are Spark's: its
   * ContextCleaner frees them once no live frame reads them.
+  *
+  * A scope and its `withConf` are single-threaded: the settings of [[run]]
+  * are session-wide and a thread started inside a scope inherits it, so a
+  * second driver thread (the CLI's load report) starts before any scope
+  * opens and opens none itself.
   */
 final class Superstep private (op: String) {
   import Superstep.{checkpointed, Held}

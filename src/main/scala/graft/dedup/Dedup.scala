@@ -33,21 +33,6 @@ object Dedup {
       .select(col(idCol), col("fingerprint"), col("canonical_id"), col("group_size"))
   }
 
-  /** Incremental-ingest dedup: drop arriving docs whose fingerprint is
-    * already in the corpus index, and dedup the batch internally (first =
-    * min id wins, matching [[exact]]). `knownFps` is the stored fingerprint
-    * column of the existing corpus — 8 bytes/doc, the only state the ingest
-    * job needs (at 100 TB: a bucketed fingerprint table; this anti-join is
-    * then co-located). */
-  def incremental(newDocs: DataFrame, knownFps: DataFrame,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  fpCol: String = "fingerprint"): DataFrame = {
-    val fp = newDocs.withColumn(fpCol, TextOps.fingerprint(col(textCol)))
-    val fresh = fp.join(knownFps.select(col(fpCol)), Seq(fpCol), "left_anti")
-    val winners = fresh.groupBy(col(fpCol)).agg(min(col(idCol)).as(idCol))
-    fresh.join(winners, Seq(fpCol, idCol), "left_semi")
-  }
-
   // ---- shingles / jaccard --------------------------------------------------
 
   /** Word n-gram shingles of a text column (array of strings). */

@@ -28,7 +28,6 @@ import org.apache.spark.sql.functions._
 object BinaryOps {
 
   case class MediaMeta(url: String, kind: String, n_bytes: Long, magic: String)
-  case class MediaFeature(url: String, kind: String, feature: Array[Float], frames: Int)
 
   /** Sniff payload kind from magic bytes — real logic, no codec needed. */
   def sniffKind(bytes: Array[Byte]): String = {
@@ -200,24 +199,6 @@ object BinaryOps {
           feats.foreach(f => (0 until dim).foreach(i => pooled(i) += f(i) / feats.size))
           MediaDecoded(url, kind, -1, -1, -1, -1, pooled)
         }
-      })
-  }
-
-  /** Batched feature extraction: one feature row per input row (images) with
-    * frame count for video-likes. Narrow plan — no shuffle. */
-  def extractFeatures(df: DataFrame, urlCol: String = "url", binCol: String = "html",
-                      dim: Int = 8): Dataset[MediaFeature] = {
-    import df.sparkSession.implicits._
-    df.select(col(urlCol).as("url"), col(binCol).as("payload"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, payload) =>
-        val kind = sniffKind(payload)
-        val frames = if (kind.startsWith("video")) sampleFrames(payload) else Seq(payload)
-        val feats = frames.map(stubDecodeFeature(_, dim))
-        // mean-pool frame features
-        val pooled = new Array[Float](dim)
-        feats.foreach(f => (0 until dim).foreach(i => pooled(i) += f(i) / feats.size))
-        MediaFeature(url, kind, pooled, frames.size)
       })
   }
 }

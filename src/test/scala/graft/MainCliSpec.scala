@@ -89,6 +89,13 @@ class MainCliSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { Main.parse(Seq("--algo", "single")) }
   }
 
+  test("parse: an unknown --algo is a usage error, before any session starts") {
+    val e = intercept[IllegalArgumentException] {
+      Main.parse(Seq("--algo", "kmeans", "in.tsv", "out.tsv"))
+    }
+    assert(e.getMessage.contains("unknown --algo kmeans") && e.getMessage.contains("usage:"))
+  }
+
   test("parse: clusty compatibility flags -t/-v/--version are accepted") {
     val cfg = Main.parse(Seq("-t", "8", "--algo", "single", "-v",
       "--version", "in.tsv", "out.tsv"))

@@ -79,25 +79,4 @@ class MediaDecodeSpec extends SparkTestBase {
     assert(byKind("video/mp4").forall(r => r.width == -1 && r.n_samples == -1
       && r.feature.exists(_ != 0f)))
   }
-
-  test("extractFeatures: frame sampling + mean-pooling match the stub ground truth") {
-    val media = MediaSynth.mediaTable(spark, nPerKind = 6, seed = 9L)
-    val rows = BinaryOps.extractFeatures(media, binCol = "payload").collect()
-      .map(r => r.url -> r).toMap
-    media.collect().foreach { r =>
-      val (url, payload) = (r.getString(0), r.getAs[Array[Byte]](1))
-      val kind = BinaryOps.sniffKind(payload)
-      val frames =
-        if (kind.startsWith("video")) BinaryOps.sampleFrames(payload) else Seq(payload)
-      val expected = {
-        val feats = frames.map(BinaryOps.stubDecodeFeature(_))
-        val pooled = new Array[Float](8)
-        feats.foreach(f => (0 until 8).foreach(i => pooled(i) += f(i) / feats.size))
-        pooled
-      }
-      val got = rows(url)
-      assert(got.frames == frames.size, s"$url frame count")
-      assert(got.feature.sameElements(expected), s"$url pooled feature")
-    }
-  }
 }

@@ -6,14 +6,16 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
-/** One cold `graft.Main --algo single` process on a table written here —
-  * no external fixtures. The input has planted clusters (two of equal size,
-  * so the size tie-break shows), a below-threshold edge between two of
-  * them, a self-loop, and universe objects that appear in no kept edge.
-  * The assignments must equal union-find over the kept edges numbered by
-  * clusty's rules (decreasing size, ties by smallest objects-file rank,
-  * missing objects appended in rank order, rows by (cluster, rank)), and
-  * the two load-report lines must be the reference's, byte for byte. */
+/** `graft.Main` on a table written here — no external fixtures. The input
+  * has planted clusters (two of equal size, so the size tie-break shows), a
+  * below-threshold edge between two of them, a self-loop, and universe
+  * objects that appear in no kept edge. The assignments must equal
+  * union-find over the kept edges numbered by clusty's rules (decreasing
+  * size, ties by the smallest objects-file rank — or, without an objects
+  * file, by first appearance in the table — missing objects appended in
+  * rank order, rows by (cluster, rank) or by (cluster, name)). Cold
+  * `graft.Main` processes check the load report and the failure path;
+  * `Main.execute` in the test session checks the other output shapes. */
 class PlantedCliSpec extends SparkTestBase {
 
   // (query, target, ani): kept iff ani >= 0.95 and query != target
@@ -27,60 +29,98 @@ class PlantedCliSpec extends SparkTestBase {
     ("s1", "s1", 1.00), // self-loop: s1 has no kept edge
     ("d2", "s2", 0.80)) // s2 only below the threshold
 
+  private val kept = rows.filter { case (a, b, ani) => ani >= 0.95 && a != b }
+
   // objects-file order (rank); u1..u3 appear in no edge at all
   private val universe = Seq("u2", "b3", "c3", "s1", "a4", "d2", "b1", "u1", "a2", "c1",
     "b5", "s2", "a1", "b2", "u3", "c2", "a3", "d1", "b4", "a5")
 
-  private def expectedAssignments: Seq[(String, Int)] = {
-    val rank = universe.zipWithIndex.toMap
+  /** Union-find components of the kept edges, members in `order`, numbered
+    * by decreasing size with ties by the first member in `order`. */
+  private def clusters(order: Seq[String]): Seq[Seq[String]] = {
+    val pos = order.zipWithIndex.toMap
     val parent = mutable.Map.empty[String, String]
     def find(x: String): String = {
       val p = parent.getOrElseUpdate(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    rows.filter { case (a, b, ani) => ani >= 0.95 && a != b }.foreach { case (a, b, _) =>
+    kept.foreach { case (a, b, _) =>
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(ra) = rb
     }
-    val comps = parent.keys.toSeq.groupBy(find).values.map(_.sortBy(rank)).toSeq
-      .sortBy(m => (-m.size, rank(m.head)))
-    val singles = universe.filterNot(parent.contains).map(Seq(_))
-    (comps ++ singles).zipWithIndex.flatMap { case (m, c) => m.map(_ -> c) }
+    parent.keys.toSeq.groupBy(find).values.map(_.sortBy(pos)).toSeq
+      .sortBy(m => (-m.size, pos(m.head)))
   }
+
+  /** With the objects file: components, then the missing objects as
+    * singletons in rank order; rows by (cluster, rank). */
+  private def expectedClusters: Seq[Seq[String]] = {
+    val comps = clusters(universe)
+    comps ++ universe.filterNot(comps.flatten.contains).map(Seq(_))
+  }
+
+  private def expectedAssignments: Seq[(String, Int)] =
+    expectedClusters.zipWithIndex.flatMap { case (m, c) => m.map(_ -> c) }
 
   private def expectedReport: Seq[String] = {
     def line(label: String, rs: Seq[(String, String, Double)]) =
       s"  $label: ${rs.flatMap { case (a, b, _) => Seq(a, b) }.distinct.size} nodes, ${rs.size} edges"
-    Seq(line("input graph", rows),
-      line("filtered graph", rows.filter { case (a, b, ani) => ani >= 0.95 && a != b }))
+    Seq(line("input graph", rows), line("filtered graph", kept))
   }
 
-  private def write(p: Path, lines: Seq[String]): String = {
+  private lazy val dir: Path = Files.createTempDirectory("graft-planted-cli")
+
+  private def write(name: String, lines: Seq[String]): String = {
+    val p = dir.resolve(name)
     Files.write(p, lines.asJava); p.toString
   }
 
-  test("single linkage on a planted table: union-find partition, clusty numbering, load report") {
-    val dir = Files.createTempDirectory("graft-planted-cli")
-    val edges = write(dir.resolve("edges.tsv"), "query\ttarget\tani" +:
-      rows.map { case (a, b, ani) => s"$a\t$b\t$ani" })
-    val objects = write(dir.resolve("objects.tsv"), "object" +: universe)
-    val out = dir.resolve("out").toString
+  private lazy val edges = write("edges.tsv", "query\ttarget\tani" +:
+    rows.map { case (a, b, ani) => s"$a\t$b\t$ani" })
+  private lazy val objects = write("objects.tsv", "object" +: universe)
+  // the same table with each name replaced by its objects-file ordinal
+  private lazy val numericEdges = {
+    val rank = universe.zipWithIndex.toMap
+    write("edges-numeric.tsv", "query\ttarget\tani" +:
+      rows.map { case (a, b, ani) => s"${rank(a)}\t${rank(b)}\t$ani" })
+  }
 
-    // a separate JVM: graft.Main builds and stops its own session
+  private val threshold = Seq("--algo", "single", "--similarity", "--min", "ani", "0.95")
+
+  /** One `graft.Main` process (it builds and stops its own session): its
+    * exit code, stdout lines and stderr. Fails if the process is still
+    * running after `timeoutS` seconds. */
+  private def runMain(args: Seq[String], timeoutS: Int = 300): (Int, Seq[String], String) = {
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
       .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-agentlib"))
     val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ jvm ++ Seq("-Xmx1g",
-      "-cp", sys.props("java.class.path"), "graft.Main",
-      "--algo", "single", "--similarity", "--min", "ani", "0.95",
-      "--objects-file", objects, edges, out)
-    val stdout = new StringBuilder
+      "-cp", sys.props("java.class.path"), "graft.Main") ++ args
+    val stdout = mutable.ArrayBuffer.empty[String]
     val stderr = new StringBuilder
-    val rc = Process(cmd, None, "SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_CPUS" -> "2")
-      .!(ProcessLogger(l => stdout.append(l).append('\n'), l => stderr.append(l).append('\n')))
-    assert(rc == 0, s"graft.Main exited $rc\n${stderr.toString.takeRight(4000)}")
+    val proc = Process(cmd, None, "SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_CPUS" -> "2")
+      .run(ProcessLogger(l => stdout.synchronized(stdout += l),
+        l => stderr.synchronized(stderr.append(l).append('\n'))))
+    val deadline = System.nanoTime() + timeoutS * 1000000000L
+    while (proc.isAlive() && System.nanoTime() < deadline) Thread.sleep(100)
+    if (proc.isAlive()) {
+      proc.destroy()
+      fail(s"graft.Main still running after $timeoutS s\n${stderr.toString.takeRight(4000)}")
+    }
+    val rc = proc.exitValue()
+    (rc, stdout.synchronized(stdout.toSeq), stderr.synchronized(stderr.toString))
+  }
 
-    val report = stdout.toString.split("\n").filter(_.matches("  (input|filtered) graph: .*")).toSeq
-    assert(report == expectedReport, stdout.toString)
+  test("single linkage on a planted table: union-find partition, clusty numbering, load report") {
+    val out = dir.resolve("out").toString
+    val (rc, stdout, stderr) = runMain(threshold ++ Seq("--objects-file", objects, edges, out))
+    assert(rc == 0, s"graft.Main exited $rc\n${stderr.takeRight(4000)}")
+
+    // the report runs beside the clustering: each line once, whole, and
+    // before the sink's line
+    val report = stdout.filter(_.matches("  (input|filtered) graph: .*"))
+    assert(report == expectedReport, stdout.mkString("\n"))
+    val wrote = stdout.indexWhere(_.startsWith("[graft] wrote"))
+    assert(wrote >= 0 && report.forall(stdout.indexOf(_) < wrote), stdout.mkString("\n"))
 
     val parts = Files.list(dir.resolve("out")).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
@@ -90,5 +130,39 @@ class PlantedCliSpec extends SparkTestBase {
       val Array(o, c) = l.split("\t"); o -> c.toInt
     }
     assert(got == expectedAssignments)
+  }
+
+  test("a run that fails after the report started exits non-zero and writes nothing") {
+    val out = dir.resolve("out-failed")
+    val (rc, stdout, stderr) = runMain(threshold ++ Seq(
+      "--objects-file", dir.resolve("missing.tsv").toString, edges, out.toString))
+    assert(rc != 0, stdout.mkString("\n"))
+    assert(stderr.contains("input path matches nothing"), stderr.takeRight(4000))
+    assert(!stdout.exists(_.startsWith("[graft] wrote")), stdout.mkString("\n"))
+    assert(!Files.exists(out))
+  }
+
+  private def execute(args: String*): Seq[Seq[Any]] =
+    Main.execute(spark, Main.parse(args :+ "unused-out")).collect().map(_.toSeq).toSeq
+
+  test("--out-representatives: each object's cluster and its first member in rank order") {
+    val got = execute(threshold ++ Seq("--out-representatives", "--objects-file", objects, edges): _*)
+    val expected = expectedClusters.zipWithIndex.flatMap { case (m, c) =>
+      m.map(o => Seq(o, m.head, c.toLong)) }
+    assert(got == expected)
+  }
+
+  test("no objects file: first-appearance numbering, rows by (cluster, name)") {
+    val got = execute(threshold :+ edges: _*)
+    // ids in order of first appearance over the kept rows, query before target
+    val firstSeen = kept.flatMap { case (a, b, _) => Seq(a, b) }.distinct
+    val expected = clusters(firstSeen).zipWithIndex.flatMap { case (m, c) =>
+      m.sorted.map(o => Seq(o, c.toLong)) }
+    assert(got == expected)
+  }
+
+  test("--numeric-ids with an objects file: ordinals decode to the objects' names") {
+    val got = execute(threshold ++ Seq("--numeric-ids", "--objects-file", objects, numericEdges): _*)
+    assert(got == expectedAssignments.map { case (o, c) => Seq(o, c.toLong) })
   }
 }

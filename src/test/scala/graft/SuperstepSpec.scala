@@ -170,6 +170,15 @@ class SuperstepSpec extends SparkTestBase {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  /** A Superstep scope and its SQL settings are single-threaded, so the one
+    * second driver thread is the CLI's load report, which runs outside any
+    * scope. */
+  test("only the CLI starts a driver thread") {
+    val found = offenders(Set("Main.scala"),
+      Seq("Future(", "new Thread(", "ExecutionContext").map(b => Regex.quote(b).r))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   /** One way to build a session: every main gets its master, defaults and
     * log levels from `graft.core.Session`. */
   test("only the session helper builds a SparkSession") {

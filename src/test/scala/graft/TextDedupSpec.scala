@@ -70,22 +70,6 @@ class TextDedupSpec extends SparkTestBase {
     assert(f0 != fp)
   }
 
-  test("incremental dedup drops known fingerprints and batch-internal dups") {
-    // corpus index = fingerprints of docs 0 and 2
-    val known = docs.where(col("doc_id").isin(0L, 2L))
-      .select(TextOps.fingerprint(col("text")).as("fingerprint"))
-    // arriving batch: re-send of doc 0 (new id), an internal duplicate pair,
-    // and a genuinely new doc
-    val batch = Seq(
-      (100L, docs.collect()(0).getString(1)), // exact re-send of doc 0
-      (101L, "fresh unseen content alpha"),
-      (102L, "fresh unseen content alpha"),   // batch-internal dup of 101
-      (103L, "another new document entirely")).toDF("doc_id", "text")
-    val got = graft.dedup.Dedup.incremental(batch, known)
-      .select("doc_id").as[Long].collect().toSet
-    assert(got == Set(101L, 103L))
-  }
-
   test("hash split: deterministic, stable under corpus growth, ~weight proportions") {
     val docs = (0L until 2000L).map(i => (i, s"text $i")).toDF("doc_id", "text")
     val full = graft.text.TextOps.splitAssign(docs).collect()
