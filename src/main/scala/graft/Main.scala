@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cluster.{GreedyClustering, Shaping}
-import graft.core.Superstep
+import graft.core.{Preload, Superstep}
 import graft.graph.{ConnectedComponents, Louvain}
 import graft.ingest.{Dictionary, EdgeOps}
 import graft.sources.{AssignmentsSink, EdgeTableSource}
@@ -167,41 +167,43 @@ object Main {
     * can share ONE scan between the load report and the clustering run
     * instead of re-reading the distance table. */
   private def execute(spark: SparkSession, cfg: Config, header: String,
-                      rawEdges: DataFrame): DataFrame = {
-    val opts = readOptions(cfg, header)
-    val universe = cfg.objectsFile.map(EdgeTableSource.readObjects(spark, _))
-
-    // Dictionary: objects-file rank order when present (reference seeds
-    // cluster ids in objects order, console.cpp:218/reorderObjects); without
-    // one, FIRST-APPEARANCE order of the filtered edge stream — the
-    // reference's sequential local ids (graph_named.h:215-247) — recovered
-    // distributedly from line offsets so tie-breaks renumber identically.
-    // Numeric mode: ids are already the vids (ordinals into the objects list
-    // when given, reference README.md:217); the dictionary is then only a
-    // DECODER (the reference prints objects-file NAMES, graph_numbered.h:322).
-    val (enc, dict) = (cfg.numericIds, universe) match {
-      case (true, Some(u)) =>
-        (rawEdges, Some(Dictionary.buildFromRank(u)))
-      case (true, None) =>
-        val fa = EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)
-        val d = fa.select(col("object").cast("long").as("object"), col("rank").as("vid"))
-        (Dictionary.encodeEdges(rawEdges, d), Some(d))
-      case (false, _) =>
-        val d = universe.map(Dictionary.buildFromRank).getOrElse(
-          Dictionary.buildFromRank(
-            EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)))
-        (Dictionary.encodeEdges(rawEdges, d), Some(d))
-    }
-
-    val ranks = universe match {
-      // numeric mode: ordinal ids index the objects list; named mode:
-      // vid == rank by buildFromRank — same projection either way
-      case Some(u) => u.select(col("rank").as("vertex"), col("rank"))
-      case None => enc.select(col("src").as("vertex")).union(enc.select(col("dst").as("vertex")))
-        .distinct().select(col("vertex"), col("vertex").as("rank"))
-    }
-
+                      rawEdges: DataFrame): DataFrame =
     Superstep.run("Main.execute") { s =>
+      val opts = readOptions(cfg, header)
+      // the objects file, read and numbered once: the dictionary joins,
+      // the decode pin and the renumbering's anti-join all read this pin
+      val universe = cfg.objectsFile.map(f => s.pin(EdgeTableSource.readObjects(spark, f)))
+
+      // Dictionary: objects-file rank order when present (reference seeds
+      // cluster ids in objects order, console.cpp:218/reorderObjects); without
+      // one, FIRST-APPEARANCE order of the filtered edge stream — the
+      // reference's sequential local ids (graph_named.h:215-247) — recovered
+      // distributedly from line offsets so tie-breaks renumber identically.
+      // Numeric mode: ids are already the vids (ordinals into the objects list
+      // when given, reference README.md:217); the dictionary is then only a
+      // DECODER (the reference prints objects-file NAMES, graph_numbered.h:322).
+      val (enc, dict) = (cfg.numericIds, universe) match {
+        case (true, Some(u)) =>
+          (rawEdges, Some(Dictionary.buildFromRank(u)))
+        case (true, None) =>
+          val fa = EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)
+          val d = fa.select(col("object").cast("long").as("object"), col("rank").as("vid"))
+          (Dictionary.encodeEdges(rawEdges, d), Some(d))
+        case (false, _) =>
+          val d = universe.map(Dictionary.buildFromRank).getOrElse(
+            Dictionary.buildFromRank(
+              EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)))
+          (Dictionary.encodeEdges(rawEdges, d), Some(d))
+      }
+
+      val ranks = universe match {
+        // numeric mode: ordinal ids index the objects list; named mode:
+        // vid == rank by buildFromRank — same projection either way
+        case Some(u) => u.select(col("rank").as("vertex"), col("rank"))
+        case None => enc.select(col("src").as("vertex")).union(enc.select(col("dst").as("vertex")))
+          .distinct().select(col("vertex"), col("vertex").as("rank"))
+      }
+
       val assignVid = cfg.algo match {
         case "single" =>
           ConnectedComponents.run(spark, enc).select(col("vertex"), col("component").as("cluster"))
@@ -236,7 +238,6 @@ object Main {
         if (cfg.outRepresentatives) Shaping.fillRepresentatives(full, rankCol) else full
       Shaping.ordered(shaped, rankCol).drop("rank")
     }
-  }
 
   /** The reference's load report (console.cpp:106-110: input/filtered
     * node+edge counts, printed at normal verbosity) and its `-v` distance
@@ -268,6 +269,9 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
+    // load the engine's classes on a spare core while this thread starts
+    // the session (load only: no static initializer runs; see Preload)
+    Preload.start()
     // `--version` prints and exits BEFORE positional validation, like the
     // reference's early ShowVersion return (src/params.cpp:30-34) — a
     // migrating script's bare `clusty --version` probe must not die on the

@@ -15,7 +15,8 @@ import scala.sys.process._
   * file, by first appearance in the table — missing objects appended in
   * rank order, rows by (cluster, rank) or by (cluster, name)). Cold
   * `graft.Main` processes check the load report and the failure path;
-  * `Main.execute` in the test session checks the other output shapes. */
+  * `Main.execute` in the test session checks the other output shapes and
+  * the complete, uclust, set-cover and cd-hit partitions. */
 class PlantedCliSpec extends SparkTestBase {
 
   // (query, target, ani): kept iff ani >= 0.95 and query != target
@@ -165,4 +166,38 @@ class PlantedCliSpec extends SparkTestBase {
     val got = execute(threshold ++ Seq("--numeric-ids", "--objects-file", objects, numericEdges): _*)
     assert(got == expectedAssignments.map { case (o, c) => Seq(o, c.toLong) })
   }
+
+  /** The other partitions through the CLI path. Each cluster is named by
+    * its seed: complete linkage by its smallest member, uclust and cd-hit by
+    * the member they visit first (the smallest rank), set-cover by the
+    * member of highest degree (ties by rank); equal-size clusters are
+    * numbered in their seeds' rank order. */
+  for (algo <- Seq("complete", "uclust", "set-cover", "cd-hit"))
+    test(s"--algo $algo: each object once, dense ids by size then seed rank, " +
+        "missing objects last, every cluster inside one single-linkage component") {
+      val got = execute(Seq("--algo", algo, "--similarity", "--min", "ani", "0.95",
+        "--objects-file", objects, edges): _*).map(r => r(0).asInstanceOf[String] -> r(1))
+      val pos = universe.zipWithIndex.toMap
+      assert(got.map(_._1).sorted == universe.sorted)
+      val ids = got.map(_._2.asInstanceOf[Long])
+      assert(ids == ids.sorted && ids.distinct == ids.distinct.indices.map(_.toLong), ids)
+      val byCluster = got.groupBy(_._2.asInstanceOf[Long]).toSeq.sortBy(_._1).map(_._2.map(_._1))
+      assert(byCluster.forall(m => m == m.sortBy(pos)), byCluster)
+
+      val inGraph = kept.flatMap { case (a, b, _) => Seq(a, b) }.toSet
+      val (graphed, missing) = byCluster.span(_.exists(inGraph))
+      assert(missing.forall(_.size == 1) && missing.flatten == universe.filterNot(inGraph), byCluster)
+      assert(graphed.flatten.forall(inGraph), byCluster)
+
+      val degree = kept.flatMap { case (a, b, _) => Seq(a -> b, b -> a) }.distinct
+        .groupBy(_._1).map { case (o, ns) => o -> ns.size }
+      def seed(m: Seq[String]): String =
+        if (algo == "set-cover") m.minBy(o => (-degree(o), pos(o))) else m.minBy(pos)
+      val keys = graphed.map(m => (-m.size, pos(seed(m))))
+      assert(keys == keys.sorted, byCluster)
+
+      val component = clusters(universe).zipWithIndex
+        .flatMap { case (m, i) => m.map(_ -> i) }.toMap
+      assert(graphed.forall(m => m.map(component).distinct.size == 1), byCluster)
+    }
 }
