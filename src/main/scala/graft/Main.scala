@@ -40,11 +40,11 @@ import graft.sources.{AssignmentsSink, EdgeTableSource}
   * run whose report fails writes nothing.
   *
   * Determinism note: without an objects file the reference assigns local ids
-  * in first-appearance order of the (single-threaded) edge stream; a
-  * distributed scan has no such order, so ids come from the lexicographic
-  * dictionary ([[Dictionary.buildSorted]]) — partitions are identical,
-  * only tie-order among equal-sized clusters can differ. With an objects
-  * file the ordering semantics match the reference exactly.
+  * in first-appearance order of the (single-threaded) edge stream; each
+  * scanned row carries its physical position, so
+  * [[EdgeTableSource.firstAppearanceRanks]] recovers that order and ties
+  * among equal-sized clusters break as in the reference. With an objects
+  * file, ids are its line order.
   */
 object Main {
 
@@ -158,43 +158,33 @@ object Main {
   def execute(spark: SparkSession, cfg: Config): DataFrame = {
     val header = EdgeTableSource.headerLine(spark, cfg.distances)
     val opts = readOptions(cfg, header)
-    execute(spark, cfg, header,
-      EdgeTableSource.kept(EdgeTableSource.scan(spark, cfg.distances, opts, header), opts))
+    execute(spark, cfg, opts, EdgeTableSource.scan(spark, cfg.distances, opts, header))
   }
 
-  /** Variant taking the table's header line (read once, on the driver) and
-    * the already-read (and possibly cached) filtered edge frame, so [[main]]
-    * can share ONE scan between the load report and the clustering run
-    * instead of re-reading the distance table. */
-  private def execute(spark: SparkSession, cfg: Config, header: String,
-                      rawEdges: DataFrame): DataFrame =
+  /** Variant taking the table's (possibly cached) [[EdgeTableSource.scan]],
+    * so [[main]] can share ONE scan between the load report and the
+    * clustering run instead of re-reading the distance table. */
+  private def execute(spark: SparkSession, cfg: Config, opts: EdgeTableSource.Options,
+                      scanned: DataFrame): DataFrame =
     Superstep.run("Main.execute") { s =>
-      val opts = readOptions(cfg, header)
       // the objects file, read and numbered once: the dictionary joins,
       // the decode pin and the renumbering's anti-join all read this pin
       val universe = cfg.objectsFile.map(f => s.pin(EdgeTableSource.readObjects(spark, f)))
 
       // Dictionary: objects-file rank order when present (reference seeds
       // cluster ids in objects order, console.cpp:218/reorderObjects); without
-      // one, FIRST-APPEARANCE order of the filtered edge stream — the
-      // reference's sequential local ids (graph_named.h:215-247) — recovered
-      // distributedly from line offsets so tie-breaks renumber identically.
-      // Numeric mode: ids are already the vids (ordinals into the objects list
-      // when given, reference README.md:217); the dictionary is then only a
-      // DECODER (the reference prints objects-file NAMES, graph_numbered.h:322).
-      val (enc, dict) = (cfg.numericIds, universe) match {
-        case (true, Some(u)) =>
-          (rawEdges, Some(Dictionary.buildFromRank(u)))
-        case (true, None) =>
-          val fa = EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)
-          val d = fa.select(col("object").cast("long").as("object"), col("rank").as("vid"))
-          (Dictionary.encodeEdges(rawEdges, d), Some(d))
-        case (false, _) =>
-          val d = universe.map(Dictionary.buildFromRank).getOrElse(
-            Dictionary.buildFromRank(
-              EdgeTableSource.firstAppearanceRanks(spark, cfg.distances, opts, header)))
-          (Dictionary.encodeEdges(rawEdges, d), Some(d))
-      }
+      // one, FIRST-APPEARANCE order of the kept rows — the reference's
+      // sequential local ids (graph_named.h:215-247) — so tie-breaks
+      // renumber identically. Numeric ids with an objects file are already
+      // the vids (ordinals into the list, reference README.md:217); the
+      // dictionary then only DECODES them to the objects' names
+      // (graph_numbered.h:322).
+      val dict = Dictionary.buildFromRank(
+        universe.getOrElse(EdgeTableSource.firstAppearanceRanks(scanned)))
+      val rawEdges = EdgeTableSource.kept(scanned, opts)
+      val enc =
+        if (cfg.numericIds && universe.isDefined) rawEdges
+        else Dictionary.encodeEdges(rawEdges, dict)
 
       val ranks = universe match {
         // numeric mode: ordinal ids index the objects list; named mode:
@@ -232,7 +222,7 @@ object Main {
       // (graph_named.h:307, graph_numbered.h:306)
       val rankCol = universe.map(_ => "rank")
       val named = s.pin(Dictionary.decode(
-        rankCol.fold(assignVid)(assignVid.withColumn(_, col("vertex"))), dict.get, vidCol = "vertex"))
+        rankCol.fold(assignVid)(assignVid.withColumn(_, col("vertex"))), dict, vidCol = "vertex"))
       val full = Shaping.renumber(named, universe)
       val shaped =
         if (cfg.outRepresentatives) Shaping.fillRepresentatives(full, rankCol) else full
@@ -298,7 +288,7 @@ object Main {
         catch { case t: Throwable => reportFailure = Some(t) }, "graft-load-report")
       report.setDaemon(true)
       report.start()
-      val out = execute(spark, cfg, header, filtered)
+      val out = execute(spark, cfg, opts, scanned)
       // the report prints before the sink writes; a failed one writes nothing
       report.join()
       reportFailure.foreach(t => throw t)

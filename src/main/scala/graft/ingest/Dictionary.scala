@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -11,16 +11,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * The reference forces ids through a single ordered mapper thread to make
   * them deterministic; we instead derive ids from content (total sort +
   * zipWithIndex) or from an explicit rank column, both order-independent
-  * under any parallelism. Three strategies, by scale:
+  * under any parallelism. Two strategies:
   *
   *  - [[buildSorted]]  — ids = rank in lexicographic order. One total sort
   *    (range exchange) + the one contained RDD hop SURVEY.md §7.2 allows
   *    (`zipWithIndex`, two passes, no collect). Dense and deterministic.
   *  - [[buildFromRank]] — ids = caller-provided priority rank (clusty's
-  *    objects-file order). No extra shuffle if ranks are precomputed.
-  *  - [[buildHashed]] — ids = xxhash64(name): shuffle-free, not dense; only
-  *    for joins/bucketing where density is not needed (collision odds at
-  *    10^12 keys are non-negligible, so never for final outputs).
+  *    objects-file order, or first-appearance order of the edge table).
+  *    No extra shuffle if ranks are precomputed.
   */
 object Dictionary {
 
@@ -40,11 +38,6 @@ object Dictionary {
   /** Dictionary from an explicit priority table (object, rank) — vid = rank. */
   def buildFromRank(universe: DataFrame): DataFrame =
     universe.select(col("object"), col("rank").cast("long").as("vid"))
-
-  /** Shuffle-free hashed ids (non-dense). */
-  def buildHashed(df: DataFrame, column: String): DataFrame =
-    df.select(col(column).as("object")).distinct()
-      .select(col("object"), xxhash64(col("object")).as("vid"))
 
   /** Encode a string edge table to long vertex ids via two dictionary joins.
     * Dictionary side is broadcast when small, else sort-merge — Catalyst/AQE

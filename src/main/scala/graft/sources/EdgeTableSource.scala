@@ -22,6 +22,9 @@ import graft.ingest.EdgeOps
   *    anything downstream (Catalyst pushes them into the scan — the
   *    reference's in-parser filtering, src/graph_named.h:168-181).
   *  - P3: self-loop elimination.
+  *  - J1: first-appearance ranks, computed from the same scan (each row
+  *    carries its physical position), so the table has one parser.
+  *  - S5: the objects file, numbered in line order.
   *
   * Returns (src, dst, weight:double) — string ids in named mode, long in
   * numeric mode (reference's ordinal ids, README.md:217).
@@ -40,11 +43,13 @@ object EdgeTableSource {
   def read(spark: SparkSession, path: String, opts: Options = Options()): DataFrame =
     kept(scan(spark, path, opts, headerLine(spark, path)), opts)
 
-  /** Every row of the table as `(src, dst, weight, kept)`, where `kept` says
-    * whether the row survives the P2 range filters and the P3 self-loop
-    * drop; `weight` is the raw distance column. [[kept]] turns a scan into
-    * [[read]]'s result, and [[loadCounts]] reports on both sides of the
-    * filters, so one scan (cached by the caller) serves both. */
+  /** Every row of the table as `(src, dst, weight, kept, position)`, where
+    * `kept` says whether the row survives the P2 range filters and the P3
+    * self-loop drop, `weight` is the raw distance column and `position`
+    * orders rows as one sequential read of the table would. [[kept]] turns
+    * a scan into [[read]]'s result, [[loadCounts]] reports on both sides of
+    * the filters and [[firstAppearanceRanks]] numbers the kept ids, so one
+    * scan (cached by the caller) serves all three. */
   def scan(spark: SparkSession, path: String, opts: Options, header: String): DataFrame = {
     val names = columns(spark, header, opts.sep)
     require(names.length >= 3,
@@ -69,22 +74,34 @@ object EdgeTableSource {
     }
     val dc = opts.distanceCol.map(resolve).getOrElse(names(2))
 
+    // The file's index in listing order, the start of the split that read
+    // the row, then an id that grows in read order within a split. Spark
+    // names a file by its URL-encoded path, whose order is not the listing's
+    // (`a b` → `a%20b` sorts after `a!`), so files are looked up, not sorted.
+    val files = listFiles(spark, path)
+    val file =
+      if (files.size == 1) lit(0)
+      else coalesce(
+        element_at(typedLit(files.zipWithIndex.map { case (f, i) =>
+          new org.apache.hadoop.fs.Path(f).toUri.toString -> i }.toMap), col("_metadata.file_path")),
+        raise_error(concat(lit("file not in the edge table's listing: "), col("_metadata.file_path"))))
+    val position = struct(file.as("file"), col("_metadata.file_block_start").as("start"),
+      monotonically_increasing_id().as("row"))
+
     // try_cast, not cast: this build runs Spark 4 with ANSI mode on, where a
-    // plain cast of a malformed numeric string THROWS. The contract (mirrored
-    // by the RDD dictionary pass in firstAppearanceRanks) is that malformed
-    // numerics become null and the row is dropped by the range/self-loop
-    // predicates — try_cast restores exactly those null-on-error semantics.
+    // plain cast of a malformed numeric string THROWS. Malformed numerics
+    // become null and the row is dropped by the range/self-loop predicates.
     val idType = if (opts.numericIds) "long" else "string"
     val projected = raw.select(
       (Seq(col(c1).try_cast(idType).as("src"), col(c2).try_cast(idType).as("dst"),
-        col(dc).try_cast("double").as("weight")) ++
+        col(dc).try_cast("double").as("weight"), position.as("position")) ++
         opts.filters.map(f => col(resolve(f.column)).try_cast("double").as(f.column))): _*)
 
     // P2 and P3; a null predicate drops the row
     val survives = EdgeOps.rangePredicate(opts.filters) &&
       (if (opts.dropSelfLoops) col("src") =!= col("dst") else lit(true))
     projected.select(col("src"), col("dst"), col("weight"),
-      coalesce(survives, lit(false)).as("kept"))
+      coalesce(survives, lit(false)).as("kept"), col("position"))
   }
 
   /** The kept rows of a [[scan]] as `(src, dst, weight)`, with the P1
@@ -140,31 +157,29 @@ object EdgeTableSource {
   /** S5 — objects-file scan: one-column header'd table; rank = line order
     * (decreasing representativeness; reference src/console.cpp:126-227).
     *
-    * Line order must be exact, so this is one of the few genuinely forced
-    * RDD hops: `textFile` (TextInputFormat) generates splits per file in
-    * offset order with files in listing order, so `zipWithIndex` recovers
-    * the physical line number with full parallelism. A DataFrame file scan
-    * cannot — `FilePartition` packs splits by SIZE, so both a global
-    * `row_number` window (single-partition funnel) and
-    * `monotonically_increasing_id` (partition order ≠ file order) are wrong
-    * at scale. Multi-file directories are ordered by (path asc, byte
-    * offset) EXPLICITLY — Hadoop's split enumeration does not promise
-    * listing order, so the files are listed and sorted here and every
-    * record carries its (fileIdx, offset) sort key through one
-    * range-partitioned sort. One file needs no sort: `TextInputFormat`
-    * cuts a file's splits in offset order, so its lines are numbered by
-    * `zipWithIndex` in split order. The header line of EVERY file is skipped
-    * (byte offset 0 ⇔ first line of its file), so a directory of headered
-    * part files does not ingest phantom header objects; blank lines are
-    * dropped. */
+    * Read through `TextInputFormat`, not a DataFrame scan: its splits of one
+    * file come in offset order, so `zipWithIndex` numbers the lines of a
+    * one-file list without a sort, where a DataFrame scan would need
+    * [[graft.core.Ranking.withGlobalRank]]'s global sort on every call. A
+    * directory is ordered by (listing index, byte offset) through one
+    * range-partitioned sort: Hadoop's split enumeration does not promise
+    * listing order. The header line of EVERY file is skipped (byte offset
+    * 0 ⇔ first line of its file), so a directory of headered part files
+    * does not ingest phantom header objects; blank lines are dropped. */
   def readObjects(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
+    import org.apache.hadoop.io.{LongWritable, Text}
+    import org.apache.hadoop.mapred.TextInputFormat
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
+    val sc = spark.sparkContext
     val files = listFiles(spark, path)
-    val lines = orderedLines(spark, files)
-    val inOrder =
-      if (files.size == 1) lines
-      else lines.sortBy(_._1) // range-partitioned sort on (fileIdx, byteOffset)
+    val lines = sc.union(files.zipWithIndex.map { case (f, fi) =>
+      sc.hadoopFile[LongWritable, Text, TextInputFormat](f).flatMap { case (off, t) =>
+        val line = t.toString.stripSuffix("\r")
+        if (off.get == 0L || line.isEmpty) None else Some(((fi, off.get), line))
+      }
+    })
+    val inOrder = if (files.size == 1) lines else lines.sortBy(_._1)
     val rows = inOrder.zipWithIndex().map { case ((_, line), i) =>
       val cut = line.indexOf(sep)
       Row(if (cut >= 0) line.substring(0, cut) else line, i)
@@ -178,9 +193,9 @@ object EdgeTableSource {
   private def listFiles(spark: SparkSession, path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // globStatus handles literal paths AND patterns (matching textFile's
-    // old glob support); hidden-file filter mirrors FileInputFormat's
-    // ('.'-prefixed sidecars like .crc, and '_'-prefixed markers)
+    // globStatus handles literal paths AND patterns; the hidden-file filter
+    // mirrors FileInputFormat's ('.'-prefixed sidecars like .crc, and
+    // '_'-prefixed markers)
     def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
     val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
     require(matched.nonEmpty, s"input path matches nothing: $path")
@@ -189,117 +204,25 @@ object EdgeTableSource {
     }.map(_.getPath).filter(pp => visible(pp.getName)).map(_.toString).sorted.toSeq
   }
 
-  /** Non-header, non-empty lines of `files` (a listing in path order), each keyed by its
-    * deterministic physical position `(fileIdx, byteOffset)` — the shared
-    * scanner behind [[readObjects]] and [[firstAppearanceRanks]] (see the S5
-    * scaladoc above for why a DataFrame scan cannot recover line order). */
-  private def orderedLines(spark: SparkSession, files: Seq[String])
-      : org.apache.spark.rdd.RDD[((Int, Long), String)] = {
-    import org.apache.hadoop.io.{LongWritable, Text}
-    import org.apache.hadoop.mapred.TextInputFormat
-    val sc = spark.sparkContext
-    val tagged = files.zipWithIndex.map { case (f, fi) =>
-      sc.hadoopFile[LongWritable, Text, TextInputFormat](f)
-        .flatMap { case (off, t) =>
-          if (off.get == 0L) None // this file's header line
-          else {
-            val line = t.toString.stripSuffix("\r")
-            if (line.isEmpty) None else Some(((fi, off.get), line))
-          }
-        }
-    }
-    sc.union(tagged)
-  }
-
-  /** J1 first-appearance ranks: `(object, rank)` where rank is the dense
-    * 0-based order in which each id is FIRST seen scanning the edge table
-    * row by row, first id column before second (header order, the S2
-    * normalization), counting only rows that survive the P2 range filters
-    * and P3 self-loop drop — exactly the reference's sequential local-id
-    * assignment (src/graph_named.h:215-247 registers names per surviving
-    * edge; filtered rows never reach updateMappings). This is what makes a
-    * no-`--objects-file` CLI run bit-compatible with the reference: cluster
-    * ids there are seeded in local-id order (src/single_bfs.h), and the
-    * size-renumber breaks ties by that order (stable_sort,
-    * src/graph.cpp:42).
+  /** J1 first-appearance ranks of a [[scan]]: `(object, rank)`, where rank
+    * is the dense 0-based order in which each id is FIRST seen reading the
+    * table row by row, first id column before second (header order, the S2
+    * normalization), counting only kept rows — the reference's sequential
+    * local-id assignment (src/graph_named.h:215-247 registers names per
+    * surviving edge; filtered rows never reach updateMappings). Cluster
+    * ids there are seeded in local-id order (src/single_bfs.h) and the
+    * size-renumber breaks ties by it (stable_sort, src/graph.cpp:42), so
+    * this is what makes a no-`--objects-file` CLI run match the reference.
+    * Ids keep the scan's type: string, or long in numeric mode.
     *
-    * Distributed shape: the line scan is embarrassingly parallel; order is
-    * recovered from the (fileIdx, byteOffset) key by one range-partitioned
-    * sort + zipWithIndex (same justified RDD hop as [[readObjects]]), then
-    * a min-aggregate per name and one more dense ranking. */
-  def firstAppearanceRanks(spark: SparkSession, path: String,
-                           opts: Options = Options()): DataFrame =
-    firstAppearanceRanks(spark, path, opts, headerLine(spark, path))
-
-  /** [[firstAppearanceRanks]] with the table's header line already read. */
-  def firstAppearanceRanks(spark: SparkSession, path: String, opts: Options,
-                           headerLine: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val sepRegex = java.util.regex.Pattern.quote(opts.sep)
-    // the names read() resolves, so both scans agree on every column
-    val header = columns(spark, headerLine, opts.sep)
-    require(header.length >= 3,
-      s"edge table needs >= 3 columns (two ids + distance), got ${header.length}")
-    def idx(name: String): Int = {
-      val i = header.indexOf(name)
-      require(i >= 0, s"column '$name' not in header ${header.mkString(",")}")
-      i
-    }
-    val (a, b) = opts.idCols match {
-      case None => (0, 1)
-      case Some((x, y)) => (idx(x), idx(y))
-    }
-    val (i1, i2) = if (a <= b) (a, b) else (b, a) // S2 order normalization
-    val filt: Array[(Int, Double, Double)] = opts.filters.map(f =>
-      (idx(f.column), f.min.getOrElse(Double.NegativeInfinity),
-        f.max.getOrElse(Double.PositiveInfinity))).toArray
-    val dropSelf = opts.dropSelfLoops
-    val numeric = opts.numericIds
-    val needed = (Seq(i1, i2) ++ filt.map(_._1)).max + 1
-
-    // Survival rules must mirror the DataFrame read path EXACTLY, or the two
-    // scans can disagree on which rows register names (or this one can crash
-    // on input the edge reader accepts): a malformed numeric field there is
-    // try_cast("double") -> null -> dropped by the range predicate (ANSI mode
-    // is on in Spark 4, so a plain cast would THROW — [[read]] uses try_cast
-    // for precisely this parity), so here it parses to None -> row dropped,
-    // never a NumberFormatException. Same for the self-loop drop in numeric
-    // mode: `TRY_CAST(id) IS NULL` makes the src<>dst predicate null -> row
-    // dropped, and the comparison is on the cast values ("01" == "1"), not
-    // the raw tokens.
-    def parseD(s: String): Option[Double] = {
-      val t = s.trim
-      if (t.isEmpty) None else try Some(t.toDouble) catch { case _: NumberFormatException => None }
-    }
-    def parseL(s: String): Option[Long] = {
-      val t = s.trim
-      if (t.isEmpty) None else try Some(t.toLong) catch { case _: NumberFormatException => None }
-    }
-    val pairs = orderedLines(spark, listFiles(spark, path)).flatMap { case ((fi, off), line) =>
-      val toks = line.split(sepRegex, -1)
-      val ok = toks.length >= needed &&
-        filt.forall { case (c, mn, mx) =>
-          parseD(toks(c)).exists(v => v >= mn && v <= mx) } &&
-        (!dropSelf || {
-          if (numeric) (parseL(toks(i1)), parseL(toks(i2))) match {
-            case (Some(a), Some(b)) => a != b
-            case _ => false // null id -> null predicate -> row dropped
-          }
-          else toks(i1) != toks(i2)
-        })
-      if (ok) Seq(((fi, off, 0), toks(i1)), ((fi, off, 1), toks(i2))) else Nil
-    }
-    val firstSeen = pairs
-      .sortBy(_._1)
-      .zipWithIndex()
-      .map { case ((_, name), ord) => (name, ord) }
-      .reduceByKey(math.min(_, _))
-      .map { case (name, ord) => Row(name, ord) }
-    val df = spark.createDataFrame(firstSeen, StructType(Seq(
-      StructField("object", StringType, nullable = false),
-      StructField("ord", LongType, nullable = false))))
-    graft.core.Ranking.withGlobalRank(df, "rank", col("ord").asc)
+    * One aggregate takes each name's smallest (position, side) over the
+    * kept rows, and one global ranking numbers the names by it. */
+  def firstAppearanceRanks(scanned: DataFrame): DataFrame = {
+    val first = scanned.where(col("kept"))
+      .select(col("position"), posexplode(array(col("src"), col("dst"))).as(Seq("side", "object")))
+      .groupBy(col("object"))
+      .agg(min(struct(col("position"), col("side"))).as("first"))
+    graft.core.Ranking.withGlobalRank(first, "rank", col("first").asc)
       .select(col("object"), col("rank"))
   }
 }

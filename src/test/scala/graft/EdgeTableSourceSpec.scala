@@ -25,6 +25,11 @@ class EdgeTableSourceSpec extends SparkTestBase {
     f.toString
   }
 
+  private def ranks(path: String, opts: EdgeTableSource.Options): Map[Any, Long] =
+    EdgeTableSource.firstAppearanceRanks(
+        EdgeTableSource.scan(spark, path, opts, EdgeTableSource.headerLine(spark, path)))
+      .collect().map(r => r.get(0) -> r.getLong(1)).toMap
+
   // same topology/weights as the reference's synth.ani (FIXTURES.md §1.1),
   // with decoy columns and ids NOT in the first positions (vir61-style)
   private val csv =
@@ -77,34 +82,27 @@ class EdgeTableSourceSpec extends SparkTestBase {
     }
   }
 
-  test("malformed numeric fields null-drop identically in both scan paths (ANSI parity)") {
+  test("malformed numeric fields drop their row and register no name") {
     // Row 2 has a malformed distance ("oops") and row 4 a malformed numeric
-    // id ("4x"): under ANSI mode a plain cast would crash the DataFrame scan
-    // while the RDD dictionary pass silently drops — both must DROP (the
-    // try_cast contract), and the dictionary pass must agree row-for-row on
-    // which names register.
+    // id ("4x"): under ANSI mode a plain cast would crash the scan; try_cast
+    // makes them null, so the row is dropped and its names never register.
     val p = writeTemp("malformed.tsv",
       "i\tj\td\n10\t20\t0.5\n30\t40\toops\n50\t60\t0.25\n4x\t70\t0.5\n")
-    val opts = EdgeTableSource.Options(numericIds = true,
-      filters = Seq(EdgeOps.RangeFilter("d", min = Some(0.0))))
-    val e = EdgeTableSource.read(spark, p, opts).collect()
+    val filters = Seq(EdgeOps.RangeFilter("d", min = Some(0.0)))
+    val numeric = EdgeTableSource.Options(numericIds = true, filters = filters)
+    val e = EdgeTableSource.read(spark, p, numeric).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(e == Set((10L, 20L, 0.5), (50L, 60L, 0.25)))
+    assert(ranks(p, numeric) == Map(10L -> 0L, 20L -> 1L, 50L -> 2L, 60L -> 3L))
 
-    // same input through the string-id dictionary pass: the malformed
-    // DISTANCE row must not register ids 30/40; the malformed-id row fails
-    // only in numeric mode (string mode keeps "4x" — a legal name there)
-    val ranks = EdgeTableSource.firstAppearanceRanks(spark, p,
-        EdgeTableSource.Options(filters = Seq(EdgeOps.RangeFilter("d", min = Some(0.0)))))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(ranks == Map("10" -> 0L, "20" -> 1L, "50" -> 2L, "60" -> 3L,
-      "4x" -> 4L, "70" -> 5L), s"got $ranks")
-
-    // and string-mode DataFrame read agrees with the dictionary pass
-    val eStr = EdgeTableSource.read(spark, p,
-        EdgeTableSource.Options(filters = Seq(EdgeOps.RangeFilter("d", min = Some(0.0)))))
+    // string mode keeps "4x", a legal name there; the malformed distance
+    // row still registers neither 30 nor 40
+    val named = EdgeTableSource.Options(filters = filters)
+    val eStr = EdgeTableSource.read(spark, p, named)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(eStr == Set(("10", "20"), ("50", "60"), ("4x", "70")))
+    assert(ranks(p, named) == Map("10" -> 0L, "20" -> 1L, "50" -> 2L, "60" -> 3L,
+      "4x" -> 4L, "70" -> 5L))
   }
 
   test("objects file: rank = line order") {
@@ -131,8 +129,7 @@ class EdgeTableSourceSpec extends SparkTestBase {
     val opts = EdgeTableSource.Options(sep = ",", idCols = Some(("id1", "id2")),
       distanceCol = Some("ani"), distanceKind = graft.ingest.EdgeOps.Similarity,
       filters = Seq(graft.ingest.EdgeOps.RangeFilter("ani", min = Some(0.70), max = None)))
-    val got = EdgeTableSource.firstAppearanceRanks(spark, p, opts)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = ranks(p, opts)
     // the c-d row fails the ani filter BEFORE registration, so c,d are
     // absent; otherwise ranks follow the reference's sequential scan
     // (first id column before second, per surviving row)
@@ -146,12 +143,56 @@ class EdgeTableSourceSpec extends SparkTestBase {
       "u\tv\td\nn3\tn4\t0.5\nn1\tn5\t0.5\n".getBytes("UTF-8"))
     Files.write(dir.resolve("a-first.tsv"),
       "u\tv\td\nn1\tn2\t0.5\nn2\tn3\t0.5\n".getBytes("UTF-8"))
-    val got = EdgeTableSource.firstAppearanceRanks(spark, dir.toString,
-        EdgeTableSource.Options(sep = "\t"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = ranks(dir.toString, EdgeTableSource.Options(sep = "\t"))
     // a-first.tsv scans before b-second.tsv (path-sorted), each header skipped
     assert(got == Map("n1" -> 0L, "n2" -> 1L, "n3" -> 2L, "n4" -> 3L, "n5" -> 4L),
       s"got $got")
+  }
+
+  test("firstAppearanceRanks: many files and splits rank as one sequential read") {
+    // `a b.tsv` lists before `a!.tsv`, but Spark names it `a%20b.tsv`,
+    // which sorts after; rows are ~10 bytes, so a 256-byte split holds ~25
+    val dir = Files.createTempDirectory("graft-fa-splits")
+    val rnd = new scala.util.Random(7)
+    val files = Seq("a b.tsv", "a!.tsv", "b.tsv", "c.tsv").map { name =>
+      val rows = Seq.fill(150)((s"n${rnd.nextInt(300)}", s"n${rnd.nextInt(300)}", rnd.nextInt(10)))
+      Files.write(dir.resolve(name), ("u\tv\td" +: rows.map { case (a, b, d) => s"$a\t$b\t$d" })
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      name -> rows
+    }
+    // kept: d >= 3 and no self-loop; names in order of first appearance
+    val expected = files.sortBy(_._1).flatMap(_._2)
+      .collect { case (a, b, d) if d >= 3 && a != b => Seq(a, b) }.flatten
+      .distinct.zipWithIndex.map { case (n, i) => n -> i.toLong }.toMap
+    val opts = EdgeTableSource.Options(filters = Seq(EdgeOps.RangeFilter("d", min = Some(3.0))))
+    withConf("spark.sql.files.maxPartitionBytes" -> "256",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      val splits = EdgeTableSource.scan(spark, dir.toString, opts,
+        EdgeTableSource.headerLine(spark, dir.toString)).rdd.getNumPartitions
+      assert(splits >= 8, s"only $splits partitions")
+      assert(ranks(dir.toString, opts) == expected)
+    }
+  }
+
+  private def execute(args: String*) =
+    Main.execute(spark, Main.parse(args :+ "unused-out"))
+
+  test("--numeric-ids without objects file: 01 and 1 are one object") {
+    // two 3-object clusters; the 5-6-7 one appears first, so it is cluster 0
+    // although 1 is the smallest id
+    val p = writeTemp("num.tsv", "i\tj\td\n7\t6\t0.1\n6\t5\t0.1\n01\t2\t0.1\n1\t3\t0.1\n")
+    val got = execute("--numeric-ids", p).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == Seq((5L, 0L), (6L, 0L), (7L, 0L), (1L, 1L), (2L, 1L), (3L, 1L)))
+  }
+
+  test("a quoted CSV id holding the separator is one object, written quoted") {
+    val p = writeTemp("quoted.csv", "query,target,d\n\"x,y\",z,0.1\na,b,0.2\n")
+    val out = Files.createTempDirectory("graft-quoted").toString + "/assign"
+    AssignmentsSink.write(execute(p), out, sep = ",", singleFile = true)
+    val part = Files.list(Paths.get(out)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toList.head
+    assert(new String(Files.readAllBytes(part), "UTF-8") ==
+      "object,cluster\n\"x,y\",0\nz,0\na,1\nb,1\n")
   }
 
   test("end-to-end single-linkage pipeline writes the golden assignments bytes") {

@@ -182,6 +182,19 @@ class SuperstepSpec extends SparkTestBase {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  /** One parser of the edge table: `EdgeTableSource.scan`. The only line
+    * reader in `src/main` is `readObjects`' numbering of the objects file. */
+  test("only EdgeTableSource.readObjects reads lines through Hadoop") {
+    val reader = """\b(hadoopFile|textFile)\b""".r
+    val source = Paths.get("src/main/scala/graft/sources/EdgeTableSource.scala")
+    val text = new String(Files.readAllBytes(source), "UTF-8")
+    val readObjects = """(?s)\n  def readObjects\(.*?\n  }\n""".r.findFirstIn(text)
+      .getOrElse(fail(s"no readObjects in $source"))
+    val found = offenders(Set("EdgeTableSource.scala"), Seq(reader)) ++
+      reader.findFirstIn(text.replace(readObjects, "")).map(m => s"$source: $m outside readObjects")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   /** One way to build a session: every main gets its master, defaults and
     * log levels from `graft.core.Session`. */
   test("only the session helper builds a SparkSession") {
