@@ -39,6 +39,15 @@ import graft.sources.{AssignmentsSink, EdgeTableSource}
   * thread clusters; the report prints whole before the sink writes, and a
   * run whose report fails writes nothing.
   *
+  * Small inputs run interpreted: when the edge table and the objects file
+  * are uncompressed and together under 4 MiB (file listing only, no Spark
+  * job), [[main]] turns off whole-stage codegen and generated expression
+  * classes for its session, each setting only where the launch did not set
+  * it ([[interpretedSettings]]). Compiling a class costs more than a
+  * small table's rows take to interpret; on large tables the compiled code
+  * wins. The output is the same either way. [[execute]] and the catalog
+  * (`Queries`, `Bench`, `Verify`) keep codegen.
+  *
   * Determinism note: without an objects file the reference assigns local ids
   * in first-appearance order of the (single-threaded) edge stream; each
   * scanned row carries its physical position, so
@@ -135,6 +144,22 @@ object Main {
       "[--objects-file F] [--id-cols c1 c2] [--distance-col c] [--similarity] " +
       "[--percent-similarity] [--min col v]... [--max col v]... [--numeric-ids] " +
       "[--out-representatives] [--out-csv] [-v] <distances> <assignments>"
+
+  /** Inputs under this many bytes run interpreted (README "Cold start of
+    * the CLI" has the crossover). */
+  private val InterpretBelowBytes = 4L << 20
+
+  /** The session settings under which [[main]] runs an input of `bytes`
+    * bytes: whole-stage codegen and generated expression classes off when
+    * no file is compressed and `bytes` is under the limit, less any key
+    * in `setAtLaunch` (as in `graft.core.Session`, `-D`/`--conf` win);
+    * none otherwise. */
+  private[graft] def interpretedSettings(bytes: Long, compressed: Boolean,
+                                         setAtLaunch: String => Boolean): Seq[(String, String)] =
+    if (compressed || bytes >= InterpretBelowBytes) Nil
+    else Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      .filterNot { case (k, _) => setAtLaunch(k) }
 
   /** The reference tokenizes on both ',' and tab; a distributed reader needs
     * ONE separator, so sniff it from the header line. */
@@ -270,6 +295,9 @@ object Main {
     val cfg = parse(args.toSeq)
     val spark = graft.core.Session.getOrCreate()
     try {
+      val size = EdgeTableSource.inputSize(spark, cfg.distances +: cfg.objectsFile.toSeq)
+      interpretedSettings(size.bytes, size.compressed, spark.sparkContext.getConf.contains)
+        .foreach { case (k, v) => spark.conf.set(k, v) }
       val header = EdgeTableSource.headerLine(spark, cfg.distances)
       val opts = readOptions(cfg, header)
       // ONE scan of the table, cached, shared by the load report and the

@@ -163,9 +163,11 @@ object EdgeTableSource {
     * [[graft.core.Ranking.withGlobalRank]]'s global sort on every call. A
     * directory is ordered by (listing index, byte offset) through one
     * range-partitioned sort: Hadoop's split enumeration does not promise
-    * listing order. The header line of EVERY file is skipped (byte offset
-    * 0 ⇔ first line of its file), so a directory of headered part files
-    * does not ingest phantom header objects; blank lines are dropped. */
+    * listing order. The header of EVERY file is its first non-blank line,
+    * as in [[headerLine]]: the split that starts at byte offset 0 skips the
+    * lines up to and including it, so neither a leading blank line nor a
+    * directory of headered part files ingests a phantom header object.
+    * Empty lines are dropped. */
   def readObjects(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapred.TextInputFormat
@@ -174,9 +176,15 @@ object EdgeTableSource {
     val sc = spark.sparkContext
     val files = listFiles(spark, path)
     val lines = sc.union(files.zipWithIndex.map { case (f, fi) =>
-      sc.hadoopFile[LongWritable, Text, TextInputFormat](f).flatMap { case (off, t) =>
-        val line = t.toString.stripSuffix("\r")
-        if (off.get == 0L || line.isEmpty) None else Some(((fi, off.get), line))
+      sc.hadoopFile[LongWritable, Text, TextInputFormat](f).mapPartitions { split =>
+        var inHeader = false // from offset 0 to the end of the first non-blank line
+        split.flatMap { case (off, t) =>
+          val line = t.toString.stripSuffix("\r")
+          if (off.get == 0L) inHeader = true
+          if (inHeader) { inHeader = line.trim.isEmpty; None }
+          else if (line.isEmpty) None
+          else Some(((fi, off.get), line))
+        }
       }
     })
     val inOrder = if (files.size == 1) lines else lines.sortBy(_._1)
@@ -191,17 +199,36 @@ object EdgeTableSource {
 
   /** The visible files a file/directory/glob names, sorted by path. */
   private def listFiles(spark: SparkSession, path: String): Seq[String] = {
+    val files = visibleFiles(spark, path)
+    require(files.nonEmpty, s"input path matches nothing: $path")
+    files.map(_.getPath.toString)
+  }
+
+  final case class InputSize(bytes: Long, compressed: Boolean)
+
+  /** Bytes of the visible files that `paths` name, and whether any of them
+    * is compressed (its name carries a Hadoop codec's extension), from the
+    * file listing alone: no file is opened and no Spark job runs. A path
+    * that matches nothing counts no bytes; the read that follows reports
+    * it. */
+  def inputSize(spark: SparkSession, paths: Seq[String]): InputSize = {
+    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(
+      spark.sparkContext.hadoopConfiguration)
+    val files = paths.flatMap(visibleFiles(spark, _))
+    InputSize(files.map(_.getLen).sum, files.exists(f => codecs.getCodec(f.getPath) != null))
+  }
+
+  /** [[listFiles]]' listing, empty when the path matches nothing. */
+  private def visibleFiles(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // globStatus handles literal paths AND patterns; the hidden-file filter
     // mirrors FileInputFormat's ('.'-prefixed sidecars like .crc, and
     // '_'-prefixed markers)
     def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    require(matched.nonEmpty, s"input path matches nothing: $path")
-    matched.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
-    }.map(_.getPath).filter(pp => visible(pp.getName)).map(_.toString).sorted.toSeq
+    Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile).toSeq else Seq(st)
+    }.filter(st => visible(st.getPath.getName)).sortBy(_.getPath.toString)
   }
 
   /** J1 first-appearance ranks of a [[scan]]: `(object, rank)`, where rank

@@ -105,23 +105,49 @@ class EdgeTableSourceSpec extends SparkTestBase {
       "4x" -> 4L, "70" -> 5L))
   }
 
+  private def objectRanks(path: String): Map[String, Long] =
+    EdgeTableSource.readObjects(spark, path).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
   test("objects file: rank = line order") {
     val p = writeTemp("objs.tsv", "object\naaa\naa\na\nbb\nb\nc\n")
-    val got = EdgeTableSource.readObjects(spark, p).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("aaa" -> 0L, "aa" -> 1L, "a" -> 2L, "bb" -> 3L, "b" -> 4L, "c" -> 5L))
+    assert(objectRanks(p) ==
+      Map("aaa" -> 0L, "aa" -> 1L, "a" -> 2L, "bb" -> 3L, "b" -> 4L, "c" -> 5L))
+    // the header is the first non-blank line, as in the edge table
+    assert(objectRanks(writeTemp("objs.tsv", "\nobject\naaa\nbb\n")) ==
+      Map("aaa" -> 0L, "bb" -> 1L))
+    assert(objectRanks(writeTemp("objs.tsv", " \r\n\r\nobject\r\naaa\r\n\r\nbb\r\n")) ==
+      Map("aaa" -> 0L, "bb" -> 1L))
   }
 
   test("objects directory: every part file's header skipped, blanks dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-objs-multi")
-    java.nio.file.Files.write(dir.resolve("part-0.tsv"),
-      "object\naaa\naa\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(dir.resolve("part-1.tsv"),
-      "object\nbb\n\nb\n".getBytes("UTF-8"))
-    val got = EdgeTableSource.readObjects(spark, dir.toString).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def write(files: String*) = {
+      val dir = Files.createTempDirectory("graft-objs-multi")
+      files.zipWithIndex.foreach { case (text, i) =>
+        Files.write(dir.resolve(s"part-$i.tsv"), text.getBytes("UTF-8")) }
+      dir.toString
+    }
     // no phantom "object" rows from file 2's header, no empty-string object
-    assert(got == Map("aaa" -> 0L, "aa" -> 1L, "bb" -> 2L, "b" -> 3L))
+    assert(objectRanks(write("object\naaa\naa\n", "object\nbb\n\nb\n")) ==
+      Map("aaa" -> 0L, "aa" -> 1L, "bb" -> 2L, "b" -> 3L))
+    // each file's header is its first non-blank line
+    assert(objectRanks(write("\n\nobject\naaa\naa\n", "\nobject\nbb\n\nb\n")) ==
+      Map("aaa" -> 0L, "aa" -> 1L, "bb" -> 2L, "b" -> 3L))
+  }
+
+  test("inputSize: bytes of the visible files, compressed if any file names a codec") {
+    val dir = Files.createTempDirectory("graft-input-size")
+    Files.write(dir.resolve("a.tsv"), Array.fill[Byte](10)(1))
+    Files.write(dir.resolve("b.tsv"), Array.fill[Byte](5)(1))
+    Files.write(dir.resolve("_SUCCESS"), Array.fill[Byte](7)(1))
+    val objs = writeTemp("objs.tsv", "object\na\n")
+    assert(EdgeTableSource.inputSize(spark, Seq(dir.toString, objs)) ==
+      EdgeTableSource.InputSize(10L + 5L + 9L, compressed = false))
+    assert(EdgeTableSource.inputSize(spark, Seq(dir.resolve("missing.tsv").toString)) ==
+      EdgeTableSource.InputSize(0L, compressed = false))
+    Files.write(dir.resolve("c.tsv.gz"), Array.fill[Byte](3)(1))
+    assert(EdgeTableSource.inputSize(spark, Seq(dir.toString)) ==
+      EdgeTableSource.InputSize(18L, compressed = true))
   }
 
   test("firstAppearanceRanks: filtered rows never register, order = row-major id scan") {

@@ -101,4 +101,28 @@ class MainCliSpec extends SparkTestBase {
       "--version", "in.tsv", "out.tsv"))
     assert(cfg.verbose && cfg.distances == "in.tsv" && cfg.output == "out.tsv")
   }
+
+  // the 4 MiB limit README's "Cold start of the CLI" names
+  private val limit = 4L << 20
+  private val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  test("interpretedSettings: uncompressed input under the limit runs interpreted") {
+    for (bytes <- Seq(0L, 1L, limit - 1))
+      assert(Main.interpretedSettings(bytes, compressed = false, Set.empty) == interpreted)
+  }
+
+  test("interpretedSettings: at or over the limit, or any compressed file, keeps codegen") {
+    for (bytes <- Seq(limit, limit + 1, Long.MaxValue))
+      assert(Main.interpretedSettings(bytes, compressed = false, Set.empty).isEmpty)
+    for (bytes <- Seq(0L, limit - 1, limit))
+      assert(Main.interpretedSettings(bytes, compressed = true, Set.empty).isEmpty)
+  }
+
+  test("interpretedSettings: a key set at launch is left alone") {
+    for ((key, value) <- interpreted)
+      assert(Main.interpretedSettings(1L, compressed = false, Set(key)) ==
+        interpreted.filterNot(_._1 == key), key -> value)
+    assert(Main.interpretedSettings(1L, compressed = false, interpreted.map(_._1).toSet).isEmpty)
+  }
 }

@@ -15,8 +15,9 @@ import scala.sys.process._
   * file, by first appearance in the table — missing objects appended in
   * rank order, rows by (cluster, rank) or by (cluster, name)). Cold
   * `graft.Main` processes check the load report and the failure path;
-  * `Main.execute` in the test session checks the other output shapes and
-  * the complete, uclust, set-cover and cd-hit partitions. */
+  * `Main.execute` in the test session checks the other output shapes, the
+  * complete, uclust, set-cover and cd-hit partitions, and that every shape
+  * comes out the same with codegen off. */
 class PlantedCliSpec extends SparkTestBase {
 
   // (query, target, ani): kept iff ani >= 0.95 and query != target
@@ -166,6 +167,27 @@ class PlantedCliSpec extends SparkTestBase {
     val got = execute(threshold ++ Seq("--numeric-ids", "--objects-file", objects, numericEdges): _*)
     assert(got == expectedAssignments.map { case (o, c) => Seq(o, c.toLong) })
   }
+
+  /** `graft.Main` runs a table this small interpreted (no whole-stage
+    * codegen, no generated expression classes); every output shape must
+    * come out the same as compiled. */
+  private val variants: Seq[(String, () => Seq[String])] =
+    Seq("single", "complete", "uclust", "set-cover", "cd-hit", "leiden").map { algo =>
+      s"--algo $algo" -> (() => Seq("--algo", algo, "--similarity", "--min", "ani", "0.95",
+        "--objects-file", objects, edges))
+    } ++ Seq(
+      "--numeric-ids" -> (() => threshold ++ Seq("--numeric-ids", "--objects-file", objects,
+        numericEdges)),
+      "--out-representatives" -> (() => threshold ++ Seq("--out-representatives",
+        "--objects-file", objects, edges)))
+
+  for ((name, args) <- variants)
+    test(s"$name: the same frame compiled and interpreted") {
+      val compiled = execute(args(): _*)
+      val interpreted = withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(execute(args(): _*))
+      assert(interpreted == compiled)
+    }
 
   /** The other partitions through the CLI path. Each cluster is named by
     * its seed: complete linkage by its smallest member, uclust and cd-hit by

@@ -195,6 +195,13 @@ class SuperstepSpec extends SparkTestBase {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  /** Only the CLI's small-input gate turns codegen off, so catalog queries
+    * and benches always run compiled. */
+  test("only the CLI sets spark.sql.codegen settings") {
+    val found = offenders(Set("Main.scala"), Seq(Regex.quote("spark.sql.codegen.").r))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   /** One way to build a session: every main gets its master, defaults and
     * log levels from `graft.core.Session`. */
   test("only the session helper builds a SparkSession") {
