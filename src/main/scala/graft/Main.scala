@@ -211,13 +211,10 @@ object Main {
         if (cfg.numericIds && universe.isDefined) rawEdges
         else Dictionary.encodeEdges(rawEdges, dict)
 
-      val ranks = universe match {
-        // numeric mode: ordinal ids index the objects list; named mode:
-        // vid == rank by buildFromRank — same projection either way
-        case Some(u) => u.select(col("rank").as("vertex"), col("rank"))
-        case None => enc.select(col("src").as("vertex")).union(enc.select(col("dst").as("vertex")))
-          .distinct().select(col("vertex"), col("vertex").as("rank"))
-      }
+      // the greedy algorithms' priority: a vid IS its rank (objects-file
+      // line or first appearance), and the dictionary holds every vertex
+      // of enc (numeric ids with an objects file index the objects list)
+      val ranks = dict.select(col("vid").as("vertex"), col("vid").as("rank"))
 
       val assignVid = cfg.algo match {
         case "single" =>
@@ -322,8 +319,8 @@ object Main {
       reportFailure.foreach(t => throw t)
       val sep = if (cfg.outCsv) "," else "\t"
       if (cfg.outRepresentatives)
-        AssignmentsSink.writeWithRepresentatives(out, cfg.output, sep, singleFile = true)
-      else AssignmentsSink.write(out, cfg.output, sep, singleFile = true)
+        AssignmentsSink.writeWithRepresentatives(out, cfg.output, sep)
+      else AssignmentsSink.write(out, cfg.output, sep)
       println(s"[graft] wrote ${cfg.output} (${cfg.algo})")
     } finally spark.stop()
   }

@@ -106,7 +106,9 @@ object Queries {
 
   def qDedupMin(spark: SparkSession, sfDir: String): DataFrame = {
     // Parallel-edge dedup keeping min weight: feed both orientations to
-    // prove orientation-insensitivity (A1 semantics).
+    // prove orientation-insensitivity (A1 semantics). The flip doubles its
+    // weights, the input shape the SQL twin expects, so it is not
+    // EdgeOps.symmetrize.
     val e = edgesAll(spark, sfDir).select(col("src"), col("dst"), col("weight").cast("double"))
     val doubled = e.unionByName(
       e.select(col("dst").as("src"), col("src").as("dst"), (col("weight") * lit(2.0)).as("weight")))
@@ -205,8 +207,7 @@ object Queries {
     * One traversal, k-wide frontier; depth cap 40 mirrored by the twin. */
   def qMultiBfs(spark: SparkSession, sfDir: String): DataFrame = {
     val e = edges(spark, sfDir)
-    val srcs = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
-      .distinct().orderBy("v").limit(4).collect().map(_.getLong(0)).toSeq
+    val srcs = landmarks(e)
     if (srcs.isEmpty) { // empty graph: empty result, like the SQL twin
       import spark.implicits._
       return Seq.empty[(Long, Long, Long)].toDF("source", "vertex", "dist")
@@ -214,6 +215,11 @@ object Queries {
     graft.graph.ShortestPaths.multiHops(spark, e, srcs, maxIter = 40)
       .orderBy("source", "vertex")
   }
+
+  /** The 4 lowest vertex ids of `e`: the landmarks of q_multi_bfs and
+    * q_harmonic. */
+  private def landmarks(e: DataFrame): Seq[Long] =
+    EdgeOps.vertices(e).orderBy("vertex").limit(4).collect().map(_.getLong(0)).toSeq
 
   /** Degree assortativity of the t2 graph (Newman r) — one aggregate row,
     * integer-exact sums, mirrored scalar expression tree in the twin. */
@@ -224,8 +230,7 @@ object Queries {
     * frontier multi-BFS; pinned-order 1/dist fold → bit-exact vs twin). */
   def qHarmonic(spark: SparkSession, sfDir: String): DataFrame = {
     val e = edges(spark, sfDir)
-    val srcs = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
-      .distinct().orderBy("v").limit(4).collect().map(_.getLong(0)).toSeq
+    val srcs = landmarks(e)
     if (srcs.isEmpty) {
       import spark.implicits._
       return Seq.empty[(Long, Double)].toDF("vertex", "harmonic")
@@ -238,8 +243,7 @@ object Queries {
     * (5 lowest canonical source keys); fixed supersteps, DuckDB-oracled. */
   def qPageRankPersonalized(spark: SparkSession, sfDir: String): DataFrame = {
     val e = edges(spark, sfDir)
-    val bi = e.select(col("src"), col("dst"))
-      .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+    val bi = EdgeOps.symmetrize(e.select(col("src"), col("dst")))
     val seeds = e.select(col("src").as("vertex")).distinct().orderBy("vertex").limit(5)
     val r = PageRank.runPersonalized(spark, bi, seeds, tol = 0.0, maxIter = 8)
     r.ranks.select(col("vertex"), round(col("rank"), 6).as("rank")).orderBy("vertex")

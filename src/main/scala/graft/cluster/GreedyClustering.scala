@@ -2,10 +2,11 @@ package graft.cluster
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.ConnectedComponents
+import graft.ingest.EdgeOps
 
 /** clusty's greedy clustering algorithms (SURVEY.md §2.6 C2-C5), Spark-first:
   * these are inherently sequential *within* a connected component (each
@@ -31,19 +32,29 @@ object GreedyClustering {
   case object CdHit extends Algo    // visit by rank asc; seed captures unassigned neighbors
   case object Uclust extends Algo   // visit by rank asc; join closest seed neighbor else become seed
 
+  /** The preamble of [[run]] and [[completeLinkage]]: long ids and double
+    * weights without self-loops, their components (`precomputedCC`, else
+    * [[ConnectedComponents]]), and each edge tagged with its component as
+    * (component, src, dst, weight). Returns (components, tagged edges). */
+  private def componentEdges(spark: SparkSession, edges: DataFrame,
+                             precomputedCC: Option[DataFrame])
+      : (DataFrame, Dataset[(Long, Long, Long, Double)]) = {
+    import spark.implicits._
+    val e = EdgeOps.dropSelfLoops(edges.select(col("src").cast("long"), col("dst").cast("long"),
+      col("weight").cast("double")))
+    val cc = precomputedCC.getOrElse(ConnectedComponents.run(spark, e))
+    (cc, e.join(cc.withColumnRenamed("vertex", "src"), "src")
+      .select(col("component"), col("src"), col("dst"), col("weight"))
+      .as[(Long, Long, Long, Double)])
+  }
+
   def run(spark: SparkSession, edges: DataFrame, ranks: DataFrame, algo: Algo,
           maxComponentSize: Int = 5000000,
           precomputedCC: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
 
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("weight").cast("double")).where(col("src") =!= col("dst"))
-    val cc = precomputedCC.getOrElse(ConnectedComponents.run(spark, e))
-
     // tag each edge and each vertex with its component
-    val eTagged = e.join(cc.withColumnRenamed("vertex", "src"), "src")
-      .select(col("component"), col("src"), col("dst"), col("weight"))
-      .as[(Long, Long, Long, Double)]
+    val (cc, eTagged) = componentEdges(spark, edges, precomputedCC)
     val vTagged = ranks.select(col("vertex").cast("long"), col("rank").cast("long"))
       .join(cc, "vertex")
       .select(col("component"), col("vertex"), col("rank"))
@@ -122,12 +133,7 @@ object GreedyClustering {
                       maxComponentSize: Int = 5000000,
                       precomputedCC: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("weight").cast("double")).where(col("src") =!= col("dst"))
-    val cc = precomputedCC.getOrElse(ConnectedComponents.run(spark, e))
-    val eTagged = e.join(cc.withColumnRenamed("vertex", "src"), "src")
-      .select(col("component"), col("src"), col("dst"), col("weight"))
-      .as[(Long, Long, Long, Double)]
+    val (_, eTagged) = componentEdges(spark, edges, precomputedCC)
 
     eTagged.groupByKey(_._1).flatMapGroups { (comp, es) =>
       val dist = mutable.Map.empty[(Long, Long), Double]

@@ -9,11 +9,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * task (Spark logs "No Partition Defined for Window operation"); at web
   * scale that is the difference between a job finishing and a single
   * executor OOMing on 10^12 rows. The scalable shape is a range-partitioned
-  * total sort followed by `zipWithIndex` — the same pattern as
-  * [[graft.ingest.Dictionary.buildSorted]]: two distributed passes (one to
+  * total sort followed by `zipWithIndex`: two distributed passes (one to
   * count per-partition sizes, one to stamp offsets), no driver collect,
   * parallelism preserved at any row count. The one contained RDD hop is
   * forced: no DataFrame built-in exposes a dense cross-partition ordinal.
+  * [[graft.ingest.Dictionary.buildSorted]] numbers its ids with it too.
   */
 object Ranking {
 

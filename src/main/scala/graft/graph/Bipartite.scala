@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Per-component bipartiteness: 2-color every component by BFS parity from
   * its canonical root and count the odd-cycle witness edges. On a link
   * graph this separates genuinely two-sided structures (directories ↔
@@ -36,19 +38,15 @@ object Bipartite {
     val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val loops = e0.where(col("src") === col("dst"))
       .select(col("src").as("a"), col("dst").as("b")).distinct()
-    val canon = e0.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val bi = s.pin(canon.select(col("a").as("src"), col("b").as("dst"))
-      .union(canon.select(col("b").as("src"), col("a").as("dst"))))
+    val simple = EdgeOps.simple(edges)
+    val canon = simple.toDF("a", "b")
+    val bi = s.pin(EdgeOps.symmetrize(simple))
 
     // component = min vertex label (ConnectedComponents contract) = BFS
     // root; vertices incident ONLY to self-loops are invisible to CC (a
     // loop is no connectivity) — they are their own singleton components
-    val verts = e0.select(col("src").as("vertex"))
-      .union(e0.select(col("dst").as("vertex"))).distinct()
-    val cc0 = ConnectedComponents.run(spark,
-      canon.select(col("a").as("src"), col("b").as("dst")))
+    val verts = EdgeOps.vertices(edges)
+    val cc0 = ConnectedComponents.run(spark, simple)
     val cc = s.pin(verts.join(cc0, Seq("vertex"), "left")
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component")))
 

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Connected components: per-partition union-find contraction (Łącki et
   * al., "Connected Components at Scale via Local Contractions", 2018),
   * then, only when that did not finish the job, alternating large-star /
@@ -60,12 +62,9 @@ object ConnectedComponents {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 64,
           inputCanonical: Boolean = false): DataFrame =
     graft.core.Superstep.run("ConnectedComponents.run") { s =>
-      val base = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      val canonical = if (inputCanonical) base
-        else base
-          .where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-          .distinct()
+      val canonical =
+        if (inputCanonical) edges.select(col("src").cast("long"), col("dst").cast("long"))
+        else EdgeOps.simple(edges)
 
       // The star-forest check of a pass's rows: (split, repeated) — how many
       // vertices have more than one root, and how many have more than one
@@ -220,7 +219,8 @@ object ConnectedComponents {
   }
 
   /** small-star: orient edges (large→small); connect all smaller-or-equal
-    * neighbors and u itself to the minimum neighbor. */
+    * neighbors and u itself to the minimum neighbor. The orientation is this
+    * step's own, not [[EdgeOps.simple]]'s canonical edge set. */
   private def smallStar(e: DataFrame): DataFrame = {
     val or = e.select(greatest(col("src"), col("dst")).as("u"), least(col("src"), col("dst")).as("v"))
     val m = or.groupBy("u").agg(min(col("v")).as("m"))

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Whole-graph structural summary statistics (no clusty counterpart — the
   * standard first-look metrics on a web link graph, next to the existing
   * triangle/modularity rows).
@@ -30,13 +32,7 @@ object GraphStats {
     * @return single row (assortativity: Double, rounded 6 dp; NaN-free —
     *         regular graphs with zero degree variance yield null). */
   def assortativity(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val bi = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
+    val bi = EdgeOps.symmetrize(EdgeOps.simple(edges)).toDF("u", "v")
     val deg = bi.groupBy(col("u")).agg(count(lit(1)).as("d"))
 
     // integer-valued doubles from the start: ANSI-safe and order-free exact

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** HITS (Kleinberg hubs & authorities) — the other canonical link-analysis
   * operator, on the same superstep discipline as PageRank: the edge table is
   * partitioned once and persisted, per half-step one join + one partial-
@@ -36,8 +38,7 @@ object Hits {
       val eDst = s.persist(eSrc.repartition(col("dst")))
       val nEdges = eDst.count() // materializes eSrc too (eDst reads through it)
 
-      val vertices = s.pin(eSrc.select(col("src").as("vertex"))
-        .union(eSrc.select(col("dst").as("vertex"))).distinct())
+      val vertices = s.pin(EdgeOps.vertices(eSrc))
 
       var hubs = s.pin(vertices.select(col("vertex"), lit(1.0).as("hub")))
       var auths: DataFrame = vertices.select(col("vertex"), lit(1.0).as("authority"))

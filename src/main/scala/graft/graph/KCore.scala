@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** k-core operators: single-k core extraction (degree peeling) and the full
   * core-number decomposition (h-index fixpoint). The core number of a vertex
   * is the largest k such that the vertex survives in the k-core (the maximal
@@ -52,11 +54,7 @@ object KCore {
                    maxIter: Int = 100): DataFrame =
     graft.core.Superstep.run("KCore.coreVertices") { s =>
       require(k >= 1)
-      var bi = s.pin(edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-        .distinct()
-        .flatMap2Bi())
+      var bi = s.pin(EdgeOps.symmetrize(EdgeOps.simple(edges)))
 
       var nEdges = bi.count()
       if (nEdges > 0) s.loop(maxIter) { _ =>
@@ -75,12 +73,6 @@ object KCore {
       bi.select(col("src").as("vertex")).distinct()
     }
 
-  private implicit class BiOps(df: DataFrame) {
-    /** Symmetrize a canonical (src<dst) edge list. */
-    def flatMap2Bi(): DataFrame =
-      df.union(df.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
   /** Full core-number decomposition.
     *
     * @param edges (src, dst) undirected pairs (any orientation, dups ok;
@@ -89,17 +81,11 @@ object KCore {
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 64): DataFrame =
     graft.core.Superstep.run("KCore.run") { s =>
-      val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"))
-        .distinct()
       // Symmetrized neighbor list, partitioned ONCE on dst — the key of the
       // per-superstep estimates join — so the big table never re-exchanges;
       // each superstep moves the (vertex, core) table plus one ranked-message
       // exchange for the h-index window (the unavoidable message delivery).
-      val nbrs = s.pin(e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(col("dst")))
+      val nbrs = s.pin(EdgeOps.symmetrize(EdgeOps.simple(edges)).repartition(col("dst")))
 
       // init: estimate = degree
       var cores = s.pin(nbrs.groupBy(col("src").as("vertex"))

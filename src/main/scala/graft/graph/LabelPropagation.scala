@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Superstep
+import graft.ingest.EdgeOps
 
 /** Synchronous label propagation — the Spark-native counterpart of clusty's
   * Leiden community detection (SURVEY.md §2.6 C6; the reference itself
@@ -36,12 +37,10 @@ object LabelPropagation {
     */
   def run(spark: SparkSession, edges: DataFrame, iterations: Int = 10): DataFrame =
     Superstep.run("LabelPropagation.run", Superstep.NoCoalescing) { s =>
-      val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src") =!= col("dst"))
-      // one exchange: hash on src; the distinct is satisfied by it
-      val bi = s.pin(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(col("src"))
-        .distinct())
+      val e = EdgeOps.dropSelfLoops(edges.select(col("src").cast("long"), col("dst").cast("long")))
+      // one exchange: hash on src; the distinct is satisfied by it (a
+      // symmetrized EdgeOps.simple would exchange twice)
+      val bi = s.pin(EdgeOps.symmetrize(e).repartition(col("src")).distinct())
       // every vertex has a neighbour, so every vertex gets a message
       var labels = s.state(bi.select(col("src").as("vertex")).distinct()
         .select(col("vertex"), col("vertex").as("label")))

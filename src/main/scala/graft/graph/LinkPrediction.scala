@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Link prediction over the undirected graph: score NON-adjacent vertex
   * pairs by their common-neighbor structure — the classic "who should link
   * to whom" primitive on a web link graph (no clusty counterpart; a standard
@@ -44,13 +46,9 @@ object LinkPrediction {
   def resourceAllocation(spark: SparkSession, edges: DataFrame,
                          maxMiddleDegree: Int = 64,
                          minCommon: Int = 2): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val bi = e.select(col("a").as("z"), col("b").as("n"))
-      .union(e.select(col("b").as("z"), col("a").as("n")))
+    val simple = EdgeOps.simple(edges)
+    val e = simple.toDF("a", "b")
+    val bi = EdgeOps.symmetrize(simple).toDF("z", "n")
     val deg = bi.groupBy(col("z")).agg(count(lit(1)).as("d"))
 
     // neighbor lists of LOW-degree middles only (see scaladoc); the join is

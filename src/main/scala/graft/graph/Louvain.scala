@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Distributed Louvain community detection with a resolution parameter and
   * Leiden's connectedness guarantee — the engine's counterpart of clusty's
   * Leiden algorithm (reference src/leiden.h:19-24 exposes resolution/beta/
@@ -95,8 +97,7 @@ object Louvain {
   private[graft] def minLabelDepth(spark: SparkSession, edges: DataFrame,
                                    cap: Int = 64): Int =
     graft.core.Superstep.run("Louvain.minLabelDepth") { s =>
-      val bi = s.pin(edges.select(col("src").as("u"), col("dst").as("v"))
-        .union(edges.select(col("dst").as("u"), col("src").as("v"))))
+      val bi = s.pin(EdgeOps.symmetrize(edges.select(col("src"), col("dst"))).toDF("u", "v"))
       var lbl = s.pin(bi.select(col("u").as("vertex")).distinct()
         .select(col("vertex"), col("vertex").as("lbl")))
       var depth = 0
@@ -156,7 +157,8 @@ object Louvain {
           earlyStop: Boolean = true,
           measureRefineDepth: Boolean = false): Result =
     graft.core.Superstep.run("Louvain.run") { s =>
-    // canonical weighted undirected edges; parallel edges sum
+    // canonical weighted undirected edges; parallel edges sum their weights
+    // (EdgeOps.simple would keep one of them)
     val w0 = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     var g = s.state(edges.select(col("src").cast("long"), col("dst").cast("long"), w0.as("w"))
       .where(col("src") =!= col("dst"))
@@ -222,8 +224,8 @@ object Louvain {
   private def movePhase(spark: SparkSession, g: DataFrame, resolution: Double,
                         maxPasses: Int, earlyStop: Boolean = true): (DataFrame, Boolean) =
     graft.core.Superstep.run("Louvain.movePhase") { s =>
-    // bi-directed view for per-vertex neighbor scans (self-loops excluded
-    // from neighbor mass, included in degree)
+    // bi-directed view of the weighted level graph for per-vertex neighbor
+    // scans (self-loops excluded from neighbor mass, included in degree)
     val bi = s.pin(g.where(col("a") =!= col("b"))
       .select(col("a").as("u"), col("b").as("v"), col("w"))
       .union(g.where(col("a") =!= col("b"))

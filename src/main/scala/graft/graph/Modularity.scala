@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Newman modularity of a vertex partition over an undirected graph:
   *
   *   Q = Σ_c ( e_c / m  −  (d_c / 2m)² )
@@ -19,10 +21,7 @@ object Modularity {
     * @param labels (vertex, label)
     * @return one row (modularity: double, m: long, n_communities: long) */
   def of(spark: SparkSession, edges: DataFrame, labels: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val e = EdgeOps.simple(edges).toDF("a", "b")
     val la = labels.select(col("vertex").as("a"), col("label").as("ca"))
     val lb = labels.select(col("vertex").as("b"), col("label").as("cb"))
     val tagged = e.join(la, "a").join(lb, "b")

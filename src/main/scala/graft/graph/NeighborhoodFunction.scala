@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Superstep
+import graft.ingest.EdgeOps
 
 /** Approximate neighborhood function (ANF): per-vertex estimates of
   * |ball(v, h)| — how many vertices are within h hops — via k-minimum-values
@@ -73,9 +74,7 @@ object NeighborhoodFunction {
   private def sketchLoop(s: Superstep, edges: DataFrame, hops: Int, k: Int)
                         (onHop: (Int, DataFrame) => Unit): DataFrame = {
     require(hops >= 1 && k >= 2, s"need hops >= 1 and k >= 2, got hops=$hops k=$k")
-    val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
-    val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+    val bi = s.pin(EdgeOps.symmetrize(EdgeOps.simple(edges)))
 
     var state = s.state(
       bi.select(col("src").as("v")).distinct()

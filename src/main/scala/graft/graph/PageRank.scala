@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Superstep
+import graft.ingest.EdgeOps
 
 /** Pregel-style PageRank as pure Dataset joins/aggregations (the north-rule
   * flagship; no clusty counterpart — clusty's iterative loops are BFS/greedy,
@@ -184,9 +185,7 @@ object PageRank {
                     stateDir: Option[String] = None,
                     weightCol: Option[String] = None,
                     seeds: Option[DataFrame] = None): Result = {
-    val keep = weightCol.toSeq.map(col)
-    val bi = edges.select(Seq(col("src"), col("dst")) ++ keep: _*)
-      .union(edges.select(Seq(col("dst").as("src"), col("src").as("dst")) ++ keep: _*))
+    val bi = EdgeOps.symmetrize(edges.select(Seq(col("src"), col("dst")) ++ weightCol.map(col): _*))
     run(spark, bi, damping, tol, maxIter, stateDir, weightCol, seeds)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Deterministic random-walk corpus generation (DeepWalk/node2vec-style
   * training data for graph embeddings): one walk of `length` hops from
   * every vertex of the undirected graph, the next hop at step k chosen as
@@ -28,9 +30,7 @@ object RandomWalks {
             walksPerVertex: Int = 1): DataFrame =
     graft.core.Superstep.run("RandomWalks.walks") { s =>
       require(length >= 0 && walksPerVertex >= 1)
-      val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src") =!= col("dst"))
-      val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+      val bi = s.pin(EdgeOps.symmetrize(EdgeOps.simple(edges)))
       val adj = s.pin(bi
         .withColumn("rn",
           row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - lit(1))

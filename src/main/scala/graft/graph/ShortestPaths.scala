@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Unweighted single-source shortest paths (BFS hop levels) over the
   * undirected graph — "click distance" on a link graph.
   *
@@ -93,12 +95,9 @@ object ShortestPaths {
       Sssp(dist, steps.size - 1)
     }
 
-  private def biweighted(edges: DataFrame, weightCol: String): DataFrame = {
-    val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-        col(weightCol).cast("double").as("w"))
-      .where(col("src") =!= col("dst"))
-    e0.union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-  }
+  private def biweighted(edges: DataFrame, weightCol: String): DataFrame =
+    EdgeOps.symmetrize(EdgeOps.dropSelfLoops(edges.select(col("src").cast("long"),
+      col("dst").cast("long"), col(weightCol).cast("double").as("w"))))
 
   def hops(spark: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 64): DataFrame = {
@@ -113,9 +112,8 @@ object ShortestPaths {
   private def frontierBfs(spark: SparkSession, op: String, edges: DataFrame, maxIter: Int,
                           keys: Seq[String], seeds: DataFrame): DataFrame =
     graft.core.Superstep.run(op) { s =>
-      val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-        .where(col("src") =!= col("dst"))
-      val bi = s.pin(e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))))
+      val bi = s.pin(EdgeOps.symmetrize(
+        EdgeOps.dropSelfLoops(edges.select(col("src").cast("long"), col("dst").cast("long")))))
 
       var settled = s.state(seeds)
       var frontier = settled

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Strongly connected components of a DIRECTED edge table — the web-graph
   * bowtie decomposition (Broder et al. 2000): the giant SCC vs the IN/OUT
   * tendrils is the first structural question asked of any crawl graph, and
@@ -47,11 +49,8 @@ object StronglyConnectedComponents {
 
       // vertex set from the RAW edges: a vertex incident only to self-loops
       // is still its own (singleton) SCC and must appear in the output
-      val eAll = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       var e = s.state(e0)
-      val (verts0, n0) = s.stateWith(
-        eAll.select(col("src").as("vertex")).union(eAll.select(col("dst").as("vertex"))).distinct(),
-        count(lit(1)))
+      val (verts0, n0) = s.stateWith(EdgeOps.vertices(edges), count(lit(1)))
       var verts = verts0
       var nLeft = n0.getLong(0)
       var result = spark.range(0).select(col("id").as("vertex"), col("id").as("scc"))
@@ -93,6 +92,8 @@ object StronglyConnectedComponents {
       trim()
       if (nLeft > 0L) s.loop(maxOuter) { _ =>
         val fwd = minLabelFixpoint(verts, e, maxInner) // (vertex, lbl=F)
+        // the transpose of the directed graph, not EdgeOps.symmetrize's
+        // both-directions view
         val bwd = minLabelFixpoint(verts,
           e.select(col("dst").as("src"), col("src").as("dst")), maxInner) // (vertex, lbl=B)
         val resolved = fwd.join(bwd.withColumnRenamed("lbl", "b"), "vertex")

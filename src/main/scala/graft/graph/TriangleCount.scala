@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Triangle counting by degree-oriented wedge join ("compact-forward";
   * no clusty counterpart — new operator per the north rule).
   *
@@ -20,12 +22,8 @@ import org.apache.spark.sql.functions._
   */
 object TriangleCount {
 
-  /** Canonical unique undirected edges (a < b). */
-  def canonicalEdges(edges: DataFrame): DataFrame =
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+  /** [[EdgeOps.simple]] as (a, b), a < b. */
+  def canonicalEdges(edges: DataFrame): DataFrame = EdgeOps.simple(edges).toDF("a", "b")
 
   /** Edges oriented by (degree, id): (u, v, dv) with (du,u) < (dv,v). */
   private def oriented(e: DataFrame): DataFrame = {

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Neighborhood-overlap similarity of adjacent vertex pairs — the classic
   * link-prediction / edge-strength signal (no clusty counterpart; a standard
   * web-graph operator):
@@ -24,18 +26,15 @@ object VertexSimilarity {
   /** @param edges (src, dst) any orientation.
     * @return (a, b, common, jaccard) for every canonical edge a < b. */
   def edgeJaccard(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val bi = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
+    val simple = EdgeOps.simple(edges)
+    val e = simple.toDF("a", "b")
+    val bi = EdgeOps.symmetrize(simple).toDF("u", "v")
 
     val deg = bi.groupBy(col("u")).agg(count(lit(1)).as("d"))
 
     // each (a<b<c) triangle contributes one common neighbor to each of its
     // three edges
-    val tri = TriangleCount.triangles(spark, e.select(col("a").as("src"), col("b").as("dst")))
+    val tri = TriangleCount.triangles(spark, simple)
     val common = tri.select(explode(array(
         struct(col("a").as("a"), col("b").as("b")),
         struct(col("a").as("a"), col("c").as("b")),

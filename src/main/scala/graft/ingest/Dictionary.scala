@@ -1,8 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.core.Ranking
 
 /** String→dense-id dictionary encoding (clusty J1/J2: sequential
   * first-appearance local ids, reference src/graph_named.h:212-247 /
@@ -13,9 +14,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * zipWithIndex) or from an explicit rank column, both order-independent
   * under any parallelism. Two strategies:
   *
-  *  - [[buildSorted]]  — ids = rank in lexicographic order. One total sort
-  *    (range exchange) + the one contained RDD hop SURVEY.md §7.2 allows
-  *    (`zipWithIndex`, two passes, no collect). Dense and deterministic.
+  *  - [[buildSorted]]  — ids = rank in lexicographic order, numbered by
+  *    [[Ranking.withGlobalRank]] (one range-partitioned sort + the contained
+  *    `zipWithIndex` hop SURVEY.md §7.2 allows). Dense and deterministic.
   *  - [[buildFromRank]] — ids = caller-provided priority rank (clusty's
   *    objects-file order, or first-appearance order of the edge table).
   *    No extra shuffle if ranks are precomputed.
@@ -23,17 +24,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object Dictionary {
 
   /** @return (object: String, vid: Long) with vid dense 0..n-1 by sorted order. */
-  def buildSorted(df: DataFrame, column: String): DataFrame = {
-    val spark = df.sparkSession
-    val distinct = df.select(col(column).as("object")).where(col("object").isNotNull).distinct()
-    val indexed = distinct.orderBy(col("object")).rdd
-      .zipWithIndex()
-      .map { case (r: Row, i: Long) => Row(r.get(0), i) }
-    val schema = StructType(Seq(
-      StructField("object", distinct.schema.head.dataType, nullable = false),
-      StructField("vid", LongType, nullable = false)))
-    spark.createDataFrame(indexed, schema)
-  }
+  def buildSorted(df: DataFrame, column: String): DataFrame =
+    Ranking.withGlobalRank(
+      df.select(col(column).as("object")).where(col("object").isNotNull).distinct(),
+      "vid", col("object").asc)
 
   /** Dictionary from an explicit priority table (object, rank) — vid = rank. */
   def buildFromRank(universe: DataFrame): DataFrame =

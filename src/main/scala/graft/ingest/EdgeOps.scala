@@ -22,6 +22,21 @@ import graft.core.Tables
   * At 100 TB these all stay single-shuffle: the filters/transform are
   * scan-local, dedup and degree are partial-aggregated map-side before the
   * exchange on (src,dst) / src.
+  *
+  * This is the one definition of the undirected graph, as clusty's loader
+  * builds it once for every algorithm: [[simple]] is the edge set (long
+  * ids, src < dst, no self-loops, no parallel edges), [[symmetrize]] its
+  * both-directions view and [[vertices]] its vertex set. Operators take
+  * their graph from these three. Four hand-written orientations elsewhere
+  * compute something else and stay where they are:
+  *   - ConnectedComponents' small-star step orients each edge large→small
+  *     to link every vertex to its smallest neighbour;
+  *   - Louvain's level graph sums the weights of parallel edges instead of
+  *     deduplicating them, and its move phase flips that weighted graph;
+  *   - StronglyConnectedComponents' backward pass runs on the transpose of
+  *     a directed graph;
+  *   - the q_dedup_min query flips its edges with doubled weights, the
+  *     input shape its DuckDB twin expects.
   */
 object EdgeOps {
 
@@ -72,8 +87,8 @@ object EdgeOps {
     }.reduceOption(_ && _).getOrElse(lit(true))
 
   /** P3 — drop self loops (diagonal is implicit, distance 0). */
-  def dropSelfLoops(edges: DataFrame, src: String = "src", dst: String = "dst"): DataFrame =
-    edges.where(col(src) =!= col(dst))
+  def dropSelfLoops(edges: DataFrame): DataFrame =
+    edges.where(col("src") =!= col("dst"))
 
   /** A1 — dedup parallel edges keeping the minimum weight, on canonical
     * orientation (src<dst). Partial-aggregates map-side; one shuffle on the
@@ -90,8 +105,24 @@ object EdgeOps {
       greatest(col("src"), col("dst")).as("dst"),
       col("weight"))
 
+  /** The simple undirected edge set of `edges` (any orientation, any
+    * extra columns dropped): `(src, dst)` as long ids with src < dst, no
+    * self-loops (P3) and no parallel edges (A1 without weights). One
+    * exchange, the `distinct`'s. */
+  def simple(edges: DataFrame): DataFrame =
+    dropSelfLoops(edges.select(col("src").cast("long"), col("dst").cast("long")))
+      .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
+      .distinct()
+
+  /** Each endpoint of `edges` once, as `vertex` (long). One exchange. */
+  def vertices(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("vertex"))
+      .union(edges.select(col("dst").cast("long").as("vertex")))
+      .distinct()
+
   /** J4 — both-directions ("symmetrized") edge view, the declarative
-    * equivalent of clusty inserting each edge into both endpoint rows. */
+    * equivalent of clusty inserting each edge into both endpoint rows.
+    * Other columns ride along unchanged; no exchange. */
   def symmetrize(edges: DataFrame): DataFrame = {
     val cols = edges.columns
     val flipped = edges.select(

@@ -5,29 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** S6 — assignments writer: header'd TSV/CSV of (object, cluster), the
   * reference's output format (src/io.h:88-123; separator selection
-  * src/console.cpp:276; O4).
-  *
-  * `singleFile = true` reproduces the reference's one-file output for
-  * byte-compare tests; at scale leave it false and let each partition write
-  * (the rows are already globally ordered by the caller's orderBy — Spark
-  * writes part files in partition order, so the concatenation preserves O1).
+  * src/console.cpp:276; O4). One part file, like the reference's one
+  * output file; its rows keep the caller's global order (O1).
   */
 object AssignmentsSink {
 
-  def write(assign: DataFrame, path: String, sep: String = "\t",
-            singleFile: Boolean = false): Unit = {
-    val df = if (singleFile) assign.coalesce(1) else assign
-    df.write
+  def write(assign: DataFrame, path: String, sep: String = "\t"): Unit =
+    assign.coalesce(1).write
       .option("header", true)
       .option("sep", sep)
       .mode("overwrite")
       .csv(path)
-  }
 
   /** The reference's `--out-representatives` variant: column `cluster` is
     * replaced by each cluster's representative object before writing. */
-  def writeWithRepresentatives(shaped: DataFrame, path: String, sep: String = "\t",
-                               singleFile: Boolean = false): Unit =
-    write(shaped.select(col("object"), col("cluster_rep").as("cluster")),
-      path, sep, singleFile)
+  def writeWithRepresentatives(shaped: DataFrame, path: String, sep: String = "\t"): Unit =
+    write(shaped.select(col("object"), col("cluster_rep").as("cluster")), path, sep)
 }

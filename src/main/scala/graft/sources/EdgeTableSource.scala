@@ -37,8 +37,7 @@ object EdgeTableSource {
       distanceCol: Option[String] = None,
       numericIds: Boolean = false,
       distanceKind: EdgeOps.DistanceKind = EdgeOps.RawDistance,
-      filters: Seq[EdgeOps.RangeFilter] = Nil,
-      dropSelfLoops: Boolean = true)
+      filters: Seq[EdgeOps.RangeFilter] = Nil)
 
   def read(spark: SparkSession, path: String, opts: Options = Options()): DataFrame =
     kept(scan(spark, path, opts, headerLine(spark, path)), opts)
@@ -98,8 +97,7 @@ object EdgeTableSource {
         opts.filters.map(f => col(resolve(f.column)).try_cast("double").as(f.column))): _*)
 
     // P2 and P3; a null predicate drops the row
-    val survives = EdgeOps.rangePredicate(opts.filters) &&
-      (if (opts.dropSelfLoops) col("src") =!= col("dst") else lit(true))
+    val survives = EdgeOps.rangePredicate(opts.filters) && col("src") =!= col("dst")
     projected.select(col("src"), col("dst"), col("weight"),
       coalesce(survives, lit(false)).as("kept"), col("position"))
   }
@@ -167,8 +165,8 @@ object EdgeTableSource {
     * as in [[headerLine]]: the split that starts at byte offset 0 skips the
     * lines up to and including it, so neither a leading blank line nor a
     * directory of headered part files ingests a phantom header object.
-    * Empty lines are dropped. */
-  def readObjects(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
+    * Empty lines are dropped; a line's object name ends at its first tab. */
+  def readObjects(spark: SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapred.TextInputFormat
     import org.apache.spark.sql.Row
@@ -189,7 +187,7 @@ object EdgeTableSource {
     })
     val inOrder = if (files.size == 1) lines else lines.sortBy(_._1)
     val rows = inOrder.zipWithIndex().map { case ((_, line), i) =>
-      val cut = line.indexOf(sep)
+      val cut = line.indexOf('\t')
       Row(if (cut >= 0) line.substring(0, cut) else line, i)
     }
     spark.createDataFrame(rows, StructType(Seq(

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.EdgeOps
+
 /** Guard for the two hand-calibrated oracle replay depths in
   * [[graft.SparkEntry]].
   *
@@ -72,9 +74,7 @@ object OracleCalibration {
     * (src, dst, weight) — the same table the catalog queries run on — and
     * throw with a recalibration message if any margin is half-consumed. */
   def check(spark: SparkSession, edges: DataFrame): Unit = {
-    val bi = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
+    val bi = EdgeOps.symmetrize(edges.select(col("src"), col("dst"))).distinct().toDF("u", "v")
     val ordRank = bi.select(col("u").as("v")).distinct()
       .select(col("v"), col("v").as("pos"))
     // global rank without a single-partition window (core.Ranking is the

@@ -214,7 +214,7 @@ class EdgeTableSourceSpec extends SparkTestBase {
   test("a quoted CSV id holding the separator is one object, written quoted") {
     val p = writeTemp("quoted.csv", "query,target,d\n\"x,y\",z,0.1\na,b,0.2\n")
     val out = Files.createTempDirectory("graft-quoted").toString + "/assign"
-    AssignmentsSink.write(execute(p), out, sep = ",", singleFile = true)
+    AssignmentsSink.write(execute(p), out, sep = ",")
     val part = Files.list(Paths.get(out)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toList.head
     assert(new String(Files.readAllBytes(part), "UTF-8") ==
@@ -246,7 +246,7 @@ class EdgeTableSourceSpec extends SparkTestBase {
       .select(col("object"), col("cluster"))
 
     val outDir = Files.createTempDirectory("graft-out").toString + "/assign"
-    AssignmentsSink.write(full, outDir, sep = "\t", singleFile = true)
+    AssignmentsSink.write(full, outDir, sep = "\t")
     val part = Files.list(Paths.get(outDir)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toList.head
     val bytes = new String(Files.readAllBytes(part), "UTF-8")

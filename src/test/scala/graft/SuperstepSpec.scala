@@ -195,6 +195,16 @@ class SuperstepSpec extends SparkTestBase {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  /** One definition of the undirected graph: operators take their simple
+    * edge set from `EdgeOps.simple`. The only other canonical orientations
+    * compute something else: connected components' small-star step and
+    * Louvain's weighted level graph, which sums parallel edges. */
+  test("only EdgeOps, the CC star loop and Louvain's level graph orient edges by hand") {
+    val found = offenders(Set("EdgeOps.scala", "ConnectedComponents.scala", "Louvain.scala"),
+      Seq(Regex.quote("""least(col("src"), col("dst"))""").r))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   /** Only the CLI's small-input gate turns codegen off, so catalog queries
     * and benches always run compiled. */
   test("only the CLI sets spark.sql.codegen settings") {

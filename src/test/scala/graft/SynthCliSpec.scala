@@ -41,8 +41,8 @@ class SynthCliSpec extends SparkTestBase {
     val cfg = Main.parse(base ++ objArgs ++ repArgs ++ numArgs ++
       Seq(s"$synth/synth.ani", out))
     val df = Main.execute(spark, cfg)
-    if (reps) AssignmentsSink.writeWithRepresentatives(df, out, "\t", singleFile = true)
-    else AssignmentsSink.write(df, out, "\t", singleFile = true)
+    if (reps) AssignmentsSink.writeWithRepresentatives(df, out, "\t")
+    else AssignmentsSink.write(df, out, "\t")
     val part = Files.list(Paths.get(out)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq
     assert(part.size == 1, s"expected one part file in $out")

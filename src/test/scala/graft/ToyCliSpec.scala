@@ -50,7 +50,7 @@ class ToyCliSpec extends SparkTestBase {
       "--similarity", "--min", "tani", "0.95",
       s"$toy/toy.ani.tsv", out))
     val df = Main.execute(spark, cfg)
-    AssignmentsSink.write(df, out, "\t", singleFile = true)
+    AssignmentsSink.write(df, out, "\t")
     val part = Files.list(Paths.get(out)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq
     assert(part.size == 1)
